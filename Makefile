@@ -7,7 +7,7 @@
 PY ?= python3
 SF ?= /root/testdata/sf0.01
 
-.PHONY: test test-fast verify verify-only plan-gates bench all
+.PHONY: test test-fast verify verify-only plan-gates bench perfbench all
 
 test:            ## full pytest suite (sf0.001 oracle parity included)
 	$(PY) -m pytest tests/ -q
@@ -26,5 +26,9 @@ plan-gates:      ## plan-shape assertions over every registered query
 
 bench:           ## one-line JSON headline bench (sf0.1 by default)
 	$(PY) bench.py
+
+perfbench:       ## benchmark self-tests, then one traced run (prints pipeline.jobs_per_run)
+	$(PY) -m pytest perfbench/tests -q
+	$(PY) perfbench/run.py --workload pipeline_small --seed 1 --seconds 5 --trace 1
 
 all: test verify plan-gates

@@ -5,14 +5,17 @@ ingestion / transformation / storage failures abort the run; a
 validation failure only warns and the pipeline continues.
 
 Spark-first execution shape (SURVEY.md §3): stages compose *lazy*
-DataFrame transforms; the run triggers exactly three actions —
-(1) the single-pass quality agg, (2) the warehouse write, (3) the
-summary-report aggs — with ``persist()`` across the multi-action
-boundary instead of the reference's four full materialized copies.
+DataFrame transforms with one ``persist()`` alive at a time (released
+before the run returns) instead of the reference's four full copies.
+A run triggers ten actions, 21 Spark jobs per run (a test pins this):
+ingest ``count()``; the single-pass quality agg; transform ``count()``;
+the ``orders`` write; the CSV and parquet exports; the summary report's
+aggregate and categorical collect; the two run-tracking writes (X2).
 """
 
 from __future__ import annotations
 
+import logging
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -27,6 +30,8 @@ from ..quality import quality_scores, validate_schema
 from ..sources.files import collect_all
 from ..storage import Warehouse
 from .config import Config
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -51,6 +56,8 @@ class PipelineResult:
     end_time: str = ""
     total_time: float = 0.0
     error_message: str | None = None
+    # Set when the run-tracking writes (X2) failed; does not affect success.
+    bookkeeping_error: str | None = None
 
 
 class PipelineManager:
@@ -83,15 +90,8 @@ class PipelineManager:
             result.stages_completed.append("ingestion")
             result.records_processed = n
         except Exception as exc:  # noqa: BLE001
-            result.stage_results["ingestion"] = StageResult(
-                False, 0, time.monotonic() - t, str(exc)
-            )
-            result.stages_failed.append("ingestion")
-            result.error_message = f"ingestion failed: {exc}"
-            result.end_time = datetime.now(timezone.utc).isoformat()
-            result.total_time = time.monotonic() - t0
-            self._persist_run(result)
-            return result
+            self._fail(result, "ingestion", t, exc, abort=True)
+            return self._finish(result, t0, current)
 
         # -- validate (warn-only on failure, src/pipeline.py:126-132)
         if self.enable_validation:
@@ -112,10 +112,7 @@ class PipelineManager:
                 )
                 result.stages_completed.append("validation")
             except Exception as exc:  # noqa: BLE001
-                result.stage_results["validation"] = StageResult(
-                    False, 0, time.monotonic() - t, str(exc)
-                )
-                result.stages_failed.append("validation")  # continue anyway
+                self._fail(result, "validation", t, exc)  # continue anyway
 
         # -- transform (abort on failure, src/pipeline.py:142)
         if self.enable_transformation:
@@ -137,15 +134,8 @@ class PipelineManager:
                 result.stages_completed.append("transformation")
                 result.records_processed = n
             except Exception as exc:  # noqa: BLE001
-                result.stage_results["transformation"] = StageResult(
-                    False, 0, time.monotonic() - t, str(exc)
-                )
-                result.stages_failed.append("transformation")
-                result.error_message = f"transformation failed: {exc}"
-                result.end_time = datetime.now(timezone.utc).isoformat()
-                result.total_time = time.monotonic() - t0
-                self._persist_run(result)
-                return result
+                self._fail(result, "transformation", t, exc, abort=True)
+                return self._finish(result, t0, current)
 
         # -- store (abort on failure, src/pipeline.py:157; success if any
         # of db/export/report succeeded, src/storage.py:653)
@@ -153,23 +143,18 @@ class PipelineManager:
             t = time.monotonic()
             ops_ok = 0
             errors: list[str] = []
-            try:
-                self.warehouse.save_orders(current)
-                ops_ok += 1
-            except Exception as exc:  # noqa: BLE001
-                errors.append(f"save: {exc}")
-            try:
-                self.warehouse.export(current, "orders", formats=("csv", "parquet"))
-                ops_ok += 1
-            except Exception as exc:  # noqa: BLE001
-                errors.append(f"export: {exc}")
-            try:
-                self.warehouse.summary_report(
-                    current, path=f"{self.warehouse.root}/reports/summary_{run_id}.json"
-                )
-                ops_ok += 1
-            except Exception as exc:  # noqa: BLE001
-                errors.append(f"report: {exc}")
+            wh = self.warehouse
+            report_path = f"{wh.root}/reports/summary_{run_id}.json"
+            for label, op in (
+                ("save", lambda: wh.save_orders(current)),
+                ("export", lambda: wh.export(current, "orders", formats=("csv", "parquet"))),
+                ("report", lambda: wh.summary_report(current, path=report_path)),
+            ):
+                try:
+                    op()
+                    ops_ok += 1
+                except Exception as exc:  # noqa: BLE001
+                    errors.append(f"{label}: {exc}")
 
             stage_ok = ops_ok >= 1
             result.stage_results["storage"] = StageResult(
@@ -183,8 +168,22 @@ class PipelineManager:
             if not stage_ok:
                 result.error_message = "storage failed: " + "; ".join(errors)
 
-        current.unpersist()
         result.success = not result.stages_failed or result.stages_failed == ["validation"]
+        return self._finish(result, t0, current)
+
+    @staticmethod
+    def _fail(result: PipelineResult, stage: str, t: float, exc: Exception, abort=False) -> None:
+        result.stage_results[stage] = StageResult(False, 0, time.monotonic() - t, str(exc))
+        result.stages_failed.append(stage)
+        if abort:
+            result.error_message = f"{stage} failed: {exc}"
+
+    def _finish(
+        self, result: PipelineResult, t0: float, current: DataFrame | None
+    ) -> PipelineResult:
+        """Release the run's only persisted frame, stamp times, track the run."""
+        if current is not None:
+            current.unpersist()
         result.end_time = datetime.now(timezone.utc).isoformat()
         result.total_time = time.monotonic() - t0
         self._persist_run(result)
@@ -206,8 +205,9 @@ class PipelineManager:
             )
             if result.quality:
                 self.warehouse.save_quality_metrics(result.run_id, result.quality)
-        except Exception:  # noqa: BLE001 — run bookkeeping must not fail the run
-            pass
+        except Exception as exc:  # noqa: BLE001 — run bookkeeping must not fail the run
+            log.exception("run %s: run-tracking write failed", result.run_id)
+            result.bookkeeping_error = f"{type(exc).__name__}: {exc}"
 
     # ------------------------------------------------------------ status (X3)
     def status(self) -> dict:

@@ -6,12 +6,14 @@ Batch readers over a drop directory with:
 - lineage columns (``source``, ``source_file`` via input_file_name,
   ``ingested_at``),
 - corrupt-record quarantine via PERMISSIVE mode + ``_corrupt_record``
-  (the reference moves whole files to an errors/ dir; per-row
-  quarantine is strictly more precise),
+  on CSV (the reference moves whole files to an errors/ dir; per-row
+  quarantine is strictly more precise); ``drop_corrupt`` is the lazy
+  good-rows filter shared with the streaming ingest,
 - multi-shape JSON handling (top-level list, ``{"orders": [...]}``
   wrapper, single object — src/ingestion.py:296-305),
 - multi-source union + keep-first dedup (S6, :356-444) via
-  unionByName(allowMissingColumns=True) + order-preserving dedup.
+  unionByName(allowMissingColumns=True) + order-preserving dedup;
+  ``collect_all`` caches nothing, so its caller owns the only persist.
 
 The streaming twin (readStream + cleanSource='archive') lives in
 ``streaming/ingest.py``; this module is the one-shot batch path.
@@ -79,11 +81,16 @@ def read_json_dir(spark: SparkSession, input_dir: str) -> DataFrame:
         .when(F.get_json_object("value", "$.orders").isNotNull(), as_wrapper)
         .otherwise(as_single)
     )
-    df = (
-        raw.select(F.explode(normalized).alias("o"), F.lit(None).cast("string").alias("_corrupt_record"))
-        .select("o.*", "_corrupt_record")
-    )
+    df = raw.select(F.explode(normalized).alias("o")).select("o.*")
     return _with_lineage(df, "file_json")
+
+
+def drop_corrupt(df: DataFrame) -> DataFrame:
+    """The rows PERMISSIVE mode parsed cleanly, without the corrupt-record
+    column (a no-op on frames that have none)."""
+    if "_corrupt_record" not in df.columns:
+        return df
+    return df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
 
 
 def quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -92,11 +99,10 @@ def quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         return df, df.limit(0)
     # cache: Spark disallows queries that project only the internal
     # corrupt-record column from a raw file scan (QUERY_ONLY_CORRUPT_
-    # RECORD_COLUMN); caching materializes the parse once.
+    # RECORD_COLUMN), e.g. ``bad.count()``; caching materializes the
+    # parse once. The caller owns the cache (``df.unpersist()``).
     df = df.cache()
-    good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    bad = df.filter(F.col("_corrupt_record").isNotNull())
-    return good, bad
+    return drop_corrupt(df), df.filter(F.col("_corrupt_record").isNotNull())
 
 
 def archive_processed(input_dir: str, processed_dir: str, suffixes=(".csv", ".json")) -> int:
@@ -129,10 +135,8 @@ def collect_all(
 
     frames: list[tuple[int, DataFrame]] = [(0, fetch_orders(spark, api_limit, offline_api))]
     if input_dir and os.path.isdir(input_dir):
-        csv_good, _ = quarantine(read_csv_dir(spark, input_dir))
-        json_good, _ = quarantine(read_json_dir(spark, input_dir))
-        frames.append((1, csv_good))
-        frames.append((2, json_good))
+        frames.append((1, drop_corrupt(read_csv_dir(spark, input_dir))))
+        frames.append((2, read_json_dir(spark, input_dir)))
 
     union = None
     for priority, df in frames:

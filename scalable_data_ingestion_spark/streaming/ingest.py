@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..operators.cleaning import clean
 from ..operators.enrichment import enrich
 from ..operators.standardize import standardize
-from ..sources.files import ORDER_FILE_SCHEMA
+from ..sources.files import ORDER_FILE_SCHEMA, drop_corrupt
 from ..storage import Warehouse
 
 
@@ -60,14 +60,10 @@ def order_file_stream(
     )
 
 
-def process_batch(df: DataFrame, warehouse: Warehouse) -> int:
+def process_batch(df: DataFrame, warehouse: Warehouse) -> None:
     """validate -> transform -> store for one micro-batch (the reference's
-    whole pipeline per run becomes per-batch)."""
-    good = df
-    if "_corrupt_record" in df.columns:
-        good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    out = standardize(enrich(clean(good)))
-    return warehouse.save_orders(out)
+    whole pipeline per run becomes per-batch): one write action."""
+    warehouse.save_orders(standardize(enrich(clean(drop_corrupt(df)))))
 
 
 def start_ingest(

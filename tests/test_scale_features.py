@@ -12,16 +12,19 @@ from scalable_data_ingestion_spark.storage import Warehouse
 
 
 def test_partitioned_warehouse_prunes(spark, tmp_path):
-    """orders partitioned by month -> a month filter scans one partition."""
-    wh = Warehouse(spark, str(tmp_path / "wh"), partition_cols=("order_month",))
+    """orders partitioned by the month derived from order_date -> a
+    month filter on the raw table scans one partition."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     df = spark.range(1000).select(
         F.format_string("ORD-%04d", F.col("id")).alias("order_id"),
-        (F.col("id") % 12 + 1).cast("int").alias("order_month"),
+        F.make_date(F.lit(2024), (F.col("id") % 12 + 1).cast("int"), F.lit(1)).alias(
+            "order_date"
+        ),
         (F.col("id").cast("double") * 1.5).alias("total_amount"),
     )
     wh.save_orders(df)
 
-    filtered = wh.table("orders").filter(F.col("order_month") == 3)
+    filtered = wh.table("orders").filter(F.col("order_month") == "2024-03")
     assert filtered.count() == 1000 // 12 + (1 if 3 <= 1000 % 12 else 0)
 
     plan = filtered._jdf.queryExecution().executedPlan().toString()

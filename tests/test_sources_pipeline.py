@@ -4,7 +4,9 @@ reference-suite analogs 1, 5, 6, 7, 8, 10 (SURVEY.md §5)."""
 from __future__ import annotations
 
 import json
+import logging
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -158,20 +160,28 @@ def test_summary_report(spark, tmp_path):
     assert rep["numeric"]["price"]["median"] == 20.0
     assert rep["numeric"]["price"]["mean"] == 20.0
     assert rep["categorical"]["customer_segment"]["top_values"]["A"] == 2
-    assert rep["revenue"]["sum"] == 600.0
+    assert rep["revenue"] == {"sum": 600.0, "mean": 200.0, "max": 300.0, "min": 100.0}
     assert os.path.exists(path)
+
+    # no numeric columns: the one aggregate pass still counts the records
+    strings_only = spark.createDataFrame([("A",), ("B",)], ["customer_segment"])
+    rep = wh.summary_report(strings_only)
+    assert rep["total_records"] == 2
+    assert rep["numeric"] == {} and "revenue" not in rep
+    assert rep["categorical"]["customer_segment"]["top_values"] == {"A": 1, "B": 1}
+
+
+def test_export_rejects_unknown_format(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh4"))
+    df = spark.createDataFrame([("A-0001", 10.0)], "order_id: string, total: double")
+    with pytest.raises(ValueError, match="xlsx"):
+        wh.export(df, "orders", formats=("parquet", "xlsx"))
+    assert not os.path.exists(str(tmp_path / "wh4" / "exports"))
 
 
 # ---- tests 6/7/10 analog: orchestration, error policy, end-to-end ------
 def test_pipeline_end_to_end(spark, tmp_path, drop_dir):
-    config = Config(
-        overrides={
-            "warehouse": {"root": str(tmp_path / "wh")},
-            "files": {"input_dir": drop_dir},
-            "api": {"offline": True},
-        }
-    )
-    mgr = PipelineManager(spark, config)
+    mgr = PipelineManager(spark, _pipeline_config(tmp_path, drop_dir))
     result = mgr.run_pipeline(api_limit=20)
     assert result.success, result.error_message
     assert result.stages_completed == ["ingestion", "validation", "transformation", "storage"]
@@ -197,6 +207,53 @@ def test_pipeline_end_to_end(spark, tmp_path, drop_dir):
     # status (X3)
     status = mgr.status()
     assert status["warehouse"]["total_orders"] == result.records_processed
+
+
+def _pipeline_config(tmp_path, drop_dir):
+    return Config(
+        overrides={
+            "warehouse": {"root": str(tmp_path / "wh")},
+            "files": {"input_dir": drop_dir},
+            "api": {"offline": True},
+        }
+    )
+
+
+def test_pipeline_cost_matches_docstring(spark, tmp_path, drop_dir):
+    """The manager docstring's jobs-per-run figure is what a run costs,
+    and a run leaves no persisted RDD behind."""
+    import scalable_data_ingestion_spark.pipeline.manager as mgr_mod
+
+    stated = int(re.search(r"(\d+) Spark jobs per run", mgr_mod.__doc__).group(1))
+    sc = spark.sparkContext
+    mgr = PipelineManager(spark, _pipeline_config(tmp_path, drop_dir))
+    jobs = []
+    try:
+        for i in range(2):
+            group = f"pipeline-cost-{i}-{tmp_path.name}"
+            persisted = sc._jsc.getPersistentRDDs().size()
+            sc.setJobGroup(group, "run_pipeline cost pin")
+            assert mgr.run_pipeline(api_limit=20).success
+            sc._jsc.clearJobGroup()
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            assert sc._jsc.getPersistentRDDs().size() == persisted
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs[1] == stated, jobs
+
+
+def test_pipeline_bookkeeping_failure_is_recorded(spark, tmp_path, drop_dir, monkeypatch, caplog):
+    def broken(self, run):
+        raise OSError("run table unwritable")
+
+    monkeypatch.setattr(Warehouse, "save_pipeline_run", broken)
+    mgr = PipelineManager(spark, _pipeline_config(tmp_path, drop_dir))
+    with caplog.at_level(logging.ERROR):
+        result = mgr.run_pipeline(api_limit=5)
+    assert result.success, result.error_message
+    assert result.error_message is None
+    assert "run table unwritable" in result.bookkeeping_error
+    assert any("run-tracking write failed" in r.getMessage() for r in caplog.records)
 
 
 def test_pipeline_stage_toggles(spark, tmp_path):
