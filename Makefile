@@ -19,7 +19,7 @@ verify:          ## full registry vs DuckDB at sf0.01 (driver-shaped)
 	$(PY) tools/parity_sweep.py --sf $(SF)
 
 verify-only:     ## targeted: make verify-only ONLY=q1,q2
-	$(PY) tools/parity_sweep.py --sf $(SF) --only $(ONLY)
+	$(PY) tools/parity_sweep.py --sf $(SF) --strict --only $(ONLY)
 
 plan-gates:      ## plan-shape assertions over every registered query
 	$(PY) -m pytest tests/test_plan_quality.py -q

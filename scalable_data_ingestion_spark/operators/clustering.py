@@ -144,9 +144,9 @@ def _materialize_centroids(cent: DataFrame) -> DataFrame:
 
 
 def _fmt_double(x: float) -> str:
-    """A SQL literal that parses to exactly this double (17 significant
-    digits round-trip; the exponent form parses as DOUBLE, not
-    DECIMAL)."""
+    """A SQL literal that parses to exactly this double in Spark and
+    DuckDB (17 significant digits round-trip; the exponent form parses
+    as DOUBLE, not DECIMAL, in both engines)."""
     return f"({float(x):.17e})"
 
 

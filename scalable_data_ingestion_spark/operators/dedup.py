@@ -513,11 +513,10 @@ def dd_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-construction time. A Catalyst higher-order-function dot
     product per pair interprets 64 lambda steps per pair (~20x slower);
     this is the one hot loop where the Pandas-UDF escape hatch
-    genuinely wins. The accumulation runs dimension-by-dimension (left
-    fold), so every double is bit-identical to the previous
-    `aggregate(zip_with(...))` formulation and to the DuckDB oracle's
-    list_dot_product. Rounding and the final threshold stay Spark-side
-    expressions.
+    genuinely wins. The scores come from `similarity.cosine_block`, so
+    every double is bit-identical to the Catalyst
+    `aggregate(zip_with(...))` formulation. Rounding and the final
+    threshold stay Spark-side expressions.
 
     This is the documented exact baseline: the index side is O(n) per
     worker, so it is bounded to corpora that fit one machine. At
@@ -526,6 +525,8 @@ def dd_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
     import pandas as pd
+
+    from .similarity import cosine_block
 
     corpus = _emb_corpus(spark, sf_dir)
     emb_path = f"{sf_dir}/embeddings.parquet"
@@ -537,23 +538,11 @@ def dd_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def score(batches):
         ids_all, b_all = _load_emb_index(emb_path)
-        dims = b_all.shape[1]
-        # Left-fold norms for the broadcast side, once per task.
-        nb = np.zeros(len(ids_all))
-        for j in range(dims):
-            nb += b_all[:, j] * b_all[:, j]
-        nb = np.sqrt(nb)
         for batch in batches:
             if not len(batch):
                 continue
             ids_a = batch["vec_id"].to_numpy()
-            a = np.vstack(batch["emb"].to_numpy())
-            dot = np.zeros((len(ids_a), len(ids_all)))
-            na = np.zeros(len(ids_a))
-            for j in range(dims):
-                dot += np.outer(a[:, j], b_all[:, j])
-                na += a[:, j] * a[:, j]
-            cos = dot / np.outer(np.sqrt(na), nb)
+            cos = cosine_block(np.vstack(batch["emb"].to_numpy()), b_all)
             keep = (cos >= raw_cut) & (ids_a[:, None] < ids_all[None, :])
             ai, bi = np.nonzero(keep)
             yield pd.DataFrame(

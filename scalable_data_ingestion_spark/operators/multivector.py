@@ -214,36 +214,12 @@ def sim_rerank_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine top-{MV_CAND_K} shortlist re-ranked by MaxSim; output
     carries both scores and both ranks so the re-ordering the
     interaction model introduces is directly visible."""
-    from .similarity import _dot, _norm
+    from .similarity import cosine_pairs, cosine_rank
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = emb.filter(F.col("vec_id") < MV_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        _norm("embedding").alias("qn"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ve"),
-        _norm("embedding").alias("vn"),
-    )
-    cos = (
-        F.broadcast(queries)
-        .crossJoin(corpus)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6).alias("cosine"),
-        )
-    )
     cand = (
-        cos.withColumn(
-            "cand_rank",
-            F.row_number()
-            .over(W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id"))
-            .cast("int"),
-        )
+        cosine_pairs(emb, F.col("vec_id") < MV_QUERIES)
+        .withColumn("cand_rank", cosine_rank().cast("int"))
         .filter(F.col("cand_rank") <= MV_CAND_K)
     )
 

@@ -702,9 +702,7 @@ def emb_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_abtt_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@5 (vs original-space truth) after removing the top
     principal component from every embedding."""
-    from pyspark.sql import Window as W
-
-    from .similarity import N_QUERIES, TOP_K
+    from .similarity import N_QUERIES, TOP_K, _topk_candidates, cosine_rank
 
     v, _ = _pca_power(spark, sf_dir)
     vfx = {r.d: r.vfx for r in v.collect()}  # 64 values, dimension-sized
@@ -744,18 +742,14 @@ def sim_abtt_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # relation, so the selected rows are bit-identical (pinned by
         # tests/test_properties.py::test_topk_candidate_kernel_matches_pairs
         # and the unchanged DuckDB oracle).
-        from .similarity import _topk_candidates
-
         src = source.persist()  # feeds the query-collect AND the kernel
         qrows = src.filter(F.col("vec_id") < N_QUERIES).select(
             "vec_id", "emb"
         ).collect()
         cand = _topk_candidates(src, qrows, TOP_K)
-        w = W.partitionBy("query_id").orderBy(
-            F.round(F.col("cos_raw"), 6).desc(), F.col("neighbor_id")
-        )
         return (
-            cand.withColumn("rank", F.row_number().over(w))
+            cand.withColumn("cosine", F.round("cos_raw", 6))
+            .withColumn("rank", cosine_rank())
             .filter(F.col("rank") <= TOP_K)
             .select("query_id", "neighbor_id")
         )

@@ -216,28 +216,17 @@ QUALIFY fused_rank <= {RRF_TOPK}
 def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{RRF_TOPK} hybrid ranking: RRF fusion of the BM25 top-{RRF_POOL}
     and the dense cosine top-{RRF_POOL}."""
-    from .similarity import _dot, _norm
+    from .similarity import cosine_order, cosine_pairs
 
     bm = txt_bm25_topk(spark, sf_dir).select(
         "doc_id", F.col("rank").alias("bm25_rank")
     )
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") == RRF_DENSE_QUERY).select(
-        F.col("embedding").alias("qe"), _norm("embedding").alias("qn")
+    cos = cosine_pairs(e, F.col("vec_id") == RRF_DENSE_QUERY)
+    dense = take_ordered_ranked(cos, cosine_order(), RRF_POOL, "dense_rank").select(
+        F.col("neighbor_id").alias("doc_id"),
+        F.col("dense_rank").cast("int").alias("dense_rank"),
     )
-    cos = (
-        e.filter(F.col("vec_id") != RRF_DENSE_QUERY)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                _dot("qe", "embedding") / (F.col("qn") * _norm("embedding")), 6
-            ).alias("cosine"),
-        )
-    )
-    dense = take_ordered_ranked(
-        cos, [F.col("cosine").desc(), F.col("doc_id")], RRF_POOL, "dense_rank"
-    ).select("doc_id", F.col("dense_rank").cast("int").alias("dense_rank"))
     fused = bm.join(dense, "doc_id", "full_outer").select(
         "doc_id",
         "bm25_rank",

@@ -18,14 +18,26 @@ Scale notes (billions of vectors):
   n_cells x dim rows, independent of corpus size; cell search prunes
   the corpus scan by cell id (partition the corpus by cell at write
   time for real partition pruning).
-- Dot products run as Catalyst higher-order functions (zip_with +
-  aggregate) in doubles — deterministic left-to-right summation, no
-  Python boundary.
+- Exact cosine has two implementations, one per shape, both summing
+  the float64 products left to right over the dimensions:
+  - ``cosine_pairs`` builds every (query, vector) pair in Catalyst: the
+    query rows are broadcast, and the dot product and norms are
+    ``zip_with`` + ``aggregate`` folds. The plans that rank or aggregate
+    over all pairs use it: ``sim_knn_bruteforce``, ``sim_hard_negatives``,
+    ``sim_matryoshka_recall``, ``sim_hard_negative_mining``,
+    ``eval_retrieval_ranking``, ``multivector.sim_rerank_maxsim`` and
+    ``retrieval.sim_hybrid_rrf``.
+  - ``cosine_block`` is the same arithmetic in NumPy, run inside a
+    ``mapInArrow``/``mapInPandas`` kernel. ``_topk_candidates`` uses it
+    to emit a candidate superset of each query's top k
+    (``ml_knn_loo_accuracy``, ``projection.sim_abtt_recall``), and
+    ``dedup.dd_embedding_neardup_pairs`` uses it to score all pairs.
+    Rounding and the final order stay JVM expressions either way.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
@@ -51,6 +63,80 @@ def _norm(a: str):
             lambda acc, x: acc + x,
         )
     )
+
+
+def cosine_pairs(emb: DataFrame, is_query: Column, labels: bool = False) -> DataFrame:
+    """Every (query, neighbor) pair of `emb` with its exact cosine,
+    self-pairs excluded: ``query_id, [query_label,] neighbor_id,
+    [neighbor_label,] cosine``.
+
+    `emb` has ``vec_id`` and ``embedding`` (and ``label`` when `labels`);
+    the rows matching `is_query` are the queries. The query side is
+    broadcast, so the corpus is scanned map-side and never shuffled.
+    Norms are projected below the join, once per vector rather than once
+    per pair. ``cosine`` is ``round(dot / (qn * vn), 6)``, the oracles'
+    formula."""
+    carry = ["vec_id", "label"] if labels else ["vec_id"]
+    q_names = ["query_id", "query_label"][: len(carry)]
+    v_names = ["neighbor_id", "neighbor_label"][: len(carry)]
+    queries = emb.filter(is_query).select(
+        *[F.col(c).alias(n) for c, n in zip(carry, q_names)],
+        F.col("embedding").alias("qe"),
+        _norm("embedding").alias("qn"),
+    )
+    corpus = emb.select(
+        *[F.col(c).alias(n) for c, n in zip(carry, v_names)],
+        F.col("embedding").alias("ve"),
+        _norm("embedding").alias("vn"),
+    )
+    return (
+        F.broadcast(queries)
+        .crossJoin(corpus)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            *q_names,
+            *v_names,
+            F.round(_dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6).alias("cosine"),
+        )
+    )
+
+
+def cosine_order() -> list[Column]:
+    """The oracles' neighbor order: cosine descending, then neighbor_id."""
+    return [F.col("cosine").desc(), F.col("neighbor_id")]
+
+
+def cosine_rank() -> Column:
+    """Each neighbor's 1-based rank within its query under :func:`cosine_order`."""
+    return F.row_number().over(W.partitionBy("query_id").orderBy(*cosine_order()))
+
+
+def cosine_block(Q, V):
+    """Raw cosine matrix (float64, ``len(Q) x len(V)``) of the rows of `Q`
+    against the rows of `V`, bit-identical to the Catalyst
+    ``_dot(q, v) / (_norm(q) * _norm(v))`` before rounding.
+
+    Bit-exactness: the Catalyst expression is
+    ``aggregate(zip_with(q, v, (x, y) -> double(x) * double(y)), 0.0, +)
+    / (sqrt(fold q*q) * sqrt(fold v*v))``. This loop replays its IEEE
+    operation order. Each step of ``acc += Q[:, d] * V[:, d]`` is one
+    multiply and one add, left to right over the dimensions, starting
+    from 0.0 as the fold does (``0.0 + t == t``). Each NumPy ufunc rounds
+    per element, and no BLAS call reorders the sum. float32 -> float64
+    widening is exact and ``np.sqrt`` is correctly rounded. Then comes one
+    multiply for the norm product and one division. A zero-norm row gives
+    nan or inf where Catalyst gives null. Pinned by
+    tests/test_properties.py::test_cosine_block_matches_catalyst."""
+    import numpy as np
+
+    dot = np.zeros((Q.shape[0], V.shape[0]), dtype=np.float64)
+    qn = np.zeros(Q.shape[0], dtype=np.float64)
+    vn = np.zeros(V.shape[0], dtype=np.float64)
+    for d in range(Q.shape[1]):
+        dot += Q[:, d][:, None] * V[:, d][None, :]
+        qn += Q[:, d] * Q[:, d]
+        vn += V[:, d] * V[:, d]
+    return dot / (np.sqrt(qn)[:, None] * np.sqrt(vn)[None, :])
 
 
 # --------------------------------------------------------------------------
@@ -79,33 +165,8 @@ _BRUTE_ORACLE = f"""
 @register("sim_knn_bruteforce", oracle=_BRUTE_ORACLE)
 def sim_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    # Norms are projected BELOW the join: once per vector, not once per
-    # pair — at corpus scale this is the difference between O(n·d) and
-    # O(n·k·d) array traversals on the hot path.
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        _norm("embedding").alias("qn"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ve"),
-        _norm("embedding").alias("vn"),
-    )
-    pairs = (
-        F.broadcast(queries)
-        .crossJoin(corpus)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= TOP_K)
-    )
+    pairs = cosine_pairs(emb, F.col("vec_id") < N_QUERIES)
+    return pairs.withColumn("rank", cosine_rank()).filter(F.col("rank") <= TOP_K)
 
 
 # --------------------------------------------------------------------------
@@ -225,8 +286,7 @@ def _ivf_knn(spark: SparkSession, sf_dir: str, probes: int) -> DataFrame:
             F.round(_dot("qe", "ve") / (_norm("qe") * _norm("ve")), 6).alias("cosine"),
         )
     )
-    wk = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return cand.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= TOP_K)
+    return cand.withColumn("rank", cosine_rank()).filter(F.col("rank") <= TOP_K)
 
 
 N_PROBES = 2  # multi-probe recall knob
@@ -283,33 +343,20 @@ def sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{TOP_K} highest-cosine wrong-label vectors per query."""
     emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("qe"),
-        _norm("embedding").alias("qn"),
+    pairs = cosine_pairs(emb, F.col("vec_id") < N_QUERIES, labels=True).filter(
+        F.col("query_label") != F.col("neighbor_label")
     )
-    corpus = emb.select(
-        F.col("vec_id").alias("negative_id"),
-        F.col("label").alias("negative_label"),
-        F.col("embedding").alias("ve"),
-        _norm("embedding").alias("vn"),
-    )
-    pairs = (
-        F.broadcast(queries)
-        .crossJoin(corpus)
-        .filter(F.col("query_label") != F.col("negative_label"))
+    return (
+        pairs.withColumn("rank", cosine_rank())
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             "query_label",
-            "negative_id",
-            "negative_label",
-            F.round(_dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6).alias("cosine"),
+            F.col("neighbor_id").alias("negative_id"),
+            F.col("neighbor_label").alias("negative_label"),
+            "cosine",
+            "rank",
         )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("negative_id"))
-    return pairs.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= TOP_K
     )
 
 
@@ -464,33 +511,9 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def topk(source: DataFrame) -> DataFrame:
-        queries = source.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            _norm("embedding").alias("qn"),
-        )
-        corpus = source.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("ve"),
-            _norm("embedding").alias("vn"),
-        )
-        pairs = (
-            F.broadcast(queries)
-            .crossJoin(corpus)
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(_dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6).alias(
-                    "cosine"
-                ),
-            )
-        )
-        w = W.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
         return (
-            pairs.withColumn("rank", F.row_number().over(w))
+            cosine_pairs(source, F.col("vec_id") < N_QUERIES)
+            .withColumn("rank", cosine_rank())
             .filter(F.col("rank") <= TOP_K)
             .select("query_id", "neighbor_id")
         )
@@ -561,38 +584,10 @@ def sim_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{TOP_K} cross-label hard negatives per query vector with the
     best same-label positive cosine and the positive-negative margin."""
     emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("qe"),
-        _norm("embedding").alias("qn"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("embedding").alias("ve"),
-        _norm("embedding").alias("vn"),
-    )
-    pairs = (
-        F.broadcast(queries)
-        .crossJoin(corpus)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            F.round(_dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
+    pairs = cosine_pairs(emb, F.col("vec_id") < N_QUERIES, labels=True)
     neg = (
         pairs.filter(F.col("neighbor_label") != F.col("query_label"))
-        .withColumn("neg_rank", F.row_number().over(w).cast("int"))
+        .withColumn("neg_rank", cosine_rank().cast("int"))
         .filter(F.col("neg_rank") <= TOP_K)
     )
     pos = (
@@ -838,33 +833,11 @@ def eval_retrieval_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine ranking with same-label relevance (micro-unit integer
     gains; NDCG is a ratio of exact BIGINT sums)."""
     emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < RETR_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("qe"),
-        _norm("embedding").alias("qn"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("v_label"),
-        F.col("embedding").alias("ve"),
-        _norm("embedding").alias("vn"),
-    )
-    pairs = (
-        F.broadcast(queries)
-        .crossJoin(corpus)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "q_label",
-            (F.col("v_label") == F.col("q_label")).alias("relevant"),
-            F.round(_dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6).alias("cosine"),
-            "neighbor_id",
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    ranked = pairs.withColumn("rank", F.row_number().over(w).cast("bigint")).select(
-        "query_id", "q_label", "relevant", "rank"
+    ranked = cosine_pairs(emb, F.col("vec_id") < RETR_N_QUERIES, labels=True).select(
+        "query_id",
+        F.col("query_label").alias("q_label"),
+        (F.col("neighbor_label") == F.col("query_label")).alias("relevant"),
+        cosine_rank().cast("bigint").alias("rank"),
     )
     gains = spark.range(1, RETR_K + 1).select(
         F.col("id").alias("r"),
@@ -926,36 +899,40 @@ def eval_retrieval_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # score whether its label matches. High LOO accuracy = the embedding
 # space clusters by label = it will transfer.
 #
-# Scale shape: the eval subset is broadcast against the corpus (the
-# documented bounded-query-side brute pattern — the corpus is never
-# self-joined); per-query top-1 via the ranking window on the
-# (rounded-cosine, neighbor_id) total order. At production scale the
-# same statistic runs over the IVF cells (sim_ivf_recall_at_k measures
-# that substitution's recall cost).
+# Scale shape: the eval subset is collected into the task closure of a
+# map-only candidate kernel over the corpus (the bounded-query-side
+# brute pattern; the corpus is never self-joined or shuffled), and the
+# per-query top-1 is a max_by on the (rounded-cosine, neighbor_id) total
+# order. At production scale the same statistic runs over the IVF cells
+# (sim_ivf_recall_at_k measures that substitution's recall cost).
 # --------------------------------------------------------------------------
 LOO_EVERY = 10  # vec_id % 10 == 0 -> fixed-fraction eval subset
 
-# Candidate margin for the LOO Arrow kernel: the winner under the
-# ROUNDED-cosine ordering has raw cosine >= raw_max - 1.01e-6 (round to
-# 6 decimals moves a value by <= 5.0e-7 + one double ulp each way), so
-# keeping everything within 2.5e-6 of each batch's raw per-query max is
-# a strict superset of every possible rounded-order argmax and its
-# rounding ties.
-_LOO_MARGIN = 2.5e-6
+# Candidate margin for the top-k kernel: round to 6 decimals moves a
+# value by <= 5.0e-7 + one double ulp each way, so a row whose raw cosine
+# is more than 1.02e-6 below the k-th best raw has k rows strictly above
+# it after rounding. Keeping everything within 2.5e-6 of each batch's
+# k-th best raw is therefore a strict superset of every possible
+# rounded-order top k and its rounding ties.
+_TOPK_MARGIN = 2.5e-6
 
 
-def _topk_candidates(corpus: DataFrame, qrows, k: int) -> DataFrame:
-    """Map-only near-top-k candidate generation for exact-cosine kNN:
-    emits every (query, neighbor) whose RAW cosine is within
-    _LOO_MARGIN of the batch's k-th best per-query raw — a strict
-    superset of the global top-k under the (round(cosine, 6) DESC,
-    neighbor_id ASC) row_number order and of its rounding ties (the
-    k-th largest raw over a superset of rows is >= the batch's, and
-    round moves a value <= 5e-7 + 1 ulp, so anything below
-    batch_kth - 1.02e-6 has k rows strictly above it after rounding).
-    Same IEEE-order contract as :func:`_loo_candidates`; `qrows` are
-    collected (vec_id, emb) rows of the SAME relation, so the query
-    block is JVM-exact by construction."""
+def _topk_candidates(corpus: DataFrame, qrows, k: int, labels: bool = False) -> DataFrame:
+    """Map-only near-top-k candidate generation for exact-cosine kNN
+    (partition-local top-k; the JVM does the global merge).
+
+    Emits ``query_id, neighbor_id, cos_raw`` (plus ``q_label, n_label``
+    when `labels`) for every non-self pair whose raw cosine is within
+    _TOPK_MARGIN of the batch's k-th best raw for that query. The k-th
+    largest raw over the whole corpus is >= the batch's, so the rows are a
+    strict superset of the global top-k under the
+    (round(cosine, 6) DESC, neighbor_id ASC) order and of its rounding
+    ties. ``cos_raw`` comes from :func:`cosine_block`, bit-identical to
+    the Catalyst fold, so rounding and ranking the candidates in the JVM
+    selects exactly the rows the all-pairs plan selects.
+
+    `corpus` has ``vec_id`` and ``emb`` (and ``label`` when `labels`);
+    `qrows` are collected rows of the SAME relation."""
     from typing import Iterator
 
     import numpy as np
@@ -964,120 +941,42 @@ def _topk_candidates(corpus: DataFrame, qrows, k: int) -> DataFrame:
     qrows = sorted(qrows, key=lambda r: r.vec_id)
     Q = np.array([[float(v) for v in r.emb] for r in qrows], dtype=np.float64)
     qid = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    D = Q.shape[1]
-    qn_sq = np.zeros(len(qrows), dtype=np.float64)
-    for d in range(D):
-        qn_sq += Q[:, d] * Q[:, d]
-    qn = np.sqrt(qn_sq)
+    cols = ["vec_id", "label", "emb"] if labels else ["vec_id", "emb"]
+    schema = "query_id long, neighbor_id long, cos_raw double"
+    if labels:
+        qlab = np.array([r.label for r in qrows], dtype=np.int32)
+        schema += ", q_label int, n_label int"
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             if b.num_rows == 0:
                 continue
-            nid = np.asarray(
-                b.column(b.schema.get_field_index("vec_id")), dtype=np.int64
-            )
-            ecol = b.column(b.schema.get_field_index("emb"))
-            V = np.asarray(ecol.flatten(), dtype=np.float64).reshape(-1, D)
-            dot = np.zeros((len(qid), V.shape[0]), dtype=np.float64)
-            vn_sq = np.zeros(V.shape[0], dtype=np.float64)
-            for d in range(D):
-                dot += Q[:, d][:, None] * V[:, d][None, :]
-                vn_sq += V[:, d] * V[:, d]
-            cos = dot / (qn[:, None] * np.sqrt(vn_sq)[None, :])
+            nid = np.asarray(b.column("vec_id"), dtype=np.int64)
+            V = np.asarray(b.column("emb").flatten(), dtype=np.float64)
+            cos = cosine_block(Q, V.reshape(-1, Q.shape[1]))
             self_mask = qid[:, None] == nid[None, :]
             masked = np.where(self_mask, -np.inf, cos)
             if masked.shape[1] > k:
-                # k-th largest per query row
                 kth = np.partition(masked, -k, axis=1)[:, -k]
             else:
                 kth = np.full(masked.shape[0], -np.inf)
-            keep = (masked >= (kth[:, None] - _LOO_MARGIN)) & ~self_mask
+            # ~self_mask guards batches with fewer than k other rows
+            # (kth = -inf would otherwise keep the self rows too).
+            keep = (masked >= (kth[:, None] - _TOPK_MARGIN)) & ~self_mask
             qi, vi = np.nonzero(keep)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qid[qi], type=pa.int64()),
-                    pa.array(nid[vi], type=pa.int64()),
-                    pa.array(cos[qi, vi], type=pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "cos_raw"],
-            )
+            arrays = [
+                pa.array(qid[qi], type=pa.int64()),
+                pa.array(nid[vi], type=pa.int64()),
+                pa.array(cos[qi, vi], type=pa.float64()),
+            ]
+            names = ["query_id", "neighbor_id", "cos_raw"]
+            if labels:
+                nlab = np.asarray(b.column("label"), dtype=np.int32)
+                arrays += [pa.array(qlab[qi], type=pa.int32()), pa.array(nlab[vi], type=pa.int32())]
+                names += ["q_label", "n_label"]
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return corpus.select("vec_id", "emb").mapInArrow(
-        kernel, "query_id long, neighbor_id long, cos_raw double"
-    )
-
-
-def _loo_candidates(corpus: DataFrame, qrows) -> DataFrame:
-    """Map-only near-argmax candidate generation for the LOO 1-NN.
-
-    Bit-exactness contract (same discipline as operators/lloyd_arrow.py):
-    the emitted `cos_raw` doubles replay the IDENTICAL IEEE operation
-    order of the Catalyst expression
-    `aggregate(zip_with(q, v, (x, y) -> double(x) * double(y)), 0.0, +)
-     / (sqrt(fold q*q) * sqrt(fold v*v))`
-    — explicit loop over dimensions (`acc += Q[:,d] * V[:,d]` is one
-    multiply + one add per step, left-to-right, 0.0 + t == t), float32
-    -> float64 widening is exact, np.sqrt is correctly rounded IEEE,
-    one multiply for the norm product and one division. Rounding and
-    the (cosine, -neighbor_id) max live OUTSIDE the kernel, in the same
-    JVM expressions the all-pairs plan used, so a candidate superset is
-    all the kernel has to guarantee (see _LOO_MARGIN)."""
-    from typing import Iterator
-
-    import numpy as np
-    import pyarrow as pa
-
-    qrows = sorted(qrows, key=lambda r: r.vec_id)
-    Q = np.array([[float(v) for v in r.embedding] for r in qrows], dtype=np.float64)
-    qid = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    qlab = np.array([r.label for r in qrows], dtype=np.int32)
-    D = Q.shape[1]
-    qn_sq = np.zeros(len(qrows), dtype=np.float64)
-    for d in range(D):
-        qn_sq += Q[:, d] * Q[:, d]
-    qn = np.sqrt(qn_sq)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            nid = np.asarray(
-                b.column(b.schema.get_field_index("vec_id")), dtype=np.int64
-            )
-            nlab = np.asarray(
-                b.column(b.schema.get_field_index("label")), dtype=np.int32
-            )
-            ecol = b.column(b.schema.get_field_index("embedding"))
-            V = np.asarray(ecol.flatten(), dtype=np.float64).reshape(-1, D)
-            dot = np.zeros((len(qid), V.shape[0]), dtype=np.float64)
-            vn_sq = np.zeros(V.shape[0], dtype=np.float64)
-            for d in range(D):
-                dot += Q[:, d][:, None] * V[:, d][None, :]
-                vn_sq += V[:, d] * V[:, d]
-            cos = dot / (qn[:, None] * np.sqrt(vn_sq)[None, :])
-            self_mask = qid[:, None] == nid[None, :]
-            masked = np.where(self_mask, -np.inf, cos)
-            bmax = masked.max(axis=1)
-            # ~self_mask guards the all-self batch (bmax = -inf would
-            # otherwise keep the masked rows: -inf >= -inf - margin).
-            keep = (masked >= (bmax[:, None] - _LOO_MARGIN)) & ~self_mask
-            qi, vi = np.nonzero(keep)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qid[qi], type=pa.int64()),
-                    pa.array(qlab[qi], type=pa.int32()),
-                    pa.array(nlab[vi], type=pa.int32()),
-                    pa.array(nid[vi], type=pa.int64()),
-                    pa.array(cos[qi, vi], type=pa.float64()),
-                ],
-                names=["query_id", "q_label", "n_label", "neighbor_id", "cos_raw"],
-            )
-
-    return corpus.mapInArrow(
-        kernel,
-        "query_id long, q_label int, n_label int, neighbor_id long, cos_raw double",
-    )
+    return corpus.select(*cols).mapInArrow(kernel, schema)
 
 
 @register(
@@ -1120,20 +1019,18 @@ def ml_knn_loo_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring now runs as a map-only `mapInArrow` kernel over the corpus
     with the query block in the task closure (the same bounded-query
     posture the broadcast join had): per Arrow batch it computes the
-    cosines vectorized in the IDENTICAL IEEE order (see
-    `_loo_candidates`) and emits only the near-argmax candidates; the
+    cosines with `cosine_block` and emits only the near-argmax
+    candidates (`_topk_candidates` with k=1); the
     exact `round(..., 6)` + `max_by` tie rule then runs in the JVM on
     that dimension-sized candidate relation, so the 1-NN per query is
     bit-identical to the all-pairs plan (pinned by
     tests/test_properties.py::test_loo_candidate_kernel_matches_pairs).
     """
-    emb = table(spark, sf_dir, "embeddings")
-    qrows = (
-        emb.filter(F.col("vec_id") % LOO_EVERY == 0)
-        .select("vec_id", "label", "embedding")
-        .collect()
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", F.col("embedding").alias("emb")
     )
-    cand = _loo_candidates(emb.select("vec_id", "label", "embedding"), qrows)
+    qrows = emb.filter(F.col("vec_id") % LOO_EVERY == 0).collect()
+    cand = _topk_candidates(emb, qrows, 1, labels=True)
     # top-1 via max_by partial aggregation (map-side combinable), not a
     # ranking window: the pair relation never hits a per-query sort.
     # max over (cosine, -neighbor_id) == rank 1 of (cosine DESC, id ASC).

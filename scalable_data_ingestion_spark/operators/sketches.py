@@ -1232,13 +1232,6 @@ def _k1_boundaries(delta: int) -> list[float]:
     return [math.sin(math.pi * (k / delta - 0.5)) for k in range(1, delta)]
 
 
-def _fmt_double(x: float) -> str:
-    """A literal that parses to exactly this double in Spark AND DuckDB
-    (17 significant digits round-trip; exponent form parses as DOUBLE
-    in both engines)."""
-    return f"({float(x):.17e})"
-
-
 def _k1_bin(x: F.Column, delta: int) -> F.Column:
     """k1 bin of x = 2q-1 as a count of literal boundaries <= x.
 
@@ -1255,6 +1248,8 @@ def _k1_bin(x: F.Column, delta: int) -> F.Column:
 
 
 def _k1_bin_duck(x_sql: str, delta: int) -> str:
+    from .clustering import _fmt_double
+
     arr = "[" + ",".join(_fmt_double(b) for b in _k1_boundaries(delta)) + "]"
     return f"CAST(len(list_filter({arr}, b -> ({x_sql}) >= b)) AS INTEGER)"
 

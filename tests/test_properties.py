@@ -208,6 +208,50 @@ def test_global_ntile_property(spark, values, k):
     )
 
 
+# float32 components: exact zeros of both signs (zero-heavy vectors),
+# the unit range, and the whole finite float32 range down to subnormals.
+F32 = st.one_of(
+    st.sampled_from([0.0, -0.0]),
+    st.floats(min_value=-1.0, max_value=1.0, width=32),
+    st.floats(allow_nan=False, allow_infinity=False, width=32),
+)
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.data())
+def test_cosine_block_matches_catalyst(spark, data):
+    """cosine_block == the Catalyst `_dot / (_norm * _norm)` fold, bit for
+    bit, on every (query, vector) pair of random float32 vectors."""
+    import numpy as np
+
+    from scalable_data_ingestion_spark.operators.similarity import (
+        _dot,
+        _norm,
+        cosine_block,
+    )
+
+    dim = data.draw(st.integers(min_value=1, max_value=64))
+    row = st.lists(F32, min_size=dim, max_size=dim).filter(any)
+    Q = data.draw(st.lists(row, min_size=1, max_size=3))
+    V = data.draw(st.lists(row, min_size=1, max_size=8))
+
+    def frame(rows, i, e):
+        return spark.createDataFrame(
+            list(enumerate(rows)), "i long, e array<float>"
+        ).select(F.col("i").alias(i), F.col("e").alias(e))
+
+    got = (
+        frame(Q, "qi", "qe")
+        .crossJoin(frame(V, "vi", "ve"))
+        .select("qi", "vi", (_dot("qe", "ve") / (_norm("qe") * _norm("ve"))).alias("c"))
+        .collect()
+    )
+    block = cosine_block(np.array(Q, dtype=np.float64), np.array(V, dtype=np.float64))
+    assert block.shape == (len(Q), len(V)) and len(got) == block.size
+    for r in got:
+        assert np.float64(r.c).tobytes() == block[r.qi, r.vi].tobytes(), (r, block)
+
+
 def test_loo_candidate_kernel_matches_pairs(spark, sf_dir):
     """ml_knn_loo_accuracy's Arrow candidate kernel == the all-pairs
     broadcast formulation it replaced (round-11): identical 1-NN per

@@ -11,7 +11,10 @@ reproduces that sensitivity locally so typing regressions surface before
 the driver runs.
 
 Usage:
-    python tools/parity_sweep.py [--sf /root/testdata/sf0.01] [--only name ...]
+    python tools/parity_sweep.py [--sf /root/testdata/sf0.01] [--only name[,name] ...]
+
+--only takes names separated by spaces or commas; an unknown name is an
+error (exit 2), as is an empty --only, so a typo cannot turn the sweep into "0/0 green".
 """
 
 from __future__ import annotations
@@ -21,10 +24,11 @@ import math
 import sys
 import time
 from datetime import date, datetime
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from scalable_data_ingestion_spark import registry  # noqa: E402
 from scalable_data_ingestion_spark.catalog import TABLES  # noqa: E402
@@ -153,7 +157,7 @@ def compare(name: str, spark_pdf, oracle_pdf) -> list[str]:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--only", nargs="*", default=None)
+    ap.add_argument("--only", nargs="*", default=None, help="names, space- or comma-separated")
     ap.add_argument("--first", type=int, default=None, help="limit to first N registered")
     ap.add_argument(
         "--strict",
@@ -172,6 +176,19 @@ def main() -> int:
         global STRICT
         STRICT = True
 
+    qs = registry.queries()
+    oracles = registry.oracles()
+    names = list(qs)
+    if args.first:
+        names = names[: args.first]
+    if args.only is not None:
+        only = {n for arg in args.only for n in arg.split(",") if n}
+        unknown = sorted(only - set(qs))
+        if unknown or not only:
+            print("unknown query name(s):", " ".join(unknown) or "(none given)", file=sys.stderr)
+            return 2
+        names = [n for n in names if n in only]
+
     if args.plain_session:
         from pyspark.sql import SparkSession
 
@@ -183,13 +200,6 @@ def main() -> int:
         spark.sparkContext.setLogLevel("ERROR")
     else:
         spark = get_spark("parity-sweep")
-    qs = registry.queries()
-    oracles = registry.oracles()
-    names = list(qs)
-    if args.first:
-        names = names[: args.first]
-    if args.only:
-        names = [n for n in names if n in set(args.only)]
 
     con = duckdb.connect()
     for t in TABLES:
