@@ -9,6 +9,11 @@ SF ?= /root/testdata/sf0.01
 
 .PHONY: test test-fast verify verify-only plan-gates bench perfbench all
 
+# pytest targets run in the tier-1 environment: one Spark core per host
+# core (without it session.default_parallelism() builds local[32]).
+test test-fast plan-gates: export SPARK_GRAFT_CPUS ?= $(shell env -u OMP_NUM_THREADS nproc)
+test test-fast plan-gates: export SPARK_LOCAL_DIRS ?= /tmp/spark-local
+
 test:            ## full pytest suite (sf0.001 oracle parity included)
 	$(PY) -m pytest tests/ -q
 

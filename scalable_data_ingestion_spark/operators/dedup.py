@@ -458,16 +458,15 @@ corpus AS (
 """
 
 
-@functools.lru_cache(maxsize=4)
 def _load_emb_index(emb_path: str):
     """Executor-side index build for the brute-force scorer: read the
     embeddings parquet directly in the Python worker (pyarrow) and
     mirror ``_emb_corpus``'s transformation (float64 widening + the
-    planted every-25th perturbed copy) in numpy. lru-cached so a reused
-    worker process reads the file once, not once per task. The driver
-    never holds the matrix, and building the query plan triggers no
-    Spark job (the round-1 version ran a full collect at
-    plan-construction time)."""
+    planted every-25th perturbed copy) in numpy. Called once per task.
+    A plain function, so it travels to the worker by value with the
+    package; an ``lru_cache`` wrapper would be pickled by name and need
+    the package importable on the worker. The driver never holds the
+    matrix, and building the query plan triggers no Spark job."""
     import numpy as np
     import pyarrow.parquet as pq
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 import contextlib
 import importlib
 import json
+import re
 from collections.abc import Callable, Iterator
 from pathlib import Path
 
@@ -158,222 +159,37 @@ def load_all() -> None:
                 raise
 
 
-# Curated registry ordering. The driver's CORRECTNESS harness checks the
-# first N registered queries (N=50), so the leading entries rotate each
-# round to converge the driver's own record on the full registry.
-# Round-7 window: union of driver-green CORRECTNESS_r01-r06 = 275
-# distinct names of 431 registered, leaving 156 never-driver-hashed.
-# This tuple is EXACTLY that 156-query never-checked set, in the same
-# newest-batches-first order the r6 rotation established, so the
-# driver's 50-query window is 50/50 first-timers and any larger window
-# burns more debt. Per the r6 verdict, net-new operator registration is
-# frozen this round; everything not listed keeps registration order and
-# stays covered by tools/parity_sweep.py locally (431/431 green at r6
-# HEAD; 431/431 strict bit-exact at r7).
-#
-# Since round 7 the ordering SELF-ROTATES: _ordered() floats the
-# _PRIORITY names that no CORRECTNESS_r*.json has recorded yet ahead of
-# the already-hashed ones, so when the round-7 driver file lands, the
-# round-8 window automatically becomes the next 50 never-hashed names
-# without editing this tuple.
-_PRIORITY = (
-    "sim_mips_transform_check",
-    "fin_abc_xyz_matrix",
-    "mon_wow_event_volume",
-    "txt_blocklist_filter_audit",
-    "ev_adoption_latency_by_type",
-    "fin_discount_depth_profile",
-    "fin_customer_concentration_crn",
-    "ev_session_entry_exit_matrix",
-    "mm_payload_dedup",
-    "fin_cohort_npv",
-    "ev_dow_hour_heatmap",
-    "dq_email_domain_distribution",
-    "ev_markov_stationary",
-    "ts_rolling_origin_backtest",
-    "dd_lsh_bands_curve",
-    "ev_activity_streaks",
-    "stat_skew_kurtosis_by_segment",
-    "txt_heaps_law_fit",
-    "dq_functional_dependencies",
-    "opt_column_encoding_stats",
-    "ev_ips_policy_value",
-    "opt_compaction_plan",
-    "rj_binned_interval_revenue",
-    "fn_array_lab",
-    "sk_hll_rolling_7d_users",
-    "opt_join_qerror",
-    "sla_business_day_leadtime",
-    "ev_user_value_trend",
-    "fn_window_lab",
-    "mm_patch_grid",
-    "dq_expectation_suite",
-    "ev_ab_proportion_ztest",
-    "txt_ccnet_ppl_buckets",
-    "ev_frequent_trigrams",
-    "tok_fertility_by_lang",
-    "gr_hits_supply_graph",
-    "ev_did_estimate",
-    "emb_grid_outliers",
-    "txt_boilerplate_lines",
-    "emb_silhouette_by_cluster",
-    "sql_lateral_topn_orders",
-    "pipe_source_scorecard",
-    "gr_triangle_total_degree_oriented",
-    "sk_cms_join_size_estimate",
-    "samp_length_matched",
-    "txt_trigram_coverage_curve",
-    "ts_stl_daily_revenue",
-    "dq_profile_drift",
-    "ev_ab_power_analysis",
-    "ts_stl_residual_anomalies",
-    "gr_community_conductance",
-    "ev_sprt_monitor",
-    "gr_partition_modularity",
-    "sim_pq_distortion",
-    "sql_recursive_reachability",
-    "opt_equidepth_histogram",
-    "hist_equidepth_price",
-    "dd_line_dedup_stats",
-    "txt_kneser_ney_logprob",
-    "txt_heldout_perplexity",
-    "txt_textrank_keywords",
-    "txt_skipgram_pmi",
-    "sim_hard_negative_mining",
-    "sim_hard_negatives",
-    "sim_binary_hamming_recall",
-    "zo_zonemap_extents",
-    "tok_bpe_merges",
-    "tok_bpe_compression",
-    "ml_logreg_gd_path",
-    "ml_logreg_learning_curve",
-    "eval_decile_lift",
-    "ev_cuped_variance_reduction",
-    "uv_part_measures_long",
-    "stat_qty_line_corr",
-    "pe_embedding_dim_means",
-    "ns_status_nullsafe_join",
-    "fn_scalar_lab",
-    "fn_date_lab",
-    "agg_segments_per_nation",
-    "stat_price_qty_regression",
-    "ev_top_event_types",
-    "ev_json_props_stats",
-    "ev_daily_activity",
-    "ev_user_profiles",
-    "ev_props_struct_extract",
-    "ev_variant_props_percentiles",
-    "pivot_status_by_priority",
-    "hist_order_value_buckets",
-    "qa_price_outliers_iqr",
-    "stat_bootstrap_mean_ci",
-    "stat_weighted_median_len",
-    "sla_ship_leadtime",
-    "dd_winnow_fingerprints",
-    "txt_fingerprints",
-    "samp_docs_upsample_by_tier",
-    "pack_length_buckets",
-    "pii_summary_by_segment",
-    "feat_user_activity_matrix",
-    "feat_order_value_woe",
-    "feat_target_encoding_loo",
-    "feat_next_event_sequences",
-    "pipe_curation_funnel",
-    "samp_kfold_assign",
-    "samp_mix_waterfill",
-    "dd_quality_survivors",
-    "txt_bpe_token_stats",
-    "txt_length_histogram",
-    "emb_cluster_profile",
-    "sim_ivf_incremental_assign",
-    "ev_cohort_ltv",
-    "ev_interarrival_stats",
-    "ev_time_to_convert",
-    "cust_survival_km",
-    "ev_stickiness_dau_mau",
-    "ev_pareto_user_share",
-    "snap_orders_diff",
-    "ev_daily_bounce_rate",
-    "ev_markov_path_likelihood",
-    "eval_classifier_calibration",
-    "gr_two_hop_features",
-    "gr_edge_churn",
-    "gr_clustering_coefficient",
-    "gr_common_neighbor_links",
-    "gr_neighbor_jaccard",
-    "gr_kcore_decomposition",
-    "er_party_entities",
-    "mon_daily_volume_anomaly",
-    "mon_source_freshness",
-    "mon_category_drift_tvd",
-    "mon_token_js_divergence",
-    "stat_mann_kendall_trend",
-    "stat_theil_sen_slope",
-    "stat_ks_two_sample",
-    "stat_chi2_segment_priority",
-    "stat_winsorized_order_value",
-    "txt_lexical_diversity",
-    "txt_token_burstiness",
-    "dq_l_diversity",
-    "ts_dow_seasonality",
-    "ts_rolling_view_purchase_corr",
-    "ts_holt_linear",
-    "ts_acf_daily_revenue",
-    "ts_cusum_changepoint",
-    "emb_random_projection",
-    "mon_embedding_drift_psi",
-    "emb_int8_quantize",
-    "sim_abtt_recall",
-    "sim_ivf_knn",
-    "sim_rerank_maxsim",
-    "sim_rerank_agreement",
-    "sk_hll_users_by_event",
-    "mm_frame_sample",
-    "sk_join_key_skew_report",
-    "dd_cross_source_matrix",
-    "sk_approx_event_profile",
-    "sk_approx_order_quantiles",
-)
-
-
-def _driver_hashed() -> frozenset[str]:
-    """Names already value-checked by a driver CORRECTNESS_r*.json record.
-
-    Read fresh on every ordering call (the files are tiny) so the
-    rotation self-advances: the round-N driver run lands a new file,
-    and from that moment the round-N+1 window automatically leads with
-    the remaining never-hashed names — no manual _PRIORITY rewrite per
-    round, no stale-window round like r5->r6. Outside a repo checkout
-    (no CORRECTNESS files found) this returns empty and the static
-    _PRIORITY order applies unchanged.
-
-    POST-FREEZE REGISTRATION POLICY (r7 verdict #7, binding from the
-    round the never-hashed debt reaches zero, expected r9): net-new
-    query registration per round must never exceed what one driver
-    window hashes (<= 50 net-new names per round). New names enter the
-    front of the rotation automatically (they are never-hashed), so
-    respecting the cap guarantees every registered query gets its
-    driver hash within one round of landing and the debt can never
-    re-accumulate. Until the debt clears, registration stays frozen
-    (r6 verdict #1).
-    """
-    root = Path(__file__).resolve().parents[1]
-    names: set[str] = set()
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
+def _last_checked_round(root: Path | None = None) -> dict[str, int]:
+    """For each query name, the highest N among the ``CORRECTNESS_r<N>.json``
+    records under ``root`` (default: the repo checkout) that value-checked
+    it. Read fresh on every ordering call; the files are tiny. Outside a
+    checkout no record is found and the result is empty."""
+    root = root or Path(__file__).resolve().parents[1]
+    last: dict[str, int] = {}
+    for f in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name)
+        if not m:
+            continue
         try:
-            names |= set(json.loads(f.read_text()))
+            names = json.loads(f.read_text())
         except (OSError, ValueError):
             continue
-    return frozenset(names)
+        for name in names:
+            last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
 
 
-def _ordered(mapping: dict[str, object]) -> dict:
-    hashed = _driver_hashed()
-    priority = [k for k in _PRIORITY if k in mapping]
-    rest = [k for k in mapping if k not in set(priority)]
-    fresh = [k for k in priority + rest if k not in hashed]
-    seen = [k for k in priority + rest if k in hashed]
-    return {k: mapping[k] for k in fresh + seen}
+def _ordered(mapping: dict[str, object], root: Path | None = None) -> dict:
+    """``mapping`` least-recently-checked first: names no CORRECTNESS
+    record holds lead, then names by the round that last checked them,
+    oldest first; ties keep registration order.
+
+    The correctness harness checks the first 50 names, so every new
+    record moves that window on to the next-stalest names by itself.
+    New names lead (never checked), so registering at most 50 per round
+    keeps each name's first check within one round of landing."""
+    last = _last_checked_round(root)
+    return {k: mapping[k] for k in sorted(mapping, key=lambda k: last.get(k, 0))}
 
 
 def queries() -> dict[str, QueryFn]:

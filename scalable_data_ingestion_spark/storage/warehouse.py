@@ -13,6 +13,11 @@ upsert is append + dedup-on-read (latest ``processed_at`` wins) with an
 explicit ``compact()`` to materialize the deduped state. Delta MERGE is
 the documented upgrade path, not a dependency.
 
+Every physical rewrite (``compact``, ``forget_customer``,
+``vacuum_deletes``, the ``streaming/incremental.py`` stores' ``compact``)
+is one ``rewrite_table``: a Spark write into ``<table>__staging``, then
+a swap of the whole table's or only the named partitions' directories.
+
 ``save_orders`` is one write action and ``summary_report`` two (one
 whole-table aggregate, one categorical collect).
 """
@@ -22,10 +27,42 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Iterable
 from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+
+def rewrite_table(
+    df: DataFrame,
+    path: str,
+    partition_col: str | None = None,
+    partitions: Iterable | None = None,
+) -> None:
+    """Replace the parquet table at ``path`` with ``df``, which may read
+    ``path`` itself: one Spark write into ``<path>__staging``, then a
+    directory swap. Without ``partitions`` the whole table is swapped.
+    With ``partitions`` (``partition_col`` values, used unescaped as
+    directory names; ``None`` is Spark's NULL-key default partition) only
+    those directories are replaced by their staged rows, or dropped when
+    none were staged; all other partitions keep their files. Staging is
+    deleted once the swap has succeeded."""
+    staging = f"{path}__staging"
+    writer = df.write.mode("overwrite")
+    (writer.partitionBy(partition_col) if partition_col else writer).parquet(staging)
+    if partitions is None:
+        shutil.rmtree(path)
+        os.rename(staging, path)
+        return
+    for value in partitions:
+        value = "__HIVE_DEFAULT_PARTITION__" if value is None else value
+        name = f"{partition_col}={value}"
+        if os.path.isdir(f"{path}/{name}"):
+            shutil.rmtree(f"{path}/{name}")
+        if os.path.isdir(f"{staging}/{name}"):
+            os.rename(f"{staging}/{name}", f"{path}/{name}")
+    shutil.rmtree(staging)
 
 
 class Warehouse:
@@ -113,96 +150,48 @@ class Warehouse:
         return self._latest(df).drop(self.MONTH_COL)
 
     def compact(self) -> None:
-        """Materialize the deduped orders state (rewrite), preserving
-        the month partitioning."""
+        """Materialize the deduped orders state (one staged rewrite),
+        preserving the month partitioning."""
         current = self._latest(self._raw_orders())
         partitioned = self.MONTH_COL in current.columns
-        tmp = self._path("orders__compacting")
-        w = current.write.mode("overwrite")
-        (w.partitionBy(self.MONTH_COL) if partitioned else w).parquet(tmp)
-        final = self._path("orders")
-        w2 = self.spark.read.parquet(tmp).write.mode("overwrite")
-        (w2.partitionBy(self.MONTH_COL) if partitioned else w2).parquet(final)
+        rewrite_table(
+            current, self._path("orders"), self.MONTH_COL if partitioned else None
+        )
 
     def forget_customer(self, email: str) -> int:
         """Right-to-be-forgotten: remove every order row belonging to
         ``email``, rewriting ONLY the month partitions that contain the
-        subject's data (dynamic partition overwrite), not the table.
+        subject's data, not the table.
 
         At 100 TB the erasure cost is bounded by the subject's partition
         footprint — typically a handful of month directories — while
         every other file is untouched (verified byte-for-byte in
-        test_forget_customer_rewrites_only_affected_partitions).
+        test_forget_customer_rewrites_only_affected_partitions); a NULL
+        ``order_date``'s default partition is one more month. Two actions:
+        a per-month count of the subject's rows, then one staged write.
         Returns the number of rows removed.
         """
         raw = self._raw_orders()
         if "customer_email" not in raw.columns:
             return 0
         target = F.col("customer_email") == email
-        partitioned = self.MONTH_COL in raw.columns
-        if not partitioned:
+        keep = raw.filter(~target | F.col("customer_email").isNull())
+        if self.MONTH_COL not in raw.columns:
             removed = raw.filter(target).count()
             if removed:
-                keep = raw.filter(~target | F.col("customer_email").isNull())
-                tmp = self._path("orders__forgetting")
-                keep.write.mode("overwrite").parquet(tmp)
-                self.spark.read.parquet(tmp).write.mode("overwrite").parquet(
-                    self._path("orders")
-                )
+                rewrite_table(keep, self._path("orders"))
             return removed
 
-        affected = [
-            r[0]
-            for r in raw.filter(target).select(self.MONTH_COL).distinct().collect()
-        ]
-        if not affected:
-            return 0
-        removed = raw.filter(target).count()
-        keep = raw.filter(
-            F.col(self.MONTH_COL).isin(affected)
-            & (~target | F.col("customer_email").isNull())
-        )
-        # Stage through a scratch dir (Spark refuses to overwrite its own
-        # read source), then dynamic-overwrite only the affected months.
-        tmp = self._path("orders__forgetting")
-        keep.write.mode("overwrite").partitionBy(self.MONTH_COL).parquet(tmp)
-        no_survivors = not any(
-            d.startswith(f"{self.MONTH_COL}=") for d in os.listdir(tmp)
-        )
-        if no_survivors:
-            # Every affected month contained only the subject: no rewrite
-            # needed, just drop those partition directories.
-            for month in affected:
-                part_dir = f"{self._path('orders')}/{self.MONTH_COL}={month}"
-                if os.path.isdir(part_dir):
-                    shutil.rmtree(part_dir)
-            return removed
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                self.spark.read.parquet(tmp)
-                .write.mode("overwrite")
-                .partitionBy(self.MONTH_COL)
-                .parquet(self._path("orders"))
+        hits = dict(raw.filter(target).groupBy(self.MONTH_COL).count().collect())
+        if hits:
+            month = F.col(self.MONTH_COL)
+            affected = month.isin([m for m in hits if m is not None])
+            if None in hits:
+                affected = affected | month.isNull()
+            rewrite_table(
+                keep.filter(affected), self._path("orders"), self.MONTH_COL, hits
             )
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        # Dynamic overwrite only touches partitions present in the staged
-        # survivors; a month where the subject was the only row has no
-        # surviving rows, so drop its directory explicitly.
-        surviving = {
-            r[0]
-            for r in self.spark.read.parquet(tmp)
-            .select(self.MONTH_COL)
-            .distinct()
-            .collect()
-        }
-        for month in set(affected) - surviving:
-            part_dir = f"{self._path('orders')}/{self.MONTH_COL}={month}"
-            if os.path.isdir(part_dir):
-                shutil.rmtree(part_dir)
-        return removed
+        return sum(hits.values())
 
     # --------------------------------------------------------- deletion vectors
     # The O(tombstones) delete path complementing forget_customer's
@@ -263,12 +252,8 @@ class Warehouse:
             live = live.withColumn(
                 self.MONTH_COL, F.date_format("order_date", "yyyy-MM")
             )
-        tmp = self._path("orders__vacuuming")
-        w = live.write.mode("overwrite")
-        (w.partitionBy(self.MONTH_COL) if partitioned else w).parquet(tmp)
-        w2 = self.spark.read.parquet(tmp).write.mode("overwrite")
-        (w2.partitionBy(self.MONTH_COL) if partitioned else w2).parquet(
-            self._path("orders")
+        rewrite_table(
+            live, self._path("orders"), self.MONTH_COL if partitioned else None
         )
         shutil.rmtree(self._path(self.DELETES), ignore_errors=True)
 

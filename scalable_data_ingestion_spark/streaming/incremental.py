@@ -35,37 +35,35 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..storage.warehouse import rewrite_table
+from .ingest import start_foreach_batch
+
 # reserved batch_id partition for compacted history
 _COMPACT_ID = -1
 
 
-def _partial_daily_activity(batch_df: DataFrame) -> DataFrame:
-    ts = F.col("ts")
-    if isinstance(batch_df.schema["ts"].dataType, T.TimestampNTZType):
-        ts = ts.cast("timestamp")
-    return batch_df.groupBy(
-        F.date_trunc("day", ts).cast("date").alias("day"),
-        "event_type",
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("sum_value"),
-    )
-
-
-class IncrementalDailyActivity:
-    """Continuously-maintained daily (day, event_type) activity rollup."""
+class BatchPartialStore:
+    """A parquet store of per-micro-batch partial aggregates, one
+    ``batch_id`` partition per batch. A subclass supplies ``_partial``
+    (a micro-batch's partial, with no ``batch_id`` column) and
+    ``merged`` (every stored partial combined, in the partial's
+    schema)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
-    # ------------------------------------------------------------- write
+    def _partial(self, batch_df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def merged(self) -> DataFrame:
+        raise NotImplementedError
+
     def fold_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch sink: write this batch's partial aggregate under
-        its own batch_id partition (idempotent under re-delivery)."""
-        partial = _partial_daily_activity(batch_df).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
+        """foreachBatch sink: write this batch's partial under its own
+        batch_id partition (dynamic overwrite: idempotent under
+        re-delivery)."""
+        partial = self._partial(batch_df).withColumn("batch_id", F.lit(int(batch_id)))
         (
             partial.write.mode("overwrite")
             .partitionBy("batch_id")
@@ -74,17 +72,32 @@ class IncrementalDailyActivity:
         )
 
     def attach(self, stream: DataFrame, checkpoint_dir: str, once: bool = True):
-        writer = (
-            stream.writeStream.foreachBatch(self.fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-        )
-        if once:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_foreach_batch(stream, self.fold_batch, checkpoint_dir, once)
 
-    # -------------------------------------------------------------- read
-    def view(self) -> DataFrame:
+    def compact(self) -> None:
+        """Fold all partials into the reserved compacted partition and
+        drop the per-batch ones, bounding reader fan-in on long streams."""
+        merged = self.merged().withColumn("batch_id", F.lit(_COMPACT_ID))
+        rewrite_table(merged, self.path, "batch_id")
+
+
+class IncrementalDailyActivity(BatchPartialStore):
+    """Continuously-maintained daily (day, event_type) activity rollup."""
+
+    @staticmethod
+    def _partial(batch_df: DataFrame) -> DataFrame:
+        ts = F.col("ts")
+        if isinstance(batch_df.schema["ts"].dataType, T.TimestampNTZType):
+            ts = ts.cast("timestamp")
+        return batch_df.groupBy(
+            F.date_trunc("day", ts).cast("date").alias("day"),
+            "event_type",
+        ).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("value").alias("sum_value"),
+        )
+
+    def merged(self) -> DataFrame:
         """Merged rollup: one dimension-keyed aggregate over the stored
         partials (input is #batches x #cells rows, never raw events)."""
         partials = self.spark.read.parquet(self.path)
@@ -93,21 +106,7 @@ class IncrementalDailyActivity:
             F.round(F.sum("sum_value"), 2).alias("sum_value"),
         )
 
-    def compact(self) -> None:
-        """Fold all partials into the reserved compacted partition and
-        drop the per-batch ones, bounding reader fan-in on long streams."""
-        merged = (
-            self.view()
-            .withColumn("sum_value", F.col("sum_value").cast("double"))
-            .withColumn("batch_id", F.lit(_COMPACT_ID))
-        )
-        staging = f"{self.path}__compact"
-        merged.write.mode("overwrite").partitionBy("batch_id").parquet(staging)
-        # swap: replace the partial store with the consolidated one
-        import shutil
-
-        shutil.rmtree(self.path)
-        shutil.move(staging, self.path)
+    view = merged
 
 
 # ---------------------------------------------------------------------------
@@ -123,15 +122,11 @@ class IncrementalDailyActivity:
 # "distinct URLs crawled" live: per batch cost is one 256-cell partial;
 # the merge reads #batches x <=256 rows, never raw history.
 # ---------------------------------------------------------------------------
-class IncrementalUserHLL:
+class IncrementalUserHLL(BatchPartialStore):
     """Continuously-maintained HLL register file over ``user_id``."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
     @staticmethod
-    def _partial_registers(batch_df: DataFrame) -> DataFrame:
+    def _partial(batch_df: DataFrame) -> DataFrame:
         md5 = F.md5(F.col("user_id").cast("string"))
         bucket = F.conv(F.substring(md5, 1, 2), 16, 10).cast("int")
         w = F.conv(F.substring(md5, 3, 13), 16, 10).cast("bigint")
@@ -143,28 +138,7 @@ class IncrementalUserHLL:
             .agg(F.max("rho").alias("r"))
         )
 
-    def fold_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        partial = self._partial_registers(batch_df).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.path)
-        )
-
-    def attach(self, stream: DataFrame, checkpoint_dir: str, once: bool = True):
-        writer = (
-            stream.writeStream.foreachBatch(self.fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-        )
-        if once:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def registers(self) -> DataFrame:
+    def merged(self) -> DataFrame:
         """Merged register file (== the batch register file over all
         data folded so far)."""
         return (
@@ -173,6 +147,8 @@ class IncrementalUserHLL:
             .agg(F.max("r").alias("r"))
         )
 
+    registers = merged
+
     def estimate(self) -> float:
         """HLL estimate (with small-range correction) from the merged
         registers — same arithmetic as sk_hll_user_estimate."""
@@ -180,7 +156,7 @@ class IncrementalUserHLL:
 
         from ..operators.sketches import HLL_ALPHA, HLL_M, _POW53
 
-        rows = self.registers().collect()
+        rows = self.merged().collect()
         s = sum(1 << (53 - r.r) for r in rows)
         v = HLL_M - len(rows)
         s += v * _POW53
@@ -188,15 +164,6 @@ class IncrementalUserHLL:
         if v > 0 and raw <= 2.5 * HLL_M:
             return HLL_M * log(HLL_M / v)
         return raw
-
-    def compact(self) -> None:
-        merged = self.registers().withColumn("batch_id", F.lit(_COMPACT_ID))
-        staging = f"{self.path}__compact"
-        merged.write.mode("overwrite").partitionBy("batch_id").parquet(staging)
-        import shutil
-
-        shutil.rmtree(self.path)
-        shutil.move(staging, self.path)
 
 
 # ---------------------------------------------------------------------------
@@ -210,13 +177,13 @@ class IncrementalUserHLL:
 # batch-built sketch exactly (operators/sketches.py value-checks the
 # cell math itself).
 # ---------------------------------------------------------------------------
-class IncrementalTokenCMS:
+class IncrementalTokenCMS(BatchPartialStore):
     """Continuously-maintained 3x64 count-min sketch over event_type."""
 
     DEPTH, WIDTH = 3, 64
 
     @classmethod
-    def _partial_cells(cls, batch_df: DataFrame) -> DataFrame:
+    def _partial(cls, batch_df: DataFrame) -> DataFrame:
         # All DEPTH hash rows emitted per event in ONE pass over the
         # micro-batch (a per-depth union of selects scans the batch
         # DEPTH times per trigger).
@@ -242,43 +209,20 @@ class IncrementalTokenCMS:
             .agg(F.count(F.lit(1)).alias("cell"))
         )
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def fold_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        partial = self._partial_cells(batch_df).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.path)
-        )
-
-    def attach(self, stream: DataFrame, checkpoint_dir: str, once: bool = True):
-        writer = (
-            stream.writeStream.foreachBatch(self.fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-        )
-        if once:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def cells(self) -> DataFrame:
+    def merged(self) -> DataFrame:
         return (
             self.spark.read.parquet(self.path)
             .groupBy("r", "bucket")
             .agg(F.sum("cell").cast("bigint").alias("cell"))
         )
 
+    cells = merged
+
     def estimate(self, key: str) -> int:
         """Point query: min over the DEPTH probed cells."""
         import hashlib
 
-        cells = {(r.r, r.bucket): r.cell for r in self.cells().collect()}
+        cells = {(r.r, r.bucket): r.cell for r in self.merged().collect()}
         est = None
         for r in range(self.DEPTH):
             h = hashlib.md5(f"{r}:{key}".encode()).hexdigest()

@@ -60,6 +60,18 @@ def order_file_stream(
     )
 
 
+def start_foreach_batch(stream: DataFrame, sink, checkpoint_dir: str, once: bool = True):
+    """Start ``stream`` with ``sink(batch_df, batch_id)`` run on every
+    micro-batch; ``once`` drains what is there (trigger availableNow)
+    and stops. Every foreachBatch query in the package starts here."""
+    writer = stream.writeStream.foreachBatch(sink).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def process_batch(df: DataFrame, warehouse: Warehouse) -> None:
     """validate -> transform -> store for one micro-batch (the reference's
     whole pipeline per run becomes per-batch): one write action."""
@@ -81,15 +93,7 @@ def start_ingest(
     def _foreach(batch_df: DataFrame, batch_id: int) -> None:
         process_batch(batch_df, warehouse)
 
-    writer = (
-        stream.writeStream.foreachBatch(_foreach)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if once:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    return query
+    return start_foreach_batch(stream, _foreach, checkpoint_dir, once)
 
 
 def dedup_order_stream(
@@ -180,9 +184,4 @@ def start_dedup_ingest(
 ):
     """Wire a document stream through the fingerprint-store dedup."""
     sink = FingerprintStoreDedup(spark, store_dir, out_dir)
-    writer = docs_stream.writeStream.foreachBatch(sink.process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if run_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(docs_stream, sink.process_batch, checkpoint_dir, run_once)

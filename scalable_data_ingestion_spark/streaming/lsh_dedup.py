@@ -15,9 +15,10 @@ Scale notes (100 TB/day feed):
   equi-join on (band, bh) — with the band store disk-bucketed on that
   key only the micro-batch shuffles — and the verify join touches only
   colliding pairs' shingles.
-- The stores are append-only parquet; compaction is the warehouse's
-  usual background job. No state lives in the streaming checkpoint, so
-  store size never hits Spark's state-store limits.
+- The stores are append-only parquet and nothing compacts them yet,
+  so each batch's probe reads a growing file count. No state lives in
+  the streaming checkpoint, so store size never hits Spark's
+  state-store limits.
 - The corpus-wide document-frequency cap the batch operator applies to
   shingles is a skew guard that needs global df counts; the streaming
   path would maintain those in a third store. Here the synthetic docs
@@ -36,6 +37,7 @@ from ..operators.dedup import (
     _bands,
     _minhash_sig,
 )
+from .ingest import start_foreach_batch
 
 
 def _shingles_of(docs: DataFrame) -> DataFrame:
@@ -200,9 +202,4 @@ def start_lsh_dedup_ingest(
 ):
     """Wire a document stream through the LSH band-store near-dedup."""
     sink = LshBandStoreDedup(spark, shingle_dir, out_dir, audit_dir)
-    writer = docs_stream.writeStream.foreachBatch(sink.process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if run_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(docs_stream, sink.process_batch, checkpoint_dir, run_once)

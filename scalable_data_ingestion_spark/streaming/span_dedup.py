@@ -56,6 +56,7 @@ from ..operators.winnow import (
     winnow_fingerprints_of,
 )
 from ..registry import register
+from .ingest import start_foreach_batch
 from .lsh_dedup import _shingles_of
 
 BBIT_MIN_MATCH = 11  # of MINHASH_K=12 one-bit hashes (J1 >= 5/6)
@@ -349,12 +350,7 @@ def start_winnow_dedup_ingest(
     docs_stream, spark, fp_dir, out_dir, audit_dir, checkpoint_dir, run_once=True
 ):
     sink = WinnowFpStoreDedup(spark, fp_dir, out_dir, audit_dir)
-    writer = docs_stream.writeStream.foreachBatch(sink.process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if run_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(docs_stream, sink.process_batch, checkpoint_dir, run_once)
 
 
 def start_bbit_dedup_ingest(
@@ -368,12 +364,7 @@ def start_bbit_dedup_ingest(
     run_once=True,
 ):
     sink = BbitSketchStoreDedup(spark, bands_dir, bits_dir, out_dir, audit_dir)
-    writer = docs_stream.writeStream.foreachBatch(sink.process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if run_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(docs_stream, sink.process_batch, checkpoint_dir, run_once)
 
 
 # --------------------------------------------------------------------------

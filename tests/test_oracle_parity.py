@@ -50,12 +50,8 @@ def test_coverage_doc_totals_match_registry():
 
 
 def test_priority_rotation_all_unhashed():
-    """registry._PRIORITY must contain only queries with no driver hash yet.
-
-    The driver's CORRECTNESS window checks the first 50 registered names;
-    keeping _PRIORITY = the never-hashed set guarantees each round burns
-    maximum rotation debt (r6 verdict item #1).
-    """
+    """The CORRECTNESS window checks the first 50 registered names; it
+    must lead with every never-hashed name while any remain."""
     import json
     import pathlib
 
@@ -64,20 +60,30 @@ def test_priority_rotation_all_unhashed():
     for f in sorted(root.glob("CORRECTNESS_r*.json")):
         hashed |= set(json.loads(f.read_text()))
     qs = registry.queries()
-    stale = [k for k in registry._PRIORITY if k in hashed]
-    missing = [k for k in registry._PRIORITY if k not in qs]
-    assert not missing, f"_PRIORITY names not in registry: {missing}"
-    # _ordered() self-rotates: never-hashed _PRIORITY names float ahead
-    # of already-hashed ones on every call, so the driver window must be
-    # first-timers for as long as any remain — across rounds, with no
-    # manual tuple rewrite. `stale` entries are fine (they become hashed
-    # when the driver lands a new CORRECTNESS file); a window that still
-    # leads with a hashed name while unhashed ones exist is the bug.
     window = list(qs)[:50]
     unhashed_total = [k for k in qs if k not in hashed]
     expect_fresh = min(50, len(unhashed_total))
     fresh_in_window = [k for k in window if k not in hashed]
     assert len(fresh_in_window) == expect_fresh, (
         f"driver window has {len(fresh_in_window)} first-timers, expected "
-        f"{expect_fresh}; stale heads: {stale[:10]}"
+        f"{expect_fresh}"
     )
+
+
+def test_window_rotates_least_recently_checked_first(tmp_path):
+    """Never-checked names lead, then the oldest last-checked round
+    (compared as numbers), ties in registration order; files that are
+    not round records are ignored."""
+    import json
+
+    records = {
+        "CORRECTNESS_r01.json": ["a", "b", "c"],
+        "CORRECTNESS_r02.json": ["b", "d"],
+        "CORRECTNESS_r9.json": ["a"],
+        "CORRECTNESS_r10.json": ["c"],
+        "CORRECTNESS_r10_c8.json": ["e"],
+    }
+    for name, checked in records.items():
+        (tmp_path / name).write_text(json.dumps({k: {} for k in checked}))
+    mapping = dict.fromkeys(["a", "b", "c", "d", "e", "f"])
+    assert list(registry._ordered(mapping, tmp_path)) == ["e", "f", "b", "d", "a", "c"]

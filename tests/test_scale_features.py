@@ -314,6 +314,65 @@ def test_forget_customer_drops_emptied_partition(spark, tmp_path):
     assert not os.path.isdir(str(tmp_path / "wh" / "orders" / "order_month=2024-01"))
 
 
+def test_forget_customer_null_order_date(spark, tmp_path):
+    """Rows with a NULL order_date sit in the default partition; erasure
+    removes the subject's rows there too and keeps everyone else's."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [
+            ("ORD-0001", "t@x.com", "2024-01-15 00:00:00", 5.0),
+            ("ORD-0002", "t@x.com", None, 6.0),
+            ("ORD-0003", "keep@x.com", None, 7.0),
+            ("ORD-0004", "keep@x.com", "2024-02-15 00:00:00", 8.0),
+        ],
+        "order_id string, customer_email string, order_date string, total_amount double",
+    ).withColumn("order_date", F.to_timestamp("order_date"))
+    wh.save_orders(df)
+
+    assert wh.forget_customer("t@x.com") == 2
+    remaining = wh.table("orders")
+    assert remaining.filter(F.col("customer_email") == "t@x.com").count() == 0
+    assert sorted(r["order_id"] for r in remaining.collect()) == ["ORD-0003", "ORD-0004"]
+
+
+def test_rewrites_leave_only_the_table(spark, tmp_path):
+    """compact, forget_customer and vacuum_deletes leave no staging or
+    scratch directory behind, so stats() sizes the table alone."""
+    import os
+
+    root = tmp_path / "wh"
+    wh = Warehouse(spark, str(root))
+    df = spark.range(40).select(
+        F.format_string("ORD-%04d", F.col("id")).alias("order_id"),
+        F.format_string("u%d@x.com", F.col("id") % 4).alias("customer_email"),
+        F.make_date(F.lit(2024), (F.col("id") % 3 + 1).cast("int"), F.lit(1)).alias(
+            "order_date"
+        ),
+        (F.col("id").cast("double") * 1.5).alias("total_amount"),
+    )
+    wh.save_orders(df)
+
+    def orders_bytes():
+        return sum(
+            os.path.getsize(os.path.join(d, f))
+            for d, _, files in os.walk(root / "orders")
+            for f in files
+        )
+
+    def assert_only_orders():
+        assert os.listdir(root) == ["orders"]
+        assert wh.stats()["warehouse_size_bytes"] == orders_bytes()
+
+    wh.compact()
+    assert_only_orders()
+    assert wh.forget_customer("u1@x.com") == 10
+    assert_only_orders()
+    assert wh.delete_orders_where(F.col("customer_email") == "u2@x.com") == 10
+    wh.vacuum_deletes()
+    assert_only_orders()
+    assert wh.read_orders().count() == 20
+
+
 def test_clustered_write_yields_per_key_ordered_runs(spark, tmp_path, sf_dir):
     """After clustered_write(events by user, time-ordered): each file
     holds whole users only, and every user's rows are contiguous and

@@ -252,7 +252,7 @@ def test_incremental_hll_equals_batch_registers(spark, tmp_path):
 
     batch_regs = {
         (r.bucket, r.r)
-        for r in IncrementalUserHLL._partial_registers(
+        for r in IncrementalUserHLL._partial(
             spark.read.parquet(f"{SF}/events.parquet")
         ).collect()
     }
@@ -286,7 +286,7 @@ def test_incremental_cms_equals_batch_and_never_underestimates(spark, tmp_path):
 
     batch_cells = {
         (r.r, r.bucket): r.cell
-        for r in IncrementalTokenCMS._partial_cells(
+        for r in IncrementalTokenCMS._partial(
             spark.read.parquet(f"{SF}/events.parquet")
         ).collect()
     }
@@ -305,6 +305,10 @@ def test_incremental_cms_equals_batch_and_never_underestimates(spark, tmp_path):
     full = spark.read.parquet(f"{SF}/events.parquet")
     cms.fold_batch(full, 0)
     cms.fold_batch(full, 0)
+    assert {(r.r, r.bucket): r.cell for r in cms.cells().collect()} == batch_cells
+
+    # compaction folds the partials into one without changing a cell
+    cms.compact()
     assert {(r.r, r.bucket): r.cell for r in cms.cells().collect()} == batch_cells
 
 

@@ -18,7 +18,12 @@ from tests.conftest import SF_SMOKE
 REPO = Path(__file__).resolve().parents[1]
 
 # Queries whose mapInArrow kernels reference package functions.
-KERNEL_QUERIES = ("ml_knn_loo_accuracy", "sim_abtt_recall", "sim_rq_distortion")
+KERNEL_QUERIES = (
+    "ml_knn_loo_accuracy",
+    "sim_abtt_recall",
+    "sim_rq_distortion",
+    "dd_embedding_neardup_pairs",
+)
 
 SCRIPT = f"""
 import sys
