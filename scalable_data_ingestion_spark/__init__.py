@@ -18,6 +18,18 @@ Layout
 - ``storage``    Parquet warehouse writers, exports, summary reports.
 - ``streaming``  Structured Streaming ingestion + event-time windows.
 - ``pipeline``   Orchestrator + CLI (ingest -> validate -> transform -> store).
+
+Importing the package registers it with ``cloudpickle`` to be pickled
+by value, so Python workers run its kernels and UDFs without importing
+it: the code works from any working directory, under any SparkSession
+(not only ``session.get_spark``'s), and on executors where the package
+is not installed.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -23,14 +23,18 @@ which is what makes it oracle-checkable AND safe to scale:
   hash aggregate that partial-aggregates map-side and scales to any
   corpus size.
 - **Deterministic seeding and tie-breaks.** Initial centroids are the
-  K lowest vec_ids; argmin ties break on cluster_id (lexicographic
-  struct min). Lloyd iterations are a fixed count (ITERS), so the
-  logical plan is a static DAG the optimizer sees whole.
-- **Per-row distances stay shuffle-free**: squared distance to each of
-  the K broadcast centroids is a Catalyst higher-order fold over the
-  zipped arrays, fused into the scan stage; the only shuffles are the
-  K-way-keyed centroid aggregates (tiny) and the final argmin combine
-  keyed on vec_id.
+  K lowest vec_ids; argmin ties break to the lowest cluster_id; a
+  cluster that draws no vectors leaves the codebook (the oracle's
+  ``GROUP BY`` never produces it). Lloyd iterations are a fixed count
+  (ITERS).
+- **Centroids live on the driver** (K x DIM doubles, the MLlib shape):
+  training runs eagerly while a query BUILDS its plan — one seed
+  collect plus one job per round, each the map-side-combined Arrow
+  partials kernel of ``pq._driver_lloyd_sub`` (flat k-means is its
+  one-subspace case; see the lloyd_arrow docstring for the exactness
+  argument). Plan-only consumers must expect those jobs. Assignment is
+  the map-only Arrow argmin (``lloyd_arrow.assign_rows``): no join and
+  no shuffle per vector.
 
 SemDeDup (Abbas et al. 2023): semantic dedup = cluster the corpus,
 then pairwise-compare only WITHIN clusters — the published recipe for
@@ -41,108 +45,23 @@ the lowest vec_id of each high-cosine group per cluster.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table, widen_if_narrow
 from ..registry import register
 from .dedup import _EMB_CORPUS_CTE, _emb_corpus, EMB_NEARDUP_THRESHOLD
+from .lloyd_arrow import assign_rows
 
 K = 8
 ITERS = 2
 DIM = 64
 FX = "1000000.0"  # fixed-point scale for exact centroid accumulation
 
-# Hold Lloyd-round centroids driver-side (K x DIM doubles) instead of as
-# an ever-deepening DataFrame lineage. Off-switch for A/B path-equality
-# verification, mirroring dedup.FAST_CC_EDGE_CAP.
-DRIVER_CENTROIDS = (
-    os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_CENTROIDS", "1") != "0"
-)
-
 
 # --------------------------------------------------------------------------
 # Shared Spark-side building blocks.
 # --------------------------------------------------------------------------
-def _sq_dist() -> F.Column:
-    return F.aggregate(
-        F.zip_with("emb", "cemb", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _assign(corpus: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest centroid per vector (ties -> lowest cluster_id)."""
-    scored = corpus.crossJoin(F.broadcast(cent)).withColumn("dist", _sq_dist())
-    best = scored.groupBy("vec_id").agg(
-        F.min(F.struct("dist", "cluster_id")).alias("m"),
-        F.first("emb").alias("emb"),
-    )
-    return best.select(
-        "vec_id",
-        "emb",
-        F.col("m.cluster_id").alias("cluster_id"),
-        F.col("m.dist").alias("dist"),
-    )
-
-
-def _update(assigned: DataFrame) -> DataFrame:
-    """Recompute centroids via exact fixed-point integer sums."""
-    per_dim = assigned.select(
-        "cluster_id", F.posexplode("emb").alias("d", "v")
-    ).groupBy("cluster_id", "d").agg(
-        F.sum(F.floor(F.col("v") * F.lit(1000000.0) + F.lit(0.5)).cast("bigint")).alias("fx"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    return per_dim.groupBy("cluster_id").agg(
-        F.sort_array(F.collect_list(F.struct("d", "fx"))).alias("ds"),
-        F.max("cnt").alias("cnt"),
-    ).select(
-        "cluster_id",
-        F.expr(f"transform(ds, s -> s.fx / ({FX} * cnt))").alias("cemb"),
-    )
-
-
-def _materialize_centroids(cent: DataFrame) -> DataFrame:
-    """Collect the K-row centroid relation and re-emit it as a local
-    literal relation.
-
-    Centroids are dimension-sized (K x DIM doubles, K <= 8 here), so
-    holding them on the driver is the standard distributed-k-means
-    shape (Spark MLlib keeps centers driver-side for the same reason).
-    Use it where a trained centroid relation is REFERENCED MORE THAN
-    ONCE (pq._codebook: codes assignment + ADC table) — a pure
-    DataFrame chain re-executes the whole training DAG per reference.
-    Do NOT use it inside a single-consumer Lloyd loop: there the pure
-    chain executes once as one pipelined job, and per-round collects
-    only add driver round-trips (measured: elbow 4.2 s pure vs 5.7 s
-    materialized at sf0.1). Values are bit-identical: the collected
-    doubles round-trip exactly (IEEE 754 over Arrow/Py4J), verified by
-    the path-equality test in tests/test_cc_hybrid.py.
-
-    Gated on DRIVER_CENTROIDS (SPARK_GRAFT_KMEANS_DRIVER_CENTROIDS env,
-    default on) so the pure DataFrame chain remains one switch away for
-    A/B verification — same pattern as dedup.FAST_CC_EDGE_CAP.
-
-    EAGER CONTRACT: the collect() here runs at DataFrame-CONSTRUCTION
-    time, so registered query builders that route through it
-    (sim_pq_adc_knn, sim_ivf_kmeans_knn, sim_ivfpq_knn, and the
-    distortion/recall variants) execute the full k-means training jobs
-    while merely BUILDING their plan. Plan-only consumers (plan-shape
-    tests, tools/scan_audit.py) must expect Spark jobs — and any
-    training-time runtime error — during construction for these
-    queries. Set SPARK_GRAFT_KMEANS_DRIVER_CENTROIDS=0 to get fully
-    lazy plans back.
-    """
-    if not DRIVER_CENTROIDS:
-        return cent
-    rows = cent.collect()
-    return cent.sparkSession.createDataFrame(rows, schema=cent.schema)
-
-
 def _fmt_double(x: float) -> str:
     """A SQL literal that parses to exactly this double in Spark and
     DuckDB (17 significant digits round-trip; the exponent form parses
@@ -168,99 +87,29 @@ def _cb_sql(cents: list[tuple[int, list[float]]]) -> tuple[str, str]:
 
 
 def _dists_sql(cb: str, col: str) -> str:
-    """Per-centroid squared-L2 distance array: the IDENTICAL
-    `aggregate(zip_with(...))` fold the DataFrame `_assign`/`_sq_dist`
-    path evaluates — same lambda, same 0.0 seed, same left-to-right
-    order — mapped over the literal codebook instead of crossJoin'd
-    rows. Bit-exact by construction; zero joins, zero shuffles."""
+    """Per-centroid squared-L2 distance array: the
+    `aggregate(zip_with(...))` fold — (a - b) * (a - b) summed
+    left to right from 0.0 — mapped over a literal codebook. The order
+    lloyd_arrow.dists_exact and the DuckDB twins' list_reduce follow;
+    zero joins, zero shuffles."""
     return (
         f"transform({cb}, ce -> aggregate(zip_with({col}, ce, "
         "(a, b) -> (a - b) * (a - b)), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))"
     )
 
 
-def _assign_exprs(
-    cents: list[tuple[int, list[float]]], col: str = "emb"
-) -> tuple[F.Column, F.Column]:
-    """(cluster_id, dist) argmin Columns over driver-side centroids.
-
-    `array_position(ds, array_min(ds))` takes the FIRST index holding
-    the minimum — in ascending cluster_id order that is exactly the
-    `row_number() OVER (ORDER BY dist, cluster_id) = 1` /
-    `min(struct(dist, cluster_id))` tie rule of the DataFrame path.
-    Distances are always >= +0.0 (sums of squares), so the -0.0 vs 0.0
-    equality corner cannot arise. The whole assignment is map-only:
-    no crossJoin row multiplication, no vec_id-keyed shuffle."""
-    cents = sorted(cents, key=lambda t: t[0])
-    cb, ids = _cb_sql(cents)
-    ds = _dists_sql(cb, col)
-    cid = F.expr(
-        f"element_at({ids}, CAST(array_position({ds}, array_min({ds})) AS INT))"
-    )
-    dist = F.expr(f"array_min({ds})")
-    return cid, dist
-
-
-def _rebuild_cents(rows) -> list[tuple[int, list[float]]]:
-    """(cid, d, fx, cnt) partials -> new centroid doubles, with the
-    IDENTICAL `fx / (1000000.0 * cnt)` IEEE division the DataFrame
-    `_update` evaluates (bigint fx sums are exact, so the doubles are
-    bit-equal under any partitioning)."""
-    acc: dict[int, dict[int, tuple[int, int]]] = {}
-    for r in rows:
-        acc.setdefault(r.cid, {})[r.d] = (r.fx, r.cnt)
-    return [
-        (
-            c,
-            [acc[c][d][0] / (1000000.0 * acc[c][d][1]) for d in sorted(acc[c])],
-        )
-        for c in sorted(acc)
-    ]
-
-
 def _driver_lloyd(
     corpus: DataFrame, iters: int, seed_max: int
 ) -> list[tuple[int, list[float]]]:
-    """Exact Lloyd rounds with dimension-sized state held driver-side.
+    """Exact Lloyd rounds over (vec_id, emb) rows, seeded from
+    vec_id < seed_max: the one-subspace case of pq._driver_lloyd_sub.
+    The caller's corpus itself is persisted, not the (vec_id, s, se)
+    projection, so the rounds and the caller's later assignment of the
+    same corpus all read one cache."""
+    from .pq import _driver_lloyd_sub
 
-    Each round is ONE narrow Spark job: the vectorized Arrow argmin +
-    per-(cluster, dim) fixed-point partial sums (lloyd_arrow module —
-    map-side combining, partitions x K x DIM rows shuffled, <= K x DIM
-    rows collected). Bit-equal to the pure DataFrame chain (see
-    lloyd_arrow docstring for the exactness argument), asserted by
-    tests/test_kmeans_literal_parity.py. Replaces, per round, a K-way
-    crossJoin + full-corpus vec_id-keyed shuffle (emb payload) + a
-    two-level centroid aggregate whose distance expression was an
-    interpreted CodegenFallback lambda fold: guide §2.4 (remove
-    shuffles) + §4.2 (vectorize the per-row kernel)."""
-    from .lloyd_arrow import lloyd_partials
-
-    corpus = corpus.persist()
-    seed = (
-        corpus.filter(F.col("vec_id") < seed_max)
-        .select(F.col("vec_id").cast("int").alias("cid"), "emb")
-        .collect()
-    )
-    cents = sorted((r.cid, [float(v) for v in r.emb]) for r in seed)
-    for _ in range(iters):
-        cents = _rebuild_cents(lloyd_partials(corpus, cents))
-    return cents
-
-
-def _assign_fast(
-    corpus: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    with_emb: bool = True,
-) -> DataFrame:
-    """Map-only assignment against driver-side centroids — same output
-    relation as `_assign(corpus, cent)` (vec_id[, emb], cluster_id,
-    dist), with zero joins and zero shuffles. Pass with_emb=False when
-    the consumer does not need the vectors back: mapInArrow is opaque
-    to column pruning, so unneeded columns must be dropped explicitly
-    (guide §4.1)."""
-    from .lloyd_arrow import assign_rows
-
-    return assign_rows(corpus, cents, with_emb=with_emb)
+    sub = corpus.persist().select("vec_id", F.lit(0).alias("s"), F.col("emb").alias("se"))
+    return _driver_lloyd_sub(sub, iters, seed_max)[0]
 
 
 def _centroids_df(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
@@ -277,31 +126,10 @@ def _centroids_df(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
     )
 
 
-def _kmeans_centroids(corpus: DataFrame) -> DataFrame:
-    """ITERS Lloyd rounds from the deterministic seed; returns the final
-    centroid relation (cluster_id, cemb)."""
-    if DRIVER_CENTROIDS:
-        return _centroids_df(
-            corpus.sparkSession, _driver_lloyd(corpus, ITERS, K)
-        )
-    # A/B fallback (SPARK_GRAFT_KMEANS_DRIVER_CENTROIDS=0): the pure
-    # DataFrame chain — referenced once downstream, the whole
-    # ITERS-round DAG executes as one pipelined job.
-    corpus = corpus.persist()
-    cent = corpus.filter(F.col("vec_id") < K).select(
-        F.col("vec_id").cast("int").alias("cluster_id"), F.col("emb").alias("cemb")
-    )
-    for _ in range(ITERS):
-        cent = _update(_assign(corpus, cent))
-    return cent
-
-
 def _kmeans(corpus: DataFrame) -> DataFrame:
     """ITERS Lloyd rounds from the deterministic seed; returns the final
     assignment (vec_id, emb, cluster_id, dist)."""
-    if DRIVER_CENTROIDS:
-        return _assign_fast(corpus, _driver_lloyd(corpus, ITERS, K))
-    return _assign(corpus, _kmeans_centroids(corpus))
+    return assign_rows(corpus, _driver_lloyd(corpus, ITERS, K))
 
 
 # --------------------------------------------------------------------------
@@ -488,7 +316,7 @@ def emb_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop, no cross join.
     """
     # fin feeds both sides of the within-cluster pair join AND the
-    # final keep/drop join — persist or the whole Lloyd chain re-runs
+    # final keep/drop join — persist or the assignment kernel re-runs
     # per reference.
     fin = _kmeans(_emb_corpus(spark, sf_dir)).persist()
     norm = F.sqrt(
@@ -593,17 +421,11 @@ def sim_ivf_kmeans_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb"),
         )
     )
-    # trained centroids are referenced TWICE (corpus assignment + query
-    # probe scoring), so they are materialized driver-side (K x DIM,
-    # the multi-reference case _materialize_centroids exists for);
-    # _kmeans_centroids persists the corpus the rounds iterate over.
-    if DRIVER_CENTROIDS:
-        cents = _driver_lloyd(corpus, ITERS, K)
-        cent = _centroids_df(spark, cents)
-        fin = _assign_fast(corpus, cents)
-    else:
-        cent = _materialize_centroids(_kmeans_centroids(corpus))
-        fin = _assign(corpus, cent)
+    # the driver-side centroids serve both the corpus assignment and the
+    # query probe scoring (as a K-row relation)
+    cents = _driver_lloyd(corpus, ITERS, K)
+    cent = _centroids_df(spark, cents)
+    fin = assign_rows(corpus, cents)
 
     q = corpus.filter(F.col("vec_id") < IVF_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
@@ -714,20 +536,9 @@ def sim_ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = widen_if_narrow(raw.filter(F.col("vec_id") % 4 < 3))
     newb = raw.filter(F.col("vec_id") % 4 == 3)
-    if DRIVER_CENTROIDS:
-        cents = _driver_lloyd(corpus, ITERS, _IVF_INC_SEED_MAX)
-        return _assign_fast(newb, cents).select(
-            "vec_id", "cluster_id", F.round("dist", 6).alias("sq_dist")
-        )
-    cent = corpus.filter(F.col("vec_id") < _IVF_INC_SEED_MAX).select(
-        F.col("vec_id").cast("int").alias("cluster_id"), F.col("emb").alias("cemb")
-    )
-    for _ in range(ITERS):
-        cent = _update(_assign(corpus, cent))
-    return _assign(newb, cent).select(
-        "vec_id",
-        "cluster_id",
-        F.round("dist", 6).alias("sq_dist"),
+    cents = _driver_lloyd(corpus, ITERS, _IVF_INC_SEED_MAX)
+    return assign_rows(newb, cents).select(
+        "vec_id", "cluster_id", F.round("dist", 6).alias("sq_dist")
     )
 
 
@@ -780,39 +591,28 @@ def emb_silhouette_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster mean simplified silhouette after the exact Lloyd
     rounds (centroid-based: s = 1 - sqrt(d_own)/sqrt(d_next)).
 
-    Scale shape: one broadcast-centroid scoring pass (map-side, fused
-    into the scan), one vec_id-keyed combine that keeps only the two
-    smallest of the K distances, one K-row hash aggregate. No pairwise
-    joins, no windows over unbounded inputs."""
+    Scale shape: one literal-centroid scoring pass (map-side, fused
+    into the scan) that keeps only the two smallest of the K distances,
+    then one K-row hash aggregate. No joins, no windows."""
     corpus = widen_if_narrow(
         table(spark, sf_dir, "embeddings").select(
             "vec_id",
             F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb"),
         )
     )
-    if DRIVER_CENTROIDS:
-        # Map-only top-2: the K centroid distances are a literal-unrolled
-        # struct array sorted per row — same (dist, cluster_id) struct
-        # ordering as sort_array(collect_list(...)), minus the K-way
-        # crossJoin and the vec_id-keyed shuffle of K structs per vector.
-        cents = _driver_lloyd(corpus, ITERS, K)
-        cb, ids = _cb_sql(sorted(cents))
-        ds = _dists_sql(cb, "emb")
-        top2 = corpus.select(
-            "vec_id",
-            F.expr(
-                f"slice(sort_array(zip_with({ds}, {ids}, "
-                "(d, c) -> named_struct('dist', d, 'cluster_id', c))), 1, 2)"
-            ).alias("t"),
-        )
-    else:
-        cent = _kmeans_centroids(corpus)
-        scored = corpus.crossJoin(F.broadcast(cent)).withColumn("dist", _sq_dist())
-        top2 = scored.groupBy("vec_id").agg(
-            F.slice(
-                F.sort_array(F.collect_list(F.struct("dist", "cluster_id"))), 1, 2
-            ).alias("t")
-        )
+    # Map-only top-2: the K centroid distances are a literal struct
+    # array sorted per row under the (dist, cluster_id) order — no
+    # crossJoin, no vec_id-keyed shuffle.
+    cents = _driver_lloyd(corpus, ITERS, K)
+    cb, ids = _cb_sql(sorted(cents))
+    ds = _dists_sql(cb, "emb")
+    top2 = corpus.select(
+        "vec_id",
+        F.expr(
+            f"slice(sort_array(zip_with({ds}, {ids}, "
+            "(d, c) -> named_struct('dist', d, 'cluster_id', c))), 1, 2)"
+        ).alias("t"),
+    )
     d1 = F.col("t")[0]["dist"]
     d2 = F.col("t")[1]["dist"]
     pair = top2.select(
@@ -844,9 +644,9 @@ def emb_silhouette_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-vector squared distances quantize to 1e-9 fixed point before
 # the BIGINT inertia sum, so the curve is shuffle-order invariant.
 #
-# Scale shape: sum over k of the k-assignment crossJoins (broadcast
-# centroid side, K <= 8 rows) — ~1.75x the single k=8 training cost;
-# every reduction is map-side-combining.
+# Scale shape: one training and one map-only assignment pass per k
+# (K <= 8 centroids) — ~1.75x the single k=8 training cost; every
+# reduction is map-side-combining.
 # --------------------------------------------------------------------------
 ELBOW_KS = (2, 4, 8)
 ELBOW_FX = 10**9
@@ -893,35 +693,19 @@ def ml_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     ).persist()
-    fins: dict[int, DataFrame] = {}
-    if DRIVER_CENTROIDS:
-        # The per-k Lloyd trainings are independent job chains — run
-        # them from a small thread pool so k=4's rounds back-fill the
-        # executor slots k=2's tail leaves idle (guide §2.6 overlap
-        # independent jobs). Results are keyed by k, so scheduling
-        # order cannot affect the output.
-        from concurrent.futures import ThreadPoolExecutor
+    # The per-k Lloyd trainings are independent job chains — run them
+    # from a small thread pool so k=4's rounds back-fill the executor
+    # slots k=2's tail leaves idle. Results are keyed by k, so
+    # scheduling order cannot affect the output.
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=len(ELBOW_KS)) as pool:
-            cents_by_k = list(
-                pool.map(lambda k: _driver_lloyd(corpus, ITERS, k), ELBOW_KS)
-            )
-        fins = {
-            k: _assign_fast(corpus, c)
-            for k, c in zip(ELBOW_KS, cents_by_k)
-        }
+    with ThreadPoolExecutor(max_workers=len(ELBOW_KS)) as pool:
+        cents_by_k = list(
+            pool.map(lambda k: _driver_lloyd(corpus, ITERS, k), ELBOW_KS)
+        )
     per_k = []
-    for k in ELBOW_KS:
-        if DRIVER_CENTROIDS:
-            fin = fins[k]
-        else:
-            cent = corpus.filter(F.col("vec_id") < k).select(
-                F.col("vec_id").cast("int").alias("cluster_id"),
-                F.col("emb").alias("cemb"),
-            )
-            for _ in range(ITERS):
-                cent = _update(_assign(corpus, cent))
-            fin = _assign(corpus, cent)
+    for k, cents in zip(ELBOW_KS, cents_by_k):
+        fin = assign_rows(corpus, cents)
         fx = F.sum(
             F.floor(F.col("dist") * ELBOW_FX).cast("bigint")
         )

@@ -548,8 +548,8 @@ def opt_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      integers so both engines branch identically).
 #
 # EAGER CONTRACT: the two saveAsTable calls run Spark jobs at
-# DataFrame-construction time (same documented contract as
-# clustering._materialize_centroids). Tables land under the session's
+# DataFrame-construction time (the same contract as the k-means
+# trainings in operators/clustering.py). Tables land under the session's
 # spark-warehouse dir with fixed names, overwritten per call.
 # --------------------------------------------------------------------------
 EV_BUCKETS = 16

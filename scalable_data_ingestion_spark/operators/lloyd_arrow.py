@@ -1,30 +1,39 @@
 """Vectorized Arrow kernels for the Lloyd / nearest-centroid family.
 
-Round-10 optimization (guide §4.2 "do the heavy lifting in native code
-inside the UDF", §2.4 "remove shuffles outright"): the k-means /
-PQ / RQ assignment used to be a K-way crossJoin (or broadcast join +
-per-(vec_id, s) ranking window) whose squared-distance expression was a
-Catalyst higher-order-function fold — CodegenFallback, i.e. interpreted
-per array element. A Lloyd round cost two wide shuffles and ~1 s of
-interpreted lambda evaluation at sf0.1; the same work is a handful of
-NumPy vector ops per Arrow batch.
+Two kernels serve every codebook the engine trains (flat k-means, the
+IVF coarse quantizer, PQ subspace codebooks, both RQ levels):
 
-Bit-exactness contract (what makes this a pure optimization):
+- ``sub_lloyd_partials`` — one Lloyd round's per-(s, cid, d) fixed-point
+  sums over ``(vec_id, s, se)`` rows, where ``s`` keys an independent
+  codebook. Flat k-means is the single-subspace case (``s = 0``,
+  ``se`` = the whole vector). ``pq._driver_lloyd_sub`` is the one
+  driver loop around it.
+- ``assign_rows`` — map-only nearest-centroid assignment of
+  ``(vec_id, emb)`` rows against one driver-side codebook.
+
+Why NumPy: the same squared-distance fold as a Catalyst higher-order
+function is CodegenFallback, interpreted per array element; here it is
+a handful of vector ops per Arrow batch.
+
+Bit-exactness contract:
 - The fold `aggregate(zip_with(x, c, (a,b) -> (a-b)*(a-b)), 0.0, +)`
-  accumulates left-to-right over dimensions. The kernel reproduces the
-  identical IEEE operation order with an explicit loop over d:
+  accumulates left-to-right over dimensions. ``dists_exact`` reproduces
+  the identical IEEE operation order with an explicit loop over d:
   ``acc += (C[:,d]-X[:,d])**2`` — per (row, centroid) the same
   add-one-dimension-at-a-time sequence ((-z)*(-z) == z*z exactly, and
   0.0 + t == t because every term is a non-negative square).
 - Ties: centroid rows are ordered by ascending cid and ``np.argmin``
-  returns the FIRST minimum — exactly the `ORDER BY dist, cid` /
-  `min(struct(dist, cid))` rule.
+  returns the FIRST minimum — exactly the `ORDER BY dist, cid` rule of
+  the DuckDB twins and the FIRST-index rule of `pq._sub_assign_exprs`.
 - Update sums: ``floor(v * 1e6 + 0.5)`` per component as float64 (exact
   below 2**53), cast to int64, summed exactly; the new centroid double
-  is ``fx / (1000000.0 * cnt)`` — one IEEE division, computed on the
-  driver with the same expression the DataFrame `_update` used.
-Asserted end-to-end by tests/test_kmeans_literal_parity.py (literal vs
-pure-DataFrame chain, collected floats compared bit-exactly) and by the
+  is ``fx / (1000000.0 * cnt)`` — one IEEE division on the driver, the
+  same expression the DuckDB twins evaluate. A cluster that drew no
+  rows (cnt = 0) is dropped from the next round's codebook, as the
+  twins' ``GROUP BY`` drops it.
+Pinned by tests/test_properties.py::test_lloyd_kernels_match_catalyst
+(``assign_rows`` bit for bit against the `pq._sub_assign_exprs` literal
+fold; partial sums against Python integers) and end to end by the
 DuckDB oracle parity of every consumer query.
 
 Scale shape: the partials kernel emits K x D fixed-point sums PER TASK
@@ -44,13 +53,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "dists_exact",
-    "lloyd_partials",
-    "assign_rows",
-    "sub_lloyd_partials",
-    "sub_assign_rows",
-]
+__all__ = ["dists_exact", "assign_rows", "sub_lloyd_partials"]
 
 
 def dists_exact(X: np.ndarray, C: np.ndarray) -> np.ndarray:
@@ -74,63 +77,20 @@ def _cents_np(cents: list[tuple[int, list[float]]]) -> tuple[np.ndarray, np.ndar
     return C, ids
 
 
-def lloyd_partials(corpus: DataFrame, cents: list[tuple[int, list[float]]]) -> list:
-    """One Lloyd round's (cid, d) -> (fx, cnt) sums, collected.
-
-    corpus: (vec_id, emb). Returns collected rows with columns
-    cid/d/fx/cnt after a partitions x K x D shuffle."""
-    C, ids = _cents_np(cents)
-    K, D = C.shape
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        fx_acc = np.zeros((K, D), dtype=np.int64)
-        cnt_acc = np.zeros(K, dtype=np.int64)
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            X = _emb_matrix(b, "emb", D)
-            a = np.argmin(dists_exact(X, C), axis=0)
-            FXm = np.floor(X * 1e6 + 0.5).astype(np.int64)
-            for k in range(K):
-                m = a == k
-                if m.any():
-                    fx_acc[k] += FXm[m].sum(axis=0)
-                    cnt_acc[k] += int(m.sum())
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.repeat(ids, D), type=pa.int32()),
-                pa.array(np.tile(np.arange(D, dtype=np.int32), K), type=pa.int32()),
-                pa.array(fx_acc.reshape(-1), type=pa.int64()),
-                pa.array(np.repeat(cnt_acc, D), type=pa.int64()),
-            ],
-            names=["cid", "d", "fx", "cnt"],
-        )
-
-    return (
-        corpus.select("emb")
-        .mapInArrow(kernel, "cid int, d int, fx long, cnt long")
-        .groupBy("cid", "d")
-        .agg(F.sum("fx").alias("fx"), F.sum("cnt").alias("cnt"))
-        .collect()
-    )
-
-
 def assign_rows(
     corpus: DataFrame,
     cents: list[tuple[int, list[float]]],
     with_emb: bool = True,
-    top2: bool = False,
 ) -> DataFrame:
     """Map-only nearest-centroid assignment: (vec_id, [emb,] cluster_id,
-    dist[, dist2]) — dist2 (top2=True) is the second-smallest centroid
-    distance under the (dist, cid) order, for the silhouette."""
+    dist). Pass with_emb=False when the consumer does not need the
+    vectors back: mapInArrow is opaque to column pruning, so unneeded
+    columns must be dropped explicitly."""
     C, ids = _cents_np(cents)
-    K, D = C.shape
-    out_cols = ["vec_id"] + (["emb"] if with_emb else [])
+    D = C.shape[1]
+    names = ["vec_id"] + (["emb"] if with_emb else []) + ["cluster_id", "dist"]
     schema = "vec_id long" + (", emb array<double>" if with_emb else "")
     schema += ", cluster_id int, dist double"
-    if top2:
-        schema += ", dist2 double"
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -144,31 +104,21 @@ def assign_rows(
                 arrays.append(b.column(b.schema.get_field_index("emb")))
             arrays.append(pa.array(ids[a], type=pa.int32()))
             arrays.append(pa.array(dm[a, np.arange(dm.shape[1])], type=pa.float64()))
-            names = out_cols + ["cluster_id", "dist"]
-            if top2:
-                # second-smallest under (dist, cid): stable sort along the
-                # cid-ascending axis preserves the tie rule.
-                order = np.argsort(dm, axis=0, kind="stable")
-                arrays.append(
-                    pa.array(
-                        dm[order[1], np.arange(dm.shape[1])], type=pa.float64()
-                    )
-                )
-                names = names + ["dist2"]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    cols = ["vec_id", "emb"]
-    return corpus.select(*cols).mapInArrow(kernel, schema)
+    return corpus.select("vec_id", "emb").mapInArrow(kernel, schema)
 
 
 def sub_lloyd_partials(sub: DataFrame, cents_by_s: dict) -> list:
-    """Subspace-keyed Lloyd round partials over (vec_id, s, se) rows:
-    (s, cid, d) -> (fx, cnt), collected."""
+    """One Lloyd round over (s, se) rows against the per-subspace
+    codebooks ``cents_by_s`` (s -> [(cid, centroid)]): the collected
+    (s, cid, d) -> (fx, cnt) sums over the full codebook grid, with
+    fx = 0, cnt = 0 for a centroid no row chose."""
     ss = sorted(cents_by_s)
-    Cs = {}
-    for s in ss:
-        Cs[s] = _cents_np(cents_by_s[s])
-    dims = {s: Cs[s][0].shape[1] for s in ss}
+    Cs = {s: _cents_np(cents_by_s[s]) for s in ss}
+    # all subspace widths are equal within one relation (PQ: 8,
+    # flat k-means and RQ: 64)
+    D_all = Cs[ss[0]][0].shape[1]
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         fx_acc = {s: np.zeros(Cs[s][0].shape, dtype=np.int64) for s in ss}
@@ -177,11 +127,7 @@ def sub_lloyd_partials(sub: DataFrame, cents_by_s: dict) -> list:
             if b.num_rows == 0:
                 continue
             sv = np.asarray(b.column(b.schema.get_field_index("s")), dtype=np.int64)
-            se = b.column(b.schema.get_field_index("se"))
-            # all subspace widths are equal within one relation (PQ: 8,
-            # RQ: 64) — flatten() compacts to row-major (N, D)
-            D_all = dims[ss[0]]
-            X_all = np.asarray(se.flatten(), dtype=np.float64).reshape(-1, D_all)
+            X_all = _emb_matrix(b, "se", D_all)
             for s in ss:
                 m = sv == s
                 if not m.any():
@@ -222,47 +168,4 @@ def sub_lloyd_partials(sub: DataFrame, cents_by_s: dict) -> list:
         .groupBy("s", "cid", "d")
         .agg(F.sum("fx").alias("fx"), F.sum("cnt").alias("cnt"))
         .collect()
-    )
-
-
-def sub_assign_rows(sub: DataFrame, cents_by_s: dict) -> DataFrame:
-    """Map-only subspace assignment: (vec_id, s, se, cid, dist)."""
-    ss = sorted(cents_by_s)
-    Cs = {s: _cents_np(cents_by_s[s]) for s in ss}
-    dims = {s: Cs[s][0].shape[1] for s in ss}
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            sv = np.asarray(b.column(b.schema.get_field_index("s")), dtype=np.int64)
-            se = b.column(b.schema.get_field_index("se"))
-            D_all = dims[ss[0]]
-            X_all = np.asarray(se.flatten(), dtype=np.float64).reshape(-1, D_all)
-            cid_out = np.zeros(b.num_rows, dtype=np.int32)
-            dist_out = np.zeros(b.num_rows, dtype=np.float64)
-            for s in ss:
-                m = sv == s
-                if not m.any():
-                    continue
-                idx = np.nonzero(m)[0]
-                X = X_all[idx]
-                C, ids = Cs[s]
-                dm = dists_exact(X, C)
-                a = np.argmin(dm, axis=0)
-                cid_out[idx] = ids[a]
-                dist_out[idx] = dm[a, np.arange(dm.shape[1])]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(b.schema.get_field_index("vec_id")),
-                    b.column(b.schema.get_field_index("s")),
-                    se,
-                    pa.array(cid_out, type=pa.int32()),
-                    pa.array(dist_out, type=pa.float64()),
-                ],
-                names=["vec_id", "s", "se", "cid", "dist"],
-            )
-
-    return sub.select("vec_id", "s", "se").mapInArrow(
-        kernel, "vec_id long, s int, se array<double>, cid int, dist double"
     )

@@ -24,14 +24,15 @@ Scale notes (billions of vectors):
 - The permutation is a 64-row broadcast mapping; applying it is a
   map-only array shuffle per vector. Energy ranking is one
   dimension-keyed aggregate (64 groups) with map-side partial sums.
-- RQ training reuses the PQ Lloyd kernel on (vec_id, s=0, 64-dim)
-  rows: one shuffle per level keyed on (s, cid); residuals are a
-  broadcast-codebook map pass. Encoded RQ storage is 2 bytes/vector at
-  K=16 — the coarse+residual codes the IVF-RQ index stores.
+- RQ training runs the one Lloyd loop (pq._driver_lloyd_sub) on
+  (vec_id, s=0, 64-dim) rows: one shuffle per round keyed on (s, cid);
+  residuals are a literal-codebook map pass. Encoded RQ storage is 2
+  bytes/vector at K=16 — the coarse+residual codes the IVF-RQ index
+  stores.
 
-Spark side reuses operators/pq.py's dimension-agnostic Lloyd kernel
-(_assign/_update/_codebook work on any ``se`` width); the DuckDB twins
-parametrize the same CTE algebra at SUBDIM=64 where pq.py hard-codes 8.
+Spark side reuses operators/pq.py's width-agnostic training, encoding
+and distortion rollup (any ``se`` width); the DuckDB twins parametrize
+the same CTE algebra at SUBDIM=64 where pq.py hard-codes 8.
 """
 
 from __future__ import annotations
@@ -41,16 +42,14 @@ from pyspark.sql import functions as F
 
 from ..catalog import table, widen_if_narrow
 from ..registry import register
-from . import clustering
 from .pq import (
     PQ_SUBDIM,
     PQ_SUBS,
     _centroid_case_sql,
     _codebook,
+    _distortion,
     _driver_lloyd_sub,
-    _sqdist,
     _sub_assign_exprs,
-    _sub_centroids_df,
     _sub_corpus,
     _sub_corpus_sql,
     _duck_codebook,
@@ -60,39 +59,6 @@ _FX = "1000000.0"
 DIM = 64
 RQ_K = 16  # centroids per RQ level
 RQ_ITERS = 1  # unrolled Lloyd rounds per level (init: first RQ_K vectors)
-
-
-# --------------------------------------------------------------------------
-# Shared distortion rollup (Spark): per-subspace exact fixed-point MSE.
-# --------------------------------------------------------------------------
-def _distortion(sub: DataFrame, cent: DataFrame, codes: DataFrame) -> DataFrame:
-    if "dist" in codes.columns:
-        # literal-codebook path (pq._codebook): dist to the assigned
-        # codeword is already on codes — one aggregate, no re-joins.
-        dists = codes.select(
-            "s",
-            F.floor(F.col("dist") * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("dfx"),
-        )
-    else:
-        dists = (
-            codes.join(sub, ["vec_id", "s"])
-            .join(F.broadcast(cent), ["s", "cid"])
-            .withColumn("dist", _sqdist())
-            .select(
-                "s",
-                F.floor(F.col("dist") * F.lit(1000000.0) + F.lit(0.5))
-                .cast("bigint")
-                .alias("dfx"),
-            )
-        )
-    return dists.groupBy(F.col("s").cast("int").alias("s")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-        F.round(
-            F.sum("dfx") / (F.lit(float(_FX)) * F.count(F.lit(1))), 6
-        ).alias("mean_sq_dist"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -206,23 +172,23 @@ def sim_opq_permute_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     The two trainings are INDEPENDENT (they share only the raw
     embeddings scan), so they run from a 2-thread pool (guide §2.6
     overlap-independent-jobs; the clustering.ml_kmeans_elbow pattern):
-    on the driver-centroid path each `_codebook` is a seed-collect +
-    one Arrow-partials job, and the second training's jobs back-fill
-    executors left idle by the first's collect round-trips. Results
-    are unchanged — the branches touch disjoint relations."""
+    each `_codebook` is a seed-collect + one Arrow-partials job, and the
+    second training's jobs back-fill executors left idle by the first's
+    collect round-trips. Results are unchanged — the branches touch
+    disjoint relations."""
 
     def branch_identity() -> DataFrame:
         ident = _sub_corpus(spark, sf_dir)
-        cent, codes = _codebook(ident)
-        return _distortion(ident, cent, codes).select(
+        _cent, codes = _codebook(ident)
+        return _distortion(codes).select(
             F.lit("identity").alias("variant"), "s", "n_vectors", "mean_sq_dist"
         )
 
     def branch_balanced() -> DataFrame:
         ex = _exploded_dims(spark, sf_dir)
         balanced = _permuted_sub(ex, _balanced_perm(ex))
-        centb, codesb = _codebook(balanced)
-        return _distortion(balanced, centb, codesb).select(
+        _centb, codesb = _codebook(balanced)
+        return _distortion(codesb).select(
             F.lit("balanced").alias("variant"), "s", "n_vectors", "mean_sq_dist"
         )
 
@@ -250,61 +216,31 @@ def _full_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", F.lit(0).cast("int").alias("s"), "se").persist()
 
 
-def _rq_codebook(corpus: DataFrame, seed_cents=None):
-    """One RQ level: Lloyd rounds at K=RQ_K, init = first RQ_K vectors
-    (or the caller-provided ``seed_cents``, skipping the seed-collect
-    job — see sim_rq_distortion's driver-side level-2 seeding).
+def _rq_codebook(corpus: DataFrame, seed_cents):
+    """One RQ level: Lloyd rounds at K=RQ_K from the caller's
+    driver-side ``seed_cents`` (see sim_rq_distortion's seeding).
 
-    Returns (cent, codes, cents) — `cents` is the driver-side codebook
-    (None on the DataFrame fallback path); on the literal path `codes`
-    carries `se` and `dist` so residual/distortion consumers are
-    join-free."""
-    if clustering.DRIVER_CENTROIDS:
-        cents = _driver_lloyd_sub(corpus, RQ_ITERS, RQ_K, seed_cents=seed_cents)
-        cid_col, dist_col = _sub_assign_exprs(cents)
-        codes = corpus.select(
-            "vec_id", "s", "se", cid_col.alias("cid"), dist_col.alias("dist")
-        )
-        return _sub_centroids_df(corpus.sparkSession, cents), codes, cents
-
-    from .clustering import _materialize_centroids
-    from .pq import _assign, _update
-
-    cent = corpus.filter(F.col("vec_id") < RQ_K).select(
-        "s", F.col("vec_id").cast("int").alias("cid"), F.col("se").alias("ce")
+    Returns (codes, cents): `codes` carries `se` and `dist`, so the
+    residual and distortion consumers are join-free; `cents` is the
+    driver-side codebook."""
+    cents = _driver_lloyd_sub(corpus, RQ_ITERS, RQ_K, seed_cents=seed_cents)
+    cid_col, dist_col = _sub_assign_exprs(cents)
+    codes = corpus.select(
+        "vec_id", "s", "se", cid_col.alias("cid"), dist_col.alias("dist")
     )
-    for _ in range(RQ_ITERS):
-        cent = _materialize_centroids(_update(_assign(corpus, cent)))
-    codes = _assign(corpus, cent).select("vec_id", "s", "cid")
-    return cent, codes, None
+    return codes, cents
 
 
-def _residuals(
-    corpus: DataFrame, cent: DataFrame, codes: DataFrame, cents=None
-) -> DataFrame:
-    if cents is not None:
-        # literal path: the assigned centroid is a CASE-on-cid literal
-        # array — the residual is one map stage, no joins (codes
-        # already carries se). Same `a - b` zip as the join path.
-        case_sql = _centroid_case_sql(next(iter(cents.values())))  # RQ: s == 0 only
-        return (
-            codes.select(
-                "vec_id",
-                "s",
-                F.expr(f"zip_with(se, {case_sql}, (a, b) -> a - b)").alias("se"),
-            )
-            .persist()
-        )
-    return (
-        codes.join(corpus, ["vec_id", "s"])
-        .join(F.broadcast(cent), ["s", "cid"])
-        .select(
-            "vec_id",
-            "s",
-            F.expr("zip_with(se, ce, (a, b) -> a - b)").alias("se"),
-        )
-        .persist()
-    )
+def _residuals(codes: DataFrame, cents) -> DataFrame:
+    """Residual of each vector against its assigned centroid, a
+    CASE-on-cid literal array: one map stage, no joins (codes already
+    carries se)."""
+    case_sql = _centroid_case_sql(cents[0])  # RQ: s == 0 only
+    return codes.select(
+        "vec_id",
+        "s",
+        F.expr(f"zip_with(se, {case_sql}, (a, b) -> a - b)").alias("se"),
+    ).persist()
 
 
 def _duck_sqd64(a: str, b: str) -> str:
@@ -429,35 +365,16 @@ def sim_rq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the coarse codebook, (level 2) the residuals after the second-level
     codebook — exact fixed-point means throughout."""
     corpus = _full_corpus(spark, sf_dir)
-    if clustering.DRIVER_CENTROIDS:
-        # One seed-collect job feeds BOTH levels: level 2's seeds (the
-        # first RQ_K residual vectors) are exact driver-side residuals
-        # of level 1's seeds, so the level-2 seed job — a full
-        # materialization pass over the residual relation — disappears
-        # (guide §1.2 job-cadence; round-11 verdict #1).
-        seed_rows = (
-            corpus.filter(F.col("vec_id") < RQ_K)
-            .select("vec_id", "se")
-            .collect()
-        )
-        seed1 = {
-            0: sorted(
-                (int(r.vec_id), [float(v) for v in r.se]) for r in seed_rows
-            )
-        }
-        cent1, codes1, cents1 = _rq_codebook(corpus, seed_cents=seed1)
-        resid = _residuals(corpus, cent1, codes1, cents1)
-        seed2 = {
-            0: [
-                (cid, _assign_residual_py(vals, cents1[0]))
-                for cid, vals in seed1[0]
-            ]
-        }
-        cent2, codes2, _cents2 = _rq_codebook(resid, seed_cents=seed2)
-    else:
-        cent1, codes1, cents1 = _rq_codebook(corpus)
-        resid = _residuals(corpus, cent1, codes1, cents1)
-        cent2, codes2, _cents2 = _rq_codebook(resid)
+    # One seed-collect job feeds BOTH levels: level 2's seeds (the first
+    # RQ_K residual vectors) are exact driver-side residuals of level 1's
+    # seeds, so level 2 needs no seed job (a full pass over the residual
+    # relation).
+    seed_rows = corpus.filter(F.col("vec_id") < RQ_K).select("vec_id", "se").collect()
+    seed1 = {0: sorted((int(r.vec_id), [float(v) for v in r.se]) for r in seed_rows)}
+    codes1, cents1 = _rq_codebook(corpus, seed1)
+    resid = _residuals(codes1, cents1)
+    seed2 = {0: [(cid, _assign_residual_py(vals, cents1[0])) for cid, vals in seed1[0]]}
+    codes2, _cents2 = _rq_codebook(resid, seed2)
 
     def norm_level(df: DataFrame, level: int) -> DataFrame:
         sq = F.expr(
@@ -474,7 +391,7 @@ def sim_rq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     lvl2 = (
-        _distortion(resid, cent2, codes2)
+        _distortion(codes2)
         .select(
             F.lit(2).cast("int").alias("level"),
             "n_vectors",

@@ -53,13 +53,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table, widen_if_narrow
 from ..registry import register
-from . import clustering
-from .clustering import (
-    _cb_sql,
-    _dists_sql,
-    _fmt_double,
-    _materialize_centroids,
-)
+from .clustering import _cb_sql, _dists_sql, _fmt_double
 
 PQ_SUBS = 8  # subspaces
 PQ_SUBDIM = 8  # dims per subspace (8 x 8 = 64)
@@ -185,49 +179,18 @@ def _sqdist() -> F.Column:
     )
 
 
-def _assign(sub: DataFrame, cent: DataFrame) -> DataFrame:
-    scored = sub.join(F.broadcast(cent), "s").withColumn("dist", _sqdist())
-    wa = W.partitionBy("vec_id", "s").orderBy("dist", "cid")
-    return (
-        scored.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "s", "se", "cid")
-    )
-
-
-def _update(assigned: DataFrame) -> DataFrame:
-    per_dim = (
-        assigned.select("s", "cid", F.posexplode("se").alias("d", "v"))
-        .groupBy("s", "cid", "d")
-        .agg(
-            F.sum(
-                F.floor(F.col("v") * F.lit(1000000.0) + F.lit(0.5)).cast("bigint")
-            ).alias("fx"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
-    return (
-        per_dim.groupBy("s", "cid")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("d", "fx"))).alias("ds"),
-            F.max("cnt").alias("cnt"),
-        )
-        .select(
-            "s", "cid", F.expr(f"transform(ds, t -> t.fx / ({_FX} * cnt))").alias("ce")
-        )
-    )
-
-
 SubCents = dict[int, list[tuple[int, list[float]]]]
 
 
 def _sub_assign_exprs(cents_by_s: SubCents, col: str = "se"):
     """(cid, dist) argmin Columns against driver-side per-subspace
-    codebooks: a CASE on the subspace key dispatches to that subspace's
-    literal-unrolled distance array (clustering._assign_exprs semantics
-    per branch — FIRST index of the min, ties to lowest cid, distances
-    always >= +0.0). Map-only: replaces the per-round broadcast join +
-    (vec_id, s)-keyed row_number window of the DataFrame `_assign`."""
+    codebooks, each a literal array of exact doubles (`_cb_sql`) scored
+    by the `_dists_sql` fold. `array_position(ds, array_min(ds))` takes
+    the FIRST index holding the minimum, so over cid-ascending centroids
+    ties go to the lowest cid (the `ORDER BY dist, cid` rule); distances
+    are sums of squares, always >= +0.0, so the -0.0 vs 0.0 equality
+    corner cannot arise. Map-only: no join, no (vec_id, s)-keyed window.
+    lloyd_arrow.assign_rows is pinned bit for bit against this fold."""
 
     def branch(cents: list[tuple[int, list[float]]]) -> tuple[str, str]:
         cents = sorted(cents, key=lambda t: t[0])
@@ -258,23 +221,28 @@ def _sub_assign_exprs(cents_by_s: SubCents, col: str = "se"):
 def _driver_lloyd_sub(
     sub: DataFrame, iters: int, k: int, seed_cents: SubCents | None = None
 ) -> SubCents:
-    """Per-subspace exact Lloyd rounds with the (s, cid)-keyed codebook
-    held driver-side (dimension-sized: S x K rows). Each round is ONE
-    narrow job: the vectorized Arrow argmin + per-(s, cid, d)
-    fixed-point partial sums (lloyd_arrow.sub_lloyd_partials — map-side
-    combined, partitions x S x K x D rows shuffled), with the new
-    centroid doubles computed on the driver via the IDENTICAL
-    `fx / (1000000.0 * cnt)` division the DataFrame `_update` uses.
-    Bit-equal to the DataFrame chain (see the lloyd_arrow module
-    docstring for the IEEE-order argument; pinned end-to-end by
-    tests/test_kmeans_literal_parity.py).
+    """The one exact Lloyd loop: ``iters`` rounds over (vec_id, s, se)
+    rows with the (s, cid)-keyed codebook held driver-side
+    (dimension-sized: S x K rows). Flat k-means is the one-subspace case
+    (clustering._driver_lloyd), RQ levels are 64-wide single subspaces,
+    PQ trains all S codebooks at once.
 
-    ``seed_cents`` lets a caller that already holds the seed rows
-    driver-side (e.g. the RQ level-2 training, whose seeds are exact
-    residuals of level-1's seeds) skip the seed-collect job."""
+    Seeds are the rows with vec_id < k, keyed cid = vec_id. Each round
+    is ONE narrow job: lloyd_arrow.sub_lloyd_partials (Arrow argmin +
+    per-(s, cid, d) fixed-point sums, map-side combined, partitions x
+    S x K x D rows shuffled); the new centroid doubles are
+    ``fx / (1000000.0 * cnt)`` on the driver, the DuckDB twins'
+    division (see the lloyd_arrow docstring for the exactness argument).
+    A centroid no row chose leaves the codebook, as the twins'
+    ``GROUP BY`` drops it.
+
+    ``sub`` is scanned once per round plus once for the seeds: callers
+    pass a persisted relation. ``seed_cents`` lets a caller that already
+    holds the seed rows driver-side (the RQ level-2 training, whose
+    seeds are exact residuals of level-1's seeds) skip the seed-collect
+    job."""
     from .lloyd_arrow import sub_lloyd_partials
 
-    sub = sub.persist()
     if seed_cents is None:
         seed = (
             sub.filter(F.col("vec_id") < k)
@@ -289,10 +257,9 @@ def _driver_lloyd_sub(
     else:
         cents = seed_cents
     for _ in range(iters):
-        rows = sub_lloyd_partials(sub, cents)
         acc: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-        for r in rows:
-            if r.cnt > 0:  # kernel emits the full (s, cid, d) grid;
+        for r in sub_lloyd_partials(sub, cents):
+            if r.cnt > 0:
                 acc.setdefault((r.s, r.cid), {})[r.d] = (r.fx, r.cnt)
         cents = {}
         for (s, cid) in sorted(acc):
@@ -333,29 +300,29 @@ def _centroid_case_sql(cents: list[tuple[int, list[float]]], key: str = "cid") -
 def _codebook(sub: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Train the per-subspace codebooks; returns (centroids, codes).
 
-    `codes` additionally carries `se` and `dist` (distance to the
-    assigned codeword) on the literal path so distortion consumers skip
-    the codes->sub and codes->cent re-joins entirely; Catalyst prunes
-    the extra columns wherever they are unused."""
-    if clustering.DRIVER_CENTROIDS:
-        cents = _driver_lloyd_sub(sub, PQ_ITERS, PQ_K)
-        cid_col, dist_col = _sub_assign_exprs(cents)
-        codes = sub.select(
-            "vec_id", "s", "se", cid_col.alias("cid"), dist_col.alias("dist")
+    `codes` carries `se` and `dist` (distance to the assigned codeword)
+    so distortion consumers need no codes->sub / codes->cent re-joins;
+    Catalyst prunes the extra columns wherever they are unused."""
+    cents = _driver_lloyd_sub(sub, PQ_ITERS, PQ_K)
+    cid_col, dist_col = _sub_assign_exprs(cents)
+    codes = sub.select("vec_id", "s", "se", cid_col.alias("cid"), dist_col.alias("dist"))
+    return _sub_centroids_df(sub.sparkSession, cents), codes
+
+
+def _distortion(codes: DataFrame) -> DataFrame:
+    """Per-subspace exact fixed-point mean of the codes' `dist`: (s,
+    n_vectors, mean_sq_dist)."""
+    dfx = F.floor(F.col("dist") * F.lit(1000000.0) + F.lit(0.5)).cast("bigint")
+    return (
+        codes.select("s", dfx.alias("dfx"))
+        .groupBy(F.col("s").cast("int").alias("s"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
+            F.round(F.sum("dfx") / (F.lit(float(_FX)) * F.count(F.lit(1))), 6).alias(
+                "mean_sq_dist"
+            ),
         )
-        return _sub_centroids_df(sub.sparkSession, cents), codes
-    cent = sub.filter(F.col("vec_id") < PQ_K).select(
-        "s", F.col("vec_id").cast("int").alias("cid"), F.col("se").alias("ce")
     )
-    for _ in range(PQ_ITERS):
-        # Codebooks are dimension-sized (SUBSPACES x PQ_K rows), so they
-        # are held driver-side between rounds (see
-        # clustering._materialize_centroids) — without this, `cent` is
-        # referenced by BOTH the codes assignment and the ADC table, and
-        # each reference re-executes the whole training chain.
-        cent = _materialize_centroids(_update(_assign(sub, cent)))
-    codes = _assign(sub, cent).select("vec_id", "s", "cid")
-    return cent, codes
 
 
 def _adc_table(sub: DataFrame, cent: DataFrame) -> DataFrame:
@@ -447,13 +414,7 @@ IVFPQ_PROBES = 2
 def _register_ivfpq() -> None:
     """Registered via a builder because the oracle embeds clustering.py's
     coarse-quantizer CTE body (deferred import avoids a module cycle)."""
-    from .clustering import (
-        ITERS as IVF_ITERS,
-        _assign as ivf_assign,
-        _duck_kmeans_body,
-        _update as ivf_update,
-        _RAW_CORPUS_CTE,
-    )
+    from .clustering import ITERS as IVF_ITERS, _duck_kmeans_body, _RAW_CORPUS_CTE
 
     oracle = f"""
     WITH {_RAW_CORPUS_CTE},
@@ -512,23 +473,12 @@ def _register_ivfpq() -> None:
             )
         ).persist()
         # coarse quantizer (full-vector k-means from clustering.py)
-        from .clustering import K as IVF_K
-        from .clustering import _assign_fast, _centroids_df, _driver_lloyd
+        from .clustering import K as IVF_K, _centroids_df, _driver_lloyd
+        from .lloyd_arrow import assign_rows
 
         def _coarse():
-            if clustering.DRIVER_CENTROIDS:
-                ccents = _driver_lloyd(corpus, IVF_ITERS, IVF_K)
-                return _centroids_df(spark, ccents), _assign_fast(corpus, ccents)
-            cent = corpus.filter(F.col("vec_id") < IVF_K).select(
-                F.col("vec_id").cast("int").alias("cluster_id"),
-                F.col("emb").alias("cemb"),
-            )
-            for _ in range(IVF_ITERS):
-                cent = ivf_update(ivf_assign(corpus, cent))
-            # trained coarse centroids are referenced twice (corpus
-            # assignment + query probe scoring) — materialize driver-side.
-            cent = _materialize_centroids(cent)
-            return cent, ivf_assign(corpus, cent)
+            ccents = _driver_lloyd(corpus, IVF_ITERS, IVF_K)
+            return _centroids_df(spark, ccents), assign_rows(corpus, ccents)
 
         def _fine():
             sub = _sub_corpus(spark, sf_dir)
@@ -618,33 +568,5 @@ _register_ivfpq()
 def sim_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-subspace mean squared quantization error of the trained PQ
     codebooks (exact fixed-point means)."""
-    sub = _sub_corpus(spark, sf_dir)
-    cent, codes = _codebook(sub)
-    if "dist" in codes.columns:
-        # literal path: dist to the assigned codeword is already on the
-        # codes relation — the distortion rollup is one aggregate, no
-        # codes->sub / codes->cent re-joins.
-        dists = codes.select(
-            "s",
-            F.floor(F.col("dist") * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("dfx"),
-        )
-    else:
-        dists = (
-            codes.join(sub, ["vec_id", "s"])
-            .join(F.broadcast(cent), ["s", "cid"])
-            .withColumn("dist", _sqdist())
-            .select(
-                "s",
-                F.floor(F.col("dist") * F.lit(1000000.0) + F.lit(0.5))
-                .cast("bigint")
-                .alias("dfx"),
-            )
-        )
-    return dists.groupBy(F.col("s").cast("int").alias("s")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-        F.round(F.sum("dfx") / (F.lit(float(_FX)) * F.count(F.lit(1))), 6).alias(
-            "mean_sq_dist"
-        ),
-    )
+    _cent, codes = _codebook(_sub_corpus(spark, sf_dir))
+    return _distortion(codes)

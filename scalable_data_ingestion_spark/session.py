@@ -12,17 +12,15 @@ Scale notes (100 TB / 1000-executor posture):
 - UTC session timezone so timestamp semantics are stable and match the
   DuckDB oracle.
 - Arrow enabled for any toPandas / pandas-UDF boundary.
-- The package's functions are pickled by value, so Python workers run
-  kernels and UDFs without importing the package: the code works from
-  any working directory and on executors where it is not installed.
+
+The package pickles its functions by value (see ``__init__``), so
+kernels and UDFs run under this session or any other one.
 """
 
 from __future__ import annotations
 
 import os
-import sys
 
-from pyspark import cloudpickle
 from pyspark.sql import SparkSession
 
 
@@ -32,7 +30,6 @@ def default_parallelism() -> int:
 
 def get_spark(app_name: str = "scalable_data_ingestion_spark") -> SparkSession:
     """Build (or fetch) the tuned SparkSession."""
-    cloudpickle.register_pickle_by_value(sys.modules[__package__])
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -38,18 +38,9 @@ def registry_plans(spark, sf_dir):
     pinned to the audited defaults (the test_scan_gate._pin_plan_shape_
     toggles contract) for the builds."""
     from scalable_data_ingestion_spark import registry
-    from scalable_data_ingestion_spark.operators import (
-        clustering,
-        dedup,
-        prefixjoin,
-    )
+    from scalable_data_ingestion_spark.operators import dedup, prefixjoin
 
-    saved = (
-        clustering.DRIVER_CENTROIDS,
-        dedup.FAST_CC_EDGE_CAP,
-        prefixjoin.PJ_CANDIDATE_CAP,
-    )
-    clustering.DRIVER_CENTROIDS = True
+    saved = (dedup.FAST_CC_EDGE_CAP, prefixjoin.PJ_CANDIDATE_CAP)
     dedup.FAST_CC_EDGE_CAP = 200_000
     prefixjoin.PJ_CANDIDATE_CAP = 10_000_000
     plans: dict = {}
@@ -66,9 +57,5 @@ def registry_plans(spark, sf_dir):
                 errors[name] = f"{type(exc).__name__}: {exc}"
             spark.catalog.clearCache()
     finally:
-        (
-            clustering.DRIVER_CENTROIDS,
-            dedup.FAST_CC_EDGE_CAP,
-            prefixjoin.PJ_CANDIDATE_CAP,
-        ) = saved
+        dedup.FAST_CC_EDGE_CAP, prefixjoin.PJ_CANDIDATE_CAP = saved
     return plans, errors

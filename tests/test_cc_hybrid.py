@@ -66,33 +66,3 @@ def test_min_label_components_fast_path_matches_loop(spark, monkeypatch):
     dist = sorted((r["node"], r["lab"]) for r in entity.min_label_components(pairs).collect())
     assert fast == dist
     assert dict(fast)[31] == 10 and dict(fast)[5] == 2
-
-
-def test_materialize_centroids_roundtrip_exact(spark):
-    """_materialize_centroids must be value- and schema-invisible: the
-    collected doubles round-trip bit-exactly into the literal relation."""
-    from scalable_data_ingestion_spark.operators import clustering
-
-    src = spark.createDataFrame(
-        [(0, [0.1 + 0.2, 1e-300, -0.0]), (1, [3.14159265358979, 2.0**-52, 7.0])],
-        schema="cluster_id int, cemb array<double>",
-    )
-    out = clustering._materialize_centroids(src)
-    assert out.schema == src.schema
-    assert sorted(map(tuple, out.collect())) == sorted(
-        map(tuple, src.collect())
-    )
-
-
-def test_pq_driver_codebook_path_equality(spark, sf_dir, monkeypatch):
-    """PQ codebook training uses the same driver-side materialization;
-    codes and ADC distances must match the pure-DataFrame chain."""
-    from scalable_data_ingestion_spark.operators import clustering, pq
-
-    def snap():
-        return sorted(map(tuple, pq.sim_pq_adc_knn(spark, sf_dir).collect()))
-
-    fast = snap()
-    monkeypatch.setattr(clustering, "DRIVER_CENTROIDS", False)
-    assert snap() == fast
-    assert fast

@@ -1,62 +1,72 @@
-"""Literal-centroid Lloyd path == pure-DataFrame chain, bit-exactly.
+"""Flat k-means edge cases pinned against the DuckDB oracle's rules.
 
-Round-10 optimization: every Lloyd round used to be a K-way crossJoin +
-a full-corpus vec_id-keyed shuffle (emb payload) + a two-level centroid
-aggregate; the literal path holds the dimension-sized codebook on the
-driver and assigns via a literal-unrolled argmin expression (map-only),
-so a round is one narrow aggregate. These tests pin the contract that
-the rewrite is value-INVISIBLE: identical rows (floats bit-exact via
-collect) with DRIVER_CENTROIDS on (literal) and off (DataFrame chain),
-for one representative consumer of each rewritten kernel.
+Every codebook trains through one driver Lloyd loop
+(``pq._driver_lloyd_sub``) and one Arrow partials kernel; the kernels'
+bit-exactness is pinned by
+``tests/test_properties.py::test_lloyd_kernels_match_catalyst``. These
+tests pin the two rules the oracle CTEs encode that random inputs
+rarely hit: argmin ties go to the lowest cluster id, and a cluster that
+draws no vectors leaves the codebook.
 """
 
 from __future__ import annotations
 
-import pytest
+import duckdb
+import numpy as np
+import pyarrow as pa
 
 from scalable_data_ingestion_spark.operators import clustering
-
-
-def _snap(df):
-    return sorted(map(tuple, df.collect()))
-
-
-@pytest.mark.parametrize(
-    "query",
-    [
-        "ml_kmeans_elbow",            # per-k driver Lloyd + map-only inertia
-        "emb_kmeans_assign",          # _kmeans -> _assign_fast
-        "emb_silhouette_by_cluster",  # map-only literal top-2
-        "sim_ivf_incremental_assign",  # non-contiguous seed ids (0,1,2,4,..)
-        "sim_ivf_kmeans_knn",         # centroids consumed as df AND literal
-        "sim_pq_distortion",          # pq subspace codebooks + carried dist
-        "sim_rq_distortion",          # 64-wide RQ levels + literal residuals
-        "sim_opq_permute_eval",       # permuted layout through pq._codebook
-    ],
-)
-def test_literal_path_matches_dataframe_chain(spark, sf_dir, monkeypatch, query):
-    from scalable_data_ingestion_spark import registry
-
-    fn = registry.queries()[query]
-    lit = _snap(fn(spark, sf_dir))
-    spark.catalog.clearCache()
-    monkeypatch.setattr(clustering, "DRIVER_CENTROIDS", False)
-    chain = _snap(fn(spark, sf_dir))
-    spark.catalog.clearCache()
-    assert lit == chain
-    assert lit, f"{query} returned no rows at the smoke SF"
+from scalable_data_ingestion_spark.operators.lloyd_arrow import assign_rows
 
 
 def test_assign_exprs_tie_breaks_to_lowest_cluster_id(spark):
     # Two identical centroids: the argmin must pick the lower id, the
-    # row_number()/min(struct) tie rule of the DataFrame path.
+    # `ORDER BY dist, cluster_id` tie rule of the oracle.
     corpus = spark.createDataFrame(
         [(0, [1.0, 2.0]), (1, [3.0, 4.0])], "vec_id long, emb array<double>"
     )
     cents = [(3, [1.0, 2.0]), (1, [1.0, 2.0])]
     out = {
         r.vec_id: (r.cluster_id, r.dist)
-        for r in clustering._assign_fast(corpus, cents).collect()
+        for r in assign_rows(corpus, cents).collect()
     }
     assert out[0] == (1, 0.0)
     assert out[1][0] == 1  # equidistant -> lowest cid
+
+
+def test_empty_cluster_drops_out_like_the_oracle(spark):
+    """Seeds 0 and 1 are the same vector, so every vector ties to
+    cluster 0 and cluster 1 is empty after the first round. The oracle's
+    GROUP BY drops it from the codebook; the Spark loop must do the same
+    rather than divide by the zero count."""
+    rng = np.random.default_rng(7)
+    vecs = rng.standard_normal((24, clustering.DIM)).round(6)
+    vecs[1] = vecs[0]
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    corpus = spark.createDataFrame(rows, "vec_id long, emb array<double>")
+
+    got = sorted(
+        (r.vec_id, r.cluster_id, r.dist)
+        for r in clustering._kmeans(corpus).collect()
+    )
+    spark.catalog.clearCache()
+
+    con = duckdb.connect()
+    con.register(
+        "corpus_src",
+        pa.table(
+            {
+                "vec_id": pa.array([i for i, _ in rows], pa.int64()),
+                "emb": pa.array([e for _, e in rows], pa.list_(pa.float64())),
+            }
+        ),
+    )
+    want = sorted(
+        con.execute(
+            f"""WITH corpus AS (SELECT vec_id, emb FROM corpus_src),
+            {clustering._duck_kmeans_body()}
+            SELECT vec_id, cluster_id, dist FROM fin"""
+        ).fetchall()
+    )
+    assert got == want
+    assert 1 not in {cid for _, cid, _ in got}

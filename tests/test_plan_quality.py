@@ -455,20 +455,10 @@ def test_fertility_is_map_side_single_pass(spark, sf_dir):
 
 def test_silhouette_centroids_broadcast(spark, sf_dir):
     """The centroid-scoring pass never shuffles or joins the corpus:
-    with driver-held centroids (round-10 default) the K-row codebook is
-    a literal expression — zero join nodes; with the pure-DataFrame
-    chain (SPARK_GRAFT_KMEANS_DRIVER_CENTROIDS=0) it must at least
-    broadcast the K-row relation."""
-    from scalable_data_ingestion_spark.operators import clustering
-
+    the driver-held K-row codebook is a literal expression, so the plan
+    has no join of any kind."""
     p = plan(registry.QUERIES["emb_silhouette_by_cluster"](spark, sf_dir), "simple")
-    assert "CartesianProduct" not in p, p
-    assert "SortMergeJoin" not in p, p
-    if clustering.DRIVER_CENTROIDS:
-        # literal codebook: no join of any kind in the scoring pass
-        assert "Join" not in p, p
-    else:
-        assert "BroadcastNestedLoopJoin" in p, p  # K-row centroid cross join
+    assert "Join" not in p, p
 
 
 def test_grid_outliers_density_broadcasts(spark, sf_dir):

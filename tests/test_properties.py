@@ -252,6 +252,101 @@ def test_cosine_block_matches_catalyst(spark, data):
         assert np.float64(r.c).tobytes() == block[r.qi, r.vi].tobytes(), (r, block)
 
 
+# Lloyd-kernel components: signed zeros, the unit range and float32
+# magnitudes up to 1e6, inside the fixed-point domain (|v| * 1e6 < 2**53)
+# where floor(v * 1e6 + 0.5) is exact.
+LLOYD_F32 = st.one_of(
+    st.sampled_from([0.0, -0.0]),
+    st.floats(min_value=-1.0, max_value=1.0, width=32),
+    st.floats(min_value=-1e6, max_value=1e6, width=32),
+)
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.data())
+def test_lloyd_kernels_match_catalyst(spark, data):
+    """The two Lloyd kernels against independent references, on up to
+    three codebooks per example (one per subspace s):
+
+    - lloyd_arrow.assign_rows == the `pq._sub_assign_exprs` literal fold
+      PQ/RQ encode with: cluster id and distance bit for bit. Centroids
+      are often copies of corpus rows or of each other (exact ties, which
+      go to the lowest cid) and their cids are non-contiguous.
+    - lloyd_arrow.sub_lloyd_partials == the per-(s, cid, d) Python-integer
+      sums of floor(v * 1e6 + 0.5) and member counts over that
+      assignment, zero rows included for centroids nobody chose."""
+    import math
+    from functools import reduce
+
+    import numpy as np
+    from pyspark.sql import DataFrame
+
+    from scalable_data_ingestion_spark.operators.lloyd_arrow import (
+        assign_rows,
+        sub_lloyd_partials,
+    )
+    from scalable_data_ingestion_spark.operators.pq import _sub_assign_exprs
+
+    dim = data.draw(st.integers(min_value=1, max_value=16))
+    vec = st.lists(LLOYD_F32, min_size=dim, max_size=dim)
+    rows, cents_by_s = [], {}
+    for s in range(data.draw(st.integers(min_value=1, max_value=3))):
+        xs = data.draw(st.lists(vec, min_size=1, max_size=12))
+        cids = data.draw(
+            st.lists(st.integers(0, 999), min_size=1, max_size=5, unique=True)
+        )
+        cents = []
+        for cid in cids:
+            copy = st.sampled_from(xs + [ce for _, ce in cents])
+            cents.append((cid, data.draw(st.one_of(vec, copy))))
+        cents_by_s[s] = cents
+        rows += [(len(rows) + i, s, x) for i, x in enumerate(xs)]
+    # from pandas: a local relation, no Python RDD behind every scan
+    sub = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["vec_id", "s", "se"]),
+        "vec_id long, s int, se array<double>",
+    )
+
+    cid_col, dist_col = _sub_assign_exprs(cents_by_s)
+    want = {
+        (r.s, r.vec_id): (r.cid, r.dist)
+        for r in sub.select("vec_id", "s", cid_col.alias("cid"), dist_col.alias("dist"))
+        .collect()
+    }
+    arrow = reduce(
+        DataFrame.unionByName,
+        [
+            assign_rows(
+                sub.filter(F.col("s") == s).select("vec_id", F.col("se").alias("emb")),
+                cents,
+                with_emb=False,
+            ).withColumn("s", F.lit(s))
+            for s, cents in cents_by_s.items()
+        ],
+    )
+    got = {(r.s, r.vec_id): (r.cluster_id, r.dist) for r in arrow.collect()}
+    assert got.keys() == want.keys()
+    for key, (cid, dist) in want.items():
+        assert got[key][0] == cid, (key, got[key], want[key])
+        assert np.float64(got[key][1]).tobytes() == np.float64(dist).tobytes(), key
+
+    ref = {
+        (s, cid, d): (0, 0)
+        for s, cents in cents_by_s.items()
+        for cid, _ in cents
+        for d in range(dim)
+    }
+    for vec_id, s, x in rows:
+        cid = want[(s, vec_id)][0]
+        for d, v in enumerate(x):
+            fx, cnt = ref[(s, cid, d)]
+            ref[(s, cid, d)] = (fx + math.floor(v * 1e6 + 0.5), cnt + 1)
+    parts = {
+        (r.s, r.cid, r.d): (r.fx, r.cnt) for r in sub_lloyd_partials(sub, cents_by_s)
+    }
+    assert parts == ref
+
+
 def test_loo_candidate_kernel_matches_pairs(spark, sf_dir):
     """ml_knn_loo_accuracy's Arrow candidate kernel == the all-pairs
     broadcast formulation it replaced (round-11): identical 1-NN per
