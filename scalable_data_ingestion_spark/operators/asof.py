@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
+from ..session import local_frame
 
 
 def asof_join(
@@ -161,9 +162,10 @@ _PROMOS = (
 )
 def rj_orders_in_promo_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
-    promos = orders.sparkSession.createDataFrame(
+    promos = local_frame(
+        spark,
         [(n, f"{s} 00:00:00", f"{e} 23:59:59") for n, s, e in _PROMOS],
-        ["promo", "start_d", "end_d"],
+        "promo string, start_d string, end_d string",
     ).select(
         "promo",
         F.col("start_d").cast("timestamp"),

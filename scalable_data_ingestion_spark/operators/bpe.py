@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
+from ..session import local_frame
 
 BPE_ROUNDS = 6
 _SEP = "chr(31)"  # unit separator: never appears in corpus tokens
@@ -132,8 +133,6 @@ def tok_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The first {BPE_ROUNDS} BPE merge rules learned from the corpus
     word-count table: (round, left, right, merged symbol, weighted
     pair count)."""
-    from pyspark.sql import types as T
-
     docs = table(spark, sf_dir, "documents")
     words = (
         docs.select(
@@ -163,16 +162,12 @@ def tok_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wc",
             F.regexp_replace("s", _merge_pattern(a, b), _merge_repl(a, b)).alias("s"),
         ).persist()
-    schema = T.StructType(
-        [
-            T.StructField("round", T.IntegerType(), False),
-            T.StructField("left_sym", T.StringType(), True),
-            T.StructField("right_sym", T.StringType(), True),
-            T.StructField("merged", T.StringType(), True),
-            T.StructField("pair_count", T.LongType(), True),
-        ]
+    return local_frame(
+        spark,
+        bests,
+        "round int not null, left_sym string, right_sym string, merged string, "
+        "pair_count bigint",
     )
-    return spark.createDataFrame(bests, schema=schema)
 
 
 _BPE_COMPRESSION_ORACLE = f"""

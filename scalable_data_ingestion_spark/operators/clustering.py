@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table, widen_if_narrow
 from ..registry import register
+from ..session import local_frame
 from .dedup import _EMB_CORPUS_CTE, _emb_corpus, EMB_NEARDUP_THRESHOLD
 from .lloyd_arrow import assign_rows
 
@@ -113,16 +114,10 @@ def _driver_lloyd(
 
 
 def _centroids_df(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("cluster_id", T.IntegerType(), False),
-            T.StructField("cemb", T.ArrayType(T.DoubleType(), False), False),
-        ]
-    )
-    return spark.createDataFrame(
-        [(c, list(ce)) for c, ce in sorted(cents)], schema=schema
+    return local_frame(
+        spark,
+        [(c, list(ce)) for c, ce in sorted(cents)],
+        "cluster_id int not null, cemb array<double> not null",
     )
 
 

@@ -34,13 +34,13 @@ Python UDFs anywhere.
 from __future__ import annotations
 
 import functools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table, widen_if_narrow
 from ..registry import register
+from ..session import local_frame
 
 SHINGLE_N = 3
 MINHASH_K = 12  # total min-hash functions
@@ -576,7 +576,7 @@ def dd_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # component; union-by-min keeps the minimum as root) and the pytest
 # suite asserts their equality on the same pair set.
 # --------------------------------------------------------------------------
-FAST_CC_EDGE_CAP = int(os.environ.get("SPARK_GRAFT_FAST_CC_CAP", "200000"))
+FAST_CC_EDGE_CAP = 200_000
 
 
 def _components_unionfind(pair_rows) -> list[tuple[int, int, int]]:
@@ -712,8 +712,8 @@ def dd_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r["doc_a"], r["doc_b"]) for r in pairs.collect()
         )
         pairs.unpersist()
-        return spark.createDataFrame(
-            rows, schema="doc_id long, component_id long, component_size long"
+        return local_frame(
+            spark, rows, "doc_id long, component_id long, component_size long"
         )
     out = _components_distributed(spark, pairs)
     pairs.unpersist()

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ._branches import explode_branches
 from ..registry import register
+from ..session import local_frame
 
 # MAD -> sigma-equivalent scale for a normal distribution.
 MAD_K = 1.4826
@@ -1247,8 +1248,8 @@ def dq_benford_second_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor("o_totalprice").cast("bigint").cast("string"), 2, 1
         ).alias("digit")
     ).agg(F.count(F.lit(1)).alias("n"))
-    expected = orders.sparkSession.createDataFrame(
-        list(_BENFORD2.items()), "digit string, benford_frac double"
+    expected = local_frame(
+        spark, list(_BENFORD2.items()), "digit string, benford_frac double"
     )
     total = digits.agg(F.sum("n").alias("t"))
     return (

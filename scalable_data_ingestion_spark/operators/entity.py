@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
+from ..session import local_frame
 from ..plans.stats import fz_party_name_matches
 from .dedup import FAST_CC_EDGE_CAP, _components_unionfind
 
@@ -64,9 +65,8 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
         rows = _components_unionfind((r[0], r[1]) for r in pairs.collect())
         spark = pairs.sparkSession
         pairs.unpersist()
-        return spark.createDataFrame(
-            [(node, lab) for node, lab, _size in rows],
-            schema="node long, lab long",
+        return local_frame(
+            spark, [(node, lab) for node, lab, _size in rows], "node long, lab long"
         )
     edges = (
         pairs.union(pairs.select(F.col("b"), F.col("a")))

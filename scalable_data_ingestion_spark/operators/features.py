@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
+from ..session import local_frame
 
 FEAT_LABEL_HORIZON_DAYS = 7
 FEAT_SHORT_WINDOW_DAYS = 7
@@ -411,7 +412,7 @@ def feat_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
         .persist()
     )
-    widths = spark.createDataFrame([(w,) for w in HASH_WIDTHS], "w bigint")
+    widths = local_frame(spark, [(w,) for w in HASH_WIDTHS], "w bigint")
     h = F.conv(F.substring(F.md5(F.col("key_str")), 1, 8), 16, 10).cast(
         "bigint"
     )

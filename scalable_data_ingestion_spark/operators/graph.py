@@ -2375,8 +2375,9 @@ def gr_link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a pytest property asserts independence + maximality + convergence.
 #
 # Scale shape: each round is one adjacency join + groupBy (Pregel
-# superstep) over the TRI_MIN_SUP-bounded edge list; per-round results
-# are persisted so the lineage stays one-superstep deep.
+# superstep) over the persisted TRI_MIN_SUP-bounded edge list; each
+# round reads the previous one once, so the plan is a chain of
+# MIS_ROUNDS supersteps that runs as one lazy query.
 # --------------------------------------------------------------------------
 MIS_ROUNDS = 8
 
@@ -2446,65 +2447,59 @@ def gr_greedy_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("sup") >= TRI_MIN_SUP)
         .select("pa", "pb")
     )
-    adj = _symmetrize(edges, "pa", "pb", "node", "nbr").persist()
-    state = (
-        adj.select("node")
-        .distinct()
-        .select(
-            "node",
-            F.md5(F.col("node").cast("string")).alias("prio"),
-            F.lit(0).alias("status"),
+    # Every node is also its own neighbor, so one join per round brings
+    # a node's own status and its neighbors' into one group, and each
+    # round reads the previous state once: the plan grows one join per
+    # round, with no lineage cut. Priorities are md5(node), recomputed
+    # where compared rather than carried in the state.
+    pairs = (("pa", "pb"), ("pb", "pa"), ("pa", "pa"), ("pb", "pb"))
+    closed = (
+        edges.select(
+            F.explode(
+                F.array(
+                    *(F.struct(F.col(x).alias("node"), F.col(y).alias("nbr")) for x, y in pairs)
+                )
+            ).alias("_e")
         )
+        .select("_e.*")
+        .distinct()
         .persist()
     )
+    prio = F.md5(F.col("node").cast("string"))
+    t_prio = F.md5(F.col("nbr").cast("string"))
+    other = F.col("nbr") != F.col("node")
+    state = closed.select("node").distinct().select("node", F.lit(0).alias("status"))
     for _ in range(MIS_ROUNDS):
-        t = state.select(
-            F.col("node").alias("nbr"),
-            F.col("prio").alias("t_prio"),
-            F.col("status").alias("t_status"),
-        )
-        # own state rides the adjacency join so the neighbor aggregation
-        # sees (prio_s, status) as grouping keys
+        t = state.select(F.col("node").alias("nbr"), F.col("status").alias("t_status"))
         agg = (
-            adj.join(
-                state.select(
-                    "node", F.col("prio").alias("prio_s"), "status"
-                ),
-                "node",
-            )
-            .join(t, "nbr")
-            .groupBy("node", "prio_s", "status")
+            closed.join(t, "nbr")
+            .groupBy("node")
             .agg(
-                F.max(F.when(F.col("t_status") == 1, 1).otherwise(0)).alias(
+                F.max(F.when(~other, F.col("t_status"))).alias("status"),
+                F.max(F.when(other & (F.col("t_status") == 1), 1).otherwise(0)).alias(
                     "any_in"
                 ),
                 F.max(
                     F.when(
-                        (F.col("t_status") == 0)
+                        other
+                        & (F.col("t_status") == 0)
                         & (
-                            (F.col("t_prio") < F.col("prio_s"))
-                            | (
-                                (F.col("t_prio") == F.col("prio_s"))
-                                & (F.col("nbr") < F.col("node"))
-                            )
+                            (t_prio < prio)
+                            | ((t_prio == prio) & (F.col("nbr") < F.col("node")))
                         ),
                         1,
                     ).otherwise(0)
                 ).alias("smaller_undecided"),
             )
         )
-        # localCheckpoint (entity.py FastSS pattern): state is referenced
-        # TWICE per round (own state + neighbor state), so without a
-        # lineage cut the plan tree doubles every superstep
         state = agg.select(
             "node",
-            F.col("prio_s").alias("prio"),
             F.when(F.col("status") != 0, F.col("status"))
             .when(F.col("any_in") == 1, F.lit(2))
             .when(F.col("smaller_undecided") == 0, F.lit(1))
             .otherwise(F.lit(0))
             .alias("status"),
-        ).localCheckpoint()
+        )
     return state.select("node", F.col("status").cast("int").alias("status"))
 
 

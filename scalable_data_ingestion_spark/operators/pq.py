@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table, widen_if_narrow
 from ..registry import register
+from ..session import local_frame
 from .clustering import _cb_sql, _dists_sql, _fmt_double
 
 PQ_SUBS = 8  # subspaces
@@ -271,21 +272,14 @@ def _driver_lloyd_sub(
 
 
 def _sub_centroids_df(spark, cents_by_s: SubCents) -> DataFrame:
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("s", T.IntegerType(), False),
-            T.StructField("cid", T.IntegerType(), False),
-            T.StructField("ce", T.ArrayType(T.DoubleType(), False), False),
-        ]
-    )
     rows = [
         (int(s), int(c), list(ce))
         for s in sorted(cents_by_s)
         for c, ce in sorted(cents_by_s[s])
     ]
-    return spark.createDataFrame(rows, schema=schema)
+    return local_frame(
+        spark, rows, "s int not null, cid int not null, ce array<double> not null"
+    )
 
 
 def _centroid_case_sql(cents: list[tuple[int, list[float]]], key: str = "cid") -> str:

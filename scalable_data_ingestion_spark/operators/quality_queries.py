@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..quality.metrics import field_profile, quality_scores_df
 from ..registry import register
+from ..session import local_frame
 from .orders_base import BASE_ORDERS_CTE, MESSY_ORDERS_CTE, messy_orders
 
 _ORDER_ID_RE = "^[A-Z]{3}-[0-9]{4}$|^API-[0-9]{4}$"
@@ -236,30 +237,22 @@ def q_profile_stats_messy(spark: SparkSession, sf_dir: str) -> DataFrame:
             aggs.append(F.round(F.avg(F.length(F.col(col))), 6).alias(f"len::{col}"))
     row = df.agg(*aggs).first()
 
-    rows = []
-    for col, kind in _PROFILE_COLS.items():
-        rows.append(
-            {
-                "column_name": col,
-                "null_count": int(row["n"] - row[f"nn::{col}"]),
-                "distinct_count": int(row[f"nd::{col}"]),
-                "min_value": row.asDict().get(f"min::{col}"),
-                "max_value": row.asDict().get(f"max::{col}"),
-                "mean_value": row.asDict().get(f"mean::{col}"),
-                "avg_length": row.asDict().get(f"len::{col}"),
-            }
+    got = row.asDict()
+    rows = [
+        (
+            col,
+            int(got["n"] - got[f"nn::{col}"]),
+            int(got[f"nd::{col}"]),
+            got.get(f"min::{col}"),
+            got.get(f"max::{col}"),
+            got.get(f"mean::{col}"),
+            got.get(f"len::{col}"),
         )
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("column_name", T.StringType()),
-            T.StructField("null_count", T.LongType()),
-            T.StructField("distinct_count", T.LongType()),
-            T.StructField("min_value", T.DoubleType()),
-            T.StructField("max_value", T.DoubleType()),
-            T.StructField("mean_value", T.DoubleType()),
-            T.StructField("avg_length", T.DoubleType()),
-        ]
+        for col in _PROFILE_COLS
+    ]
+    return local_frame(
+        spark,
+        rows,
+        "column_name string, null_count bigint, distinct_count bigint, "
+        "min_value double, max_value double, mean_value double, avg_length double",
     )
-    return spark.createDataFrame(rows, schema)

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
+from ..session import local_frame
 
 PATH_LEN = 5
 TOP_PATHS = 20
@@ -941,17 +942,8 @@ def _mkv_power_iterate(rows: list, rounds: int) -> dict[str, int]:
 
 
 def _mkv_vector_df(spark, u: dict[str, int], col: str):
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("state", T.StringType(), True),
-            T.StructField(col, T.LongType(), True),
-        ]
-    )
-    return spark.createDataFrame(
-        [(s, int(u[s])) for s in sorted(u)], schema=schema
-    )
+    rows = [(s, int(u[s])) for s in sorted(u)]
+    return local_frame(spark, rows, f"state string, {col} bigint")
 
 
 def _mkv_round_sql(i: int) -> str:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
+from ..session import local_frame
 
 GD_ROUNDS = 5
 GD_LR = 0.125  # dyadic
@@ -629,9 +630,7 @@ def ml_ridge_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("s2") * 1.0 / n).alias("m2"),
         (F.col("sy") * 1.0 / n).alias("my"),
     )
-    lambdas = spark.createDataFrame(
-        [(v,) for v in RIDGE_LAMBDAS], "lam double"
-    )
+    lambdas = local_frame(spark, [(v,) for v in RIDGE_LAMBDAS], "lam double")
     det = (F.col("c11") + F.col("lam") * F.col("n")) * (
         F.col("c22") + F.col("lam") * F.col("n")
     ) - F.col("c12") * F.col("c12")

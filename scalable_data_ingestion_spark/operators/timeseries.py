@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ._branches import explode_branches
 from ..registry import register
+from ..session import local_frame
 
 
 @register(
@@ -1073,8 +1074,8 @@ def ts_harmonic_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents")
     )
-    harmonics = spark.createDataFrame(
-        _PGRAM_ROWS, "period int, r int, cos_fx bigint, sin_fx bigint"
+    harmonics = local_frame(
+        spark, _PGRAM_ROWS, "period int, r int, cos_fx bigint, sin_fx bigint"
     )
     joined = daily.join(
         F.broadcast(harmonics), daily.d % harmonics.period == harmonics.r
@@ -1548,7 +1549,7 @@ def ts_hurst_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = bounded_global_rank(daily, [F.col("day")], "idx").select("cents", "idx")
     n = ranked.agg(F.count(F.lit(1)).cast("bigint").alias("n_days"))
-    sizes = spark.createDataFrame([(w,) for w in HURST_SIZES], "w bigint")
+    sizes = local_frame(spark, [(w,) for w in HURST_SIZES], "w bigint")
     bucketed = (
         ranked.crossJoin(F.broadcast(sizes))
         .crossJoin(F.broadcast(n))

@@ -16,6 +16,7 @@ from ..catalog import table
 from ..functions.ranking import take_ordered_ranked
 from ..operators._branches import explode_branches
 from ..registry import register
+from ..session import local_frame
 from ..operators.orders_base import BASE_ORDERS_CTE, base_orders
 
 
@@ -1588,8 +1589,6 @@ def opt_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom filter (InjectRuntimeFilter), plus the plan-derived
     bloom_injected flag. EAGER: the 1-row aggregate runs inside the
     conf scope; both confs are restored before returning."""
-    from pyspark.sql import types as T
-
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1627,17 +1626,10 @@ def opt_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
-    schema = T.StructType(
-        [
-            T.StructField("n_orders", T.LongType()),
-            T.StructField("revenue_cents", T.LongType()),
-            T.StructField("n_custs", T.LongType()),
-            T.StructField("bloom_injected", T.BooleanType()),
-        ]
-    )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(row["n_orders"], row["revenue_cents"], row["n_custs"], injected)],
-        schema,
+        "n_orders bigint, revenue_cents bigint, n_custs bigint, bloom_injected boolean",
     )
 
 

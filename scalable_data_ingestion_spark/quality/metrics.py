@@ -24,10 +24,11 @@ Score semantics mirrored exactly:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import valid_email_expr, valid_order_id_expr
+from ..session import local_frame
 
 QUALITY_WEIGHTS = {
     "completeness": 0.3,
@@ -268,6 +269,14 @@ def attach_quality_observation(df: DataFrame):
     return observed, obs
 
 
+_PROFILE_SCHEMA = (
+    "column string, dtype string, null_count bigint, null_pct double, "
+    "distinct_count bigint, min_value double, max_value double, "
+    "mean_value double, std_value double, avg_length double, "
+    "max_length double, high_null_flag boolean"
+)
+
+
 def field_profile(df: DataFrame) -> DataFrame:
     """A7 per-column profile (src/validation.py:284-326): dtype, null
     count/%, distinct count/%, min/max/mean/std for numerics, avg/max
@@ -298,24 +307,24 @@ def field_profile(df: DataFrame) -> DataFrame:
         name = field.name
         nn = row[f"nn::{name}"]
         rows.append(
-            Row(
-                column=name,
-                dtype=field.dataType.simpleString(),
-                null_count=int(n - nn),
-                null_pct=(100.0 * (n - nn) / n) if n else 0.0,
-                distinct_count=int(row[f"nd::{name}"]),
-                min_value=row[f"min::{name}"],
-                max_value=row[f"max::{name}"],
-                mean_value=row[f"mean::{name}"],
-                std_value=row[f"std::{name}"],
-                avg_length=row[f"avglen::{name}"],
-                max_length=row[f"maxlen::{name}"],
-                high_null_flag=bool(n and (n - nn) / n > 0.10),
+            (
+                name,
+                field.dataType.simpleString(),
+                int(n - nn),
+                (100.0 * (n - nn) / n) if n else 0.0,
+                int(row[f"nd::{name}"]),
+                row[f"min::{name}"],
+                row[f"max::{name}"],
+                row[f"mean::{name}"],
+                row[f"std::{name}"],
+                row[f"avglen::{name}"],
+                row[f"maxlen::{name}"],
+                bool(n and (n - nn) / n > 0.10),
             )
         )
     # Rounding happens Spark-side (SQL half-away-from-zero) rather than
     # via Python round() (half-to-even) so oracle comparisons share one
     # rounding algorithm.
-    return df.sparkSession.createDataFrame(rows).withColumn(
+    return local_frame(df.sparkSession, rows, _PROFILE_SCHEMA).withColumn(
         "null_pct", F.round("null_pct", 6)
     )

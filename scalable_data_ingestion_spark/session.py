@@ -11,7 +11,8 @@ Scale notes (100 TB / 1000-executor posture):
   be ~2-3x total cores and AQE handles the rest.
 - UTC session timezone so timestamp semantics are stable and match the
   DuckDB oracle.
-- Arrow enabled for any toPandas / pandas-UDF boundary.
+- Arrow carries every Python boundary: toPandas, pandas UDFs, and the
+  local relations ``local_frame`` builds from driver-side rows.
 
 The package pickles its functions by value (see ``__init__``), so
 kernels and UDFs run under this session or any other one.
@@ -20,8 +21,10 @@ kernels and UDFs run under this session or any other one.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def default_parallelism() -> int:
@@ -56,3 +59,30 @@ def get_spark(app_name: str = "scalable_data_ingestion_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """The one way driver-side rows become a relation.
+
+    ``rows`` are tuples in ``schema`` order; ``schema`` is a DDL string or
+    a ``StructType``. The rows go column by column into a ``pyarrow.Table``
+    of the schema's Arrow types, which Spark plans as a ``LocalTableScan``
+    with exact size statistics. A Python list handed to
+    ``createDataFrame`` instead becomes a ``parallelize`` RDD scanned by
+    Python workers. There is no pandas step: pandas would turn a nullable
+    ``bigint`` column holding ``None`` into doubles.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow, strict=True)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

@@ -1,9 +1,10 @@
 """REST API source (S1-S3, src/ingestion.py:30-190).
 
-Driver-side fetch (rate-limited, retried) -> ``spark.createDataFrame``
--> pure-expression reshape into the A1 order schema. The reshape
-(S2, src/ingestion.py:110-168) and product-name synthesis (S3,
-:170-190) are column expressions, not per-row Python.
+Driver-side fetch (rate-limited, retried) -> ``session.local_frame``
+(an Arrow local relation, no Python-RDD scan) -> pure-expression reshape
+into the A1 order schema. The reshape (S2, src/ingestion.py:110-168) and
+product-name synthesis (S3, :170-190) are column expressions, not
+per-row Python.
 
 Offline behavior: with no network (or ``offline=True``) the source
 yields deterministic synthetic posts with the JSONPlaceholder shape, so
@@ -26,16 +27,10 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-POSTS_SCHEMA = T.StructType(
-    [
-        T.StructField("userId", T.LongType()),
-        T.StructField("id", T.LongType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("body", T.StringType()),
-    ]
-)
+from ..session import local_frame
+
+POSTS_SCHEMA = "userId bigint, id bigint, title string, body string"
 
 # S3 keyword -> product mapping (src/ingestion.py:174-182), first match
 # wins in dict order; fallback list (:188-190).
@@ -153,7 +148,10 @@ def product_name_expr(title):
 
 def posts_to_orders(spark: SparkSession, posts: list[dict]) -> DataFrame:
     """S2 reshape (src/ingestion.py:131-149) as one expression select."""
-    df = spark.createDataFrame(posts, POSTS_SCHEMA)
+    rows = [
+        (p.get("userId"), p.get("id"), p.get("title"), p.get("body")) for p in posts
+    ]
+    df = local_frame(spark, rows, POSTS_SCHEMA)
     price = F.round(50 + (F.col("id") % 20).cast("double") * 25.99, 2)
     return df.select(
         F.format_string("API-%04d", F.col("id")).alias("order_id"),

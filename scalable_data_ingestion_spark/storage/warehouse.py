@@ -33,6 +33,8 @@ from datetime import datetime, timezone
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def rewrite_table(
     df: DataFrame,
@@ -258,38 +260,42 @@ class Warehouse:
         shutil.rmtree(self._path(self.DELETES), ignore_errors=True)
 
     # ------------------------------------------------------------- run/metrics
+    # Alphabetical column order: what schema inference from dict rows
+    # wrote, so tables from earlier runs keep appending compatible files.
+    RUNS_SCHEMA = (
+        "end_time string, error_message string, records_failed bigint, "
+        "records_processed bigint, run_id string, start_time string, status string"
+    )
+    METRICS_SCHEMA = (
+        "measured_at string, metric_name string, metric_type string, "
+        "metric_value double, run_id string, source_table string"
+    )
+
     def save_pipeline_run(self, run: dict) -> None:
-        row = {
-            "run_id": str(run.get("run_id")),
-            "start_time": str(run.get("start_time", "")),
-            "end_time": str(run.get("end_time", "")),
-            "status": str(run.get("status", "unknown")),
-            "records_processed": int(run.get("records_processed", 0)),
-            "records_failed": int(run.get("records_failed", 0)),
-            "error_message": str(run.get("error_message", "") or ""),
-        }
-        self.spark.createDataFrame([row]).write.mode("append").parquet(
+        row = (
+            str(run.get("end_time", "")),
+            str(run.get("error_message", "") or ""),
+            int(run.get("records_failed", 0)),
+            int(run.get("records_processed", 0)),
+            str(run.get("run_id")),
+            str(run.get("start_time", "")),
+            str(run.get("status", "unknown")),
+        )
+        local_frame(self.spark, [row], self.RUNS_SCHEMA).write.mode("append").parquet(
             self._path("pipeline_runs")
         )
 
     def save_quality_metrics(self, run_id: str, metrics: dict) -> None:
         now = datetime.now(timezone.utc).isoformat()
         rows = [
-            {
-                "run_id": run_id,
-                "metric_name": str(k),
-                "metric_value": float(v),
-                "metric_type": "quality",
-                "source_table": "orders",
-                "measured_at": now,
-            }
+            (now, str(k), "quality", float(v), run_id, "orders")
             for k, v in metrics.items()
             if isinstance(v, (int, float))
         ]
         if rows:
-            self.spark.createDataFrame(rows).write.mode("append").parquet(
-                self._path("data_quality_metrics")
-            )
+            local_frame(self.spark, rows, self.METRICS_SCHEMA).write.mode(
+                "append"
+            ).parquet(self._path("data_quality_metrics"))
 
     def table(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self._path(name))

@@ -20,6 +20,7 @@ inputs keep the listing small. State: none needed for ingestion itself
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,6 +71,24 @@ def start_foreach_batch(stream: DataFrame, sink, checkpoint_dir: str, once: bool
     if once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+# What Spark raises for a store nothing has been appended to yet: no
+# directory, or a directory without data files.
+_EMPTY_STORE = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def read_store(spark: SparkSession, path: str) -> DataFrame | None:
+    """The append-only parquet store at ``path``, or None while it is
+    empty. Spark resolves the path, so a ``file://``, ``hdfs://`` or
+    ``s3a://`` store is read like a local one; any other error raises.
+    Every store-backed dedup sink reads its store here."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() in _EMPTY_STORE:
+            return None
+        raise
 
 
 def process_batch(df: DataFrame, warehouse: Warehouse) -> None:
@@ -141,15 +160,6 @@ class FingerprintStoreDedup:
         self.store_dir = store_dir
         self.out_dir = out_dir
 
-    def _store(self) -> DataFrame | None:
-        import os
-
-        if not os.path.isdir(self.store_dir) or not any(
-            f.endswith(".parquet") for f in os.listdir(self.store_dir)
-        ):
-            return None
-        return self.spark.read.parquet(self.store_dir)
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         fresh = (
             batch_df.withColumn("fingerprint", F.md5("text"))
@@ -160,7 +170,7 @@ class FingerprintStoreDedup:
                 F.first("text").alias("text"),
             )
         )
-        store = self._store()
+        store = read_store(self.spark, self.store_dir)
         if store is not None:
             fresh = fresh.join(store, "fingerprint", "left_anti")
         # Materialize once: the two appends below must see the same rows.

@@ -37,7 +37,7 @@ from ..operators.dedup import (
     _bands,
     _minhash_sig,
 )
-from .ingest import start_foreach_batch
+from .ingest import read_store, start_foreach_batch
 
 
 def _shingles_of(docs: DataFrame) -> DataFrame:
@@ -145,19 +145,10 @@ class LshBandStoreDedup:
         self.out_dir = out_dir
         self.audit_dir = audit_dir
 
-    def _store_shingles(self) -> DataFrame | None:
-        import os
-
-        if not os.path.isdir(self.shingle_dir) or not any(
-            f.endswith(".parquet") for f in os.listdir(self.shingle_dir)
-        ):
-            return None
-        return self.spark.read.parquet(self.shingle_dir)
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         batch_sh = _shingles_of(batch_df).persist()
         try:
-            store_sh = self._store_shingles()
+            store_sh = read_store(self.spark, self.shingle_dir)
             if store_sh is None:
                 decisions = batch_sh.select("doc_id").distinct().select(
                     "doc_id",

@@ -56,7 +56,7 @@ from ..operators.winnow import (
     winnow_fingerprints_of,
 )
 from ..registry import register
-from .ingest import start_foreach_batch
+from .ingest import read_store, start_foreach_batch
 from .lsh_dedup import _shingles_of
 
 BBIT_MIN_MATCH = 11  # of MINHASH_K=12 one-bit hashes (J1 >= 5/6)
@@ -246,21 +246,12 @@ class WinnowFpStoreDedup:
         self.out_dir = out_dir
         self.audit_dir = audit_dir
 
-    def _store(self) -> DataFrame | None:
-        import os
-
-        if not os.path.isdir(self.fp_dir) or not any(
-            f.endswith(".parquet") for f in os.listdir(self.fp_dir)
-        ):
-            return None
-        return self.spark.read.parquet(self.fp_dir)
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         batch_fp = (
             winnow_fingerprints_of(batch_df).select("doc_id", "fp").persist()
         )
         try:
-            store = self._store()
+            store = read_store(self.spark, self.fp_dir)
             if store is None:
                 decisions = batch_fp.select("doc_id").distinct().select(
                     "doc_id",
@@ -306,19 +297,11 @@ class BbitSketchStoreDedup:
         self.out_dir = out_dir
         self.audit_dir = audit_dir
 
-    def _read(self, d: str) -> DataFrame | None:
-        import os
-
-        if not os.path.isdir(d) or not any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        ):
-            return None
-        return self.spark.read.parquet(d)
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         batch_sh = _shingles_of(batch_df).persist()
         try:
-            bands, bits = self._read(self.bands_dir), self._read(self.bits_dir)
+            bands = read_store(self.spark, self.bands_dir)
+            bits = read_store(self.spark, self.bits_dir)
             if bands is None or bits is None:
                 decisions = batch_sh.select("doc_id").distinct().select(
                     "doc_id",

@@ -34,14 +34,13 @@ def registry_plans(spark, sf_dir):
 
     Both the physical string and the optimized plan are forced HERE,
     before the per-query clearCache, so consumers see exactly what a
-    fresh per-test build would have seen. Plan-shape env toggles are
-    pinned to the audited defaults (the test_scan_gate._pin_plan_shape_
+    fresh per-test build would have seen. The plan-shape env toggle is
+    pinned to its audited default (the test_scan_gate._pin_plan_shape_
     toggles contract) for the builds."""
     from scalable_data_ingestion_spark import registry
-    from scalable_data_ingestion_spark.operators import dedup, prefixjoin
+    from scalable_data_ingestion_spark.operators import prefixjoin
 
-    saved = (dedup.FAST_CC_EDGE_CAP, prefixjoin.PJ_CANDIDATE_CAP)
-    dedup.FAST_CC_EDGE_CAP = 200_000
+    saved = prefixjoin.PJ_CANDIDATE_CAP
     prefixjoin.PJ_CANDIDATE_CAP = 10_000_000
     plans: dict = {}
     errors: dict = {}
@@ -57,5 +56,5 @@ def registry_plans(spark, sf_dir):
                 errors[name] = f"{type(exc).__name__}: {exc}"
             spark.catalog.clearCache()
     finally:
-        dedup.FAST_CC_EDGE_CAP, prefixjoin.PJ_CANDIDATE_CAP = saved
+        prefixjoin.PJ_CANDIDATE_CAP = saved
     return plans, errors

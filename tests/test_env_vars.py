@@ -15,7 +15,6 @@ PACKAGE = Path(__file__).resolve().parents[1] / "scalable_data_ingestion_spark"
 ENV_VARS = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
-    "SPARK_GRAFT_FAST_CC_CAP",
     "SPARK_GRAFT_PJ_CANDIDATE_CAP",
 }
 

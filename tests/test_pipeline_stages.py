@@ -271,3 +271,26 @@ def test_observed_quality_counts_match_aggregate_pass(spark, tmp_path):
     valid, invalid = record_quality_counts(df)
     assert (got["valid_records"], got["invalid_records"]) == (valid, invalid)
     assert got["n_rows"] == valid + invalid == 3
+
+
+def test_field_profile_types_every_frame_shape(spark):
+    """A7 profile of an all-string, an all-numeric and a mixed frame. A
+    profile column that is NULL in every row (min/max of an all-string
+    frame, lengths of an all-numeric one) still has its declared type."""
+    from scalable_data_ingestion_spark.quality.metrics import field_profile
+
+    shapes = {
+        "strings": ([("a", "bb"), ("c", None)], "s1 string, s2 string"),
+        "numbers": ([(1, 2.5), (3, None)], "n1 bigint, n2 double"),
+        "mixed": ([("a", 1), (None, 2)], "s string, n bigint"),
+    }
+    for shape, (rows, ddl) in shapes.items():
+        profile = field_profile(spark.createDataFrame(rows, ddl)).collect()
+        prof = {r["column"]: r for r in profile}
+        assert len(prof) == 2, shape
+        for name, r in prof.items():
+            numeric = r["dtype"] != "string"
+            assert (r["min_value"] is not None) == numeric, (shape, name)
+            assert (r["avg_length"] is not None) == (not numeric), (shape, name)
+    assert prof["s"]["null_count"] == 1 and prof["s"]["null_pct"] == 50.0
+    assert prof["n"]["max_value"] == 2.0 and prof["n"]["high_null_flag"] is False

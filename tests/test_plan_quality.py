@@ -158,6 +158,17 @@ def test_no_python_eval_in_any_registered_query(registry_plans):
     assert not offenders, f"Python eval nodes in parity plans: {offenders}"
 
 
+def test_no_python_rdd_scan_in_any_registered_query(registry_plans):
+    """Driver-side rows enter a plan as a LocalTableScan
+    (session.local_frame). No plan scans an RDD (Scan ExistingRDD): not a
+    parallelized Python list, which starts Python workers, and not a
+    checkpointed frame, which hides its lineage from Catalyst. No
+    allowlist."""
+    plans, _errors = registry_plans  # shared session build (conftest)
+    offenders = sorted(name for name, (_df, p, _opt) in plans.items() if "ExistingRDD" in p)
+    assert not offenders, f"Python-RDD scans in registered plans: {offenders}"
+
+
 def test_chunker_plan_is_map_only(spark, sf_dir):
     # RAG chunking must run at scan throughput: slice + generate per
     # row, no Exchange anywhere in the physical plan.

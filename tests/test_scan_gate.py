@@ -104,14 +104,12 @@ ALLOWED: dict[str, dict[str, int]] = {
 
 @pytest.fixture(autouse=True)
 def _pin_plan_shape_toggles(monkeypatch):
-    """The allowlist was audited under the DEFAULT env toggles; a
-    caller exporting SPARK_GRAFT_FAST_CC_CAP or
-    SPARK_GRAFT_PJ_CANDIDATE_CAP switches the plan shape of the queries
-    that read them. The toggles are bound to module constants at import
-    time, so pin the CONSTANTS, not the env vars."""
-    from scalable_data_ingestion_spark.operators import dedup, prefixjoin
+    """The allowlist was audited under the DEFAULT env toggle; a caller
+    exporting SPARK_GRAFT_PJ_CANDIDATE_CAP switches the plan shape of
+    the queries that read it. The toggle is bound to a module constant
+    at import time, so pin the CONSTANT, not the env var."""
+    from scalable_data_ingestion_spark.operators import prefixjoin
 
-    monkeypatch.setattr(dedup, "FAST_CC_EDGE_CAP", 200_000)
     monkeypatch.setattr(prefixjoin, "PJ_CANDIDATE_CAP", 10_000_000)
 
 

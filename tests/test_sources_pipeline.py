@@ -199,6 +199,16 @@ def test_pipeline_end_to_end(spark, tmp_path, drop_dir):
     assert runs.filter(F.col("run_id") == result.run_id).count() == 1
     metrics = mgr.warehouse.table("data_quality_metrics")
     assert metrics.filter(F.col("run_id") == result.run_id).count() > 0
+    # the schemas dict-row inference wrote, column order included, so
+    # tables from earlier runs keep appending compatible files
+    assert runs.schema.simpleString() == (
+        "struct<end_time:string,error_message:string,records_failed:bigint,"
+        "records_processed:bigint,run_id:string,start_time:string,status:string>"
+    )
+    assert metrics.schema.simpleString() == (
+        "struct<measured_at:string,metric_name:string,metric_type:string,"
+        "metric_value:double,run_id:string,source_table:string>"
+    )
 
     # markdown report (X4)
     report = mgr.markdown_report(result)

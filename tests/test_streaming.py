@@ -5,9 +5,16 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from scalable_data_ingestion_spark.storage import Warehouse
-from scalable_data_ingestion_spark.streaming.ingest import start_ingest
+from scalable_data_ingestion_spark.streaming.ingest import FingerprintStoreDedup, start_ingest
+from scalable_data_ingestion_spark.streaming.lsh_dedup import LshBandStoreDedup
 from scalable_data_ingestion_spark.streaming.queries import tumbling_agg
+from scalable_data_ingestion_spark.streaming.span_dedup import (
+    BbitSketchStoreDedup,
+    WinnowFpStoreDedup,
+)
 from scalable_data_ingestion_spark.streaming.windows import (
     event_stream_from_parquet,
     run_to_memory,
@@ -234,6 +241,32 @@ def test_fingerprint_store_dedup_across_restarts(spark, tmp_path):
     rows = {r["text"]: r["doc_id"] for r in accepted.collect()}
     assert rows == {"alpha": 1, "beta": 2, "gamma": 11}
     assert spark.read.parquet(store).count() == 3
+
+
+_STORE_SINKS = {
+    "fingerprint": (FingerprintStoreDedup, ["store", "out"]),
+    "lsh": (LshBandStoreDedup, ["sh", "out", "audit"]),
+    "winnow": (WinnowFpStoreDedup, ["fp", "out", "audit"]),
+    "bbit": (BbitSketchStoreDedup, ["bands", "bits", "out", "audit"]),
+}
+
+
+@pytest.mark.parametrize("sink_name", sorted(_STORE_SINKS))
+def test_store_dedup_reads_a_uri_store(spark, tmp_path, sink_name):
+    """A store given as a file:// URI is read back like a plain path: the
+    second copy of a document, arriving in the next batch, is dropped."""
+    sink_cls, dirs = _STORE_SINKS[sink_name]
+    root = tmp_path.as_uri()
+    sink = sink_cls(spark, *(f"{root}/{d}" for d in dirs))
+    text = (
+        "the quick brown fox jumps over the lazy dog and then runs far away "
+        "into the deep dark forest where nobody ever goes"
+    )
+    for batch_id, doc_id in enumerate((1, 2)):
+        batch = spark.createDataFrame([(doc_id, text)], "doc_id long, text string")
+        sink.process_batch(batch, batch_id)
+    accepted = [r["doc_id"] for r in spark.read.parquet(f"{root}/out").collect()]
+    assert accepted == [1]
 
 
 def test_incremental_hll_equals_batch_registers(spark, tmp_path):
