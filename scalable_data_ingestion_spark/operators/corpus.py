@@ -1053,25 +1053,9 @@ def txt_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def txt_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document fraction of distinct 3-gram shingles first
     introduced by that document (doc_id scan order)."""
-    from .dedup import SHINGLE_N
+    from .dedup import doc_shingles
 
-    docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    sh = (
-        docs.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= SHINGLE_N)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(t) - {SHINGLE_N}), "
-                    "i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-        .cache()
-    )
+    sh = doc_shingles(table(spark, sf_dir, "documents")).cache()
     firsts = sh.groupBy("sh").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
     return (

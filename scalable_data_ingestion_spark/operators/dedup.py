@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table, widen_if_narrow
@@ -71,12 +71,12 @@ sizes AS (SELECT doc_id, count(*) AS n FROM shingle GROUP BY doc_id)
 """
 
 
-def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct word-{3}-gram shingles per doc, with a document-frequency
-    cap on pathological shingles (inverted-index skew guard)."""
-    docs = table(spark, sf_dir, "documents")
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """Distinct word-3-gram shingles ``(doc_id, sh)`` of a
+    ``(doc_id, text)`` relation; a doc with fewer than SHINGLE_N tokens
+    has none. Every word-shingle relation in the package starts here."""
     toks = F.split(F.trim(F.col("text")), r"\s+")
-    sh = (
+    return (
         docs.select("doc_id", toks.alias("t"))
         .filter(F.size("t") >= SHINGLE_N)
         .select(
@@ -90,13 +90,20 @@ def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # document-frequency cap via a count window over sh — one pass over
-    # the shingle relation instead of a second groupBy + anti-join
-    # (the subtree would otherwise be computed twice).
-    from pyspark.sql import Window as W
 
+
+def cap_shingle_df(sh: DataFrame) -> DataFrame:
+    """Drop shingles held by more than DF_CAP docs of ``sh`` (the
+    inverted-index skew guard): a count window over sh, one pass over
+    the shingle relation instead of a second groupBy + anti-join (the
+    subtree would otherwise be computed twice)."""
     df_count = F.count(F.lit(1)).over(W.partitionBy("sh"))
     return sh.withColumn("_df", df_count).filter(F.col("_df") <= DF_CAP).drop("_df")
+
+
+def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents' shingles with the document-frequency cap."""
+    return cap_shingle_df(doc_shingles(table(spark, sf_dir, "documents")))
 
 
 def _jaccard_pairs(sh: DataFrame, threshold: float) -> DataFrame:
@@ -575,14 +582,17 @@ def dd_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unchanged. Both paths produce byte-identical labels (min doc_id per
 # component; union-by-min keeps the minimum as root) and the pytest
 # suite asserts their equality on the same pair set.
+# ``min_label_components`` is the package's one connected-components
+# routine: entity resolution (operators/entity.py) closes its match
+# graph with it too.
 # --------------------------------------------------------------------------
 FAST_CC_EDGE_CAP = 200_000
 
 
 def _components_unionfind(pair_rows) -> list[tuple[int, int, int]]:
     """Min-label connected components of an edge list via union-find
-    (union-by-min + path compression). Returns (doc_id, component_id,
-    component_size) rows for every node that appears in an edge."""
+    (union-by-min + path compression). Returns (node, label, size) rows
+    for every node that appears in an edge."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -612,61 +622,74 @@ def _components_unionfind(pair_rows) -> list[tuple[int, int, int]]:
     ]
 
 
-def _components_distributed(spark: SparkSession, pairs: DataFrame) -> DataFrame:
-    """Iterative distributed min-label propagation over the pair graph
-    (the > FAST_CC_EDGE_CAP path; each round = one shuffle join + agg)."""
-    edges = (
-        pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .toDF("src", "dst")
-        .cache()
-    )
+def min_label_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
+    """Connected components of an undirected graph given as two-column
+    ``(a, b)`` pairs: ``(node, lab, size)`` with lab = the component's
+    minimum node and size its node count, for every node with at least
+    one edge.
+
+    At most FAST_CC_EDGE_CAP edges are collected and closed by the
+    driver-side union-find. Above it runs min-label propagation: each
+    round is one node-keyed shuffle join + aggregate; labels only
+    decrease, so an unchanged label-sum certifies the fixpoint. Raises
+    if the graph's diameter exceeds ``max_rounds`` — a silent wrong
+    answer (non-minimal labels) is worse than a loud failure.
+    """
+    a, b = pairs.columns
+    pairs = pairs.cache()
+    n_edges = pairs.count()  # materializes the cache either path reuses
+    if n_edges <= FAST_CC_EDGE_CAP:
+        rows = _components_unionfind((r[0], r[1]) for r in pairs.collect())
+        spark = pairs.sparkSession
+        pairs.unpersist()
+        return local_frame(spark, rows, "node long, lab long, size long")
+    edges = pairs.union(pairs.select(b, a)).toDF("src", "dst").cache()
     labels = (
-        edges.select(F.col("src").alias("doc_id"))
+        edges.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("lab", F.col("doc_id"))
+        .withColumn("lab", F.col("node"))
         .cache()
     )
-    prev_sum = labels.agg(F.sum("lab")).first()[0]
-    max_rounds = 50  # >= graph diameter of any near-dup cluster we accept
-    converged = False
-    for _ in range(max_rounds):
+
+    def step(lab):
         neighbor_min = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("n_doc"))
+            edges.join(lab, edges.src == lab.node)
+            .groupBy(F.col("dst").alias("n_node"))
             .agg(F.min("lab").alias("nlab"))
         )
-        prev_labels = labels
-        labels = (
-            labels.join(neighbor_min, labels.doc_id == F.col("n_doc"), "left")
-            .select(
-                "doc_id",
-                F.least(F.col("lab"), F.coalesce("nlab", F.col("lab"))).alias("lab"),
-            )
-            .cache()
+        return lab.join(neighbor_min, lab.node == F.col("n_node"), "left").select(
+            "node",
+            F.least(F.col("lab"), F.coalesce("nlab", F.col("lab"))).alias("lab"),
         )
-        cur_sum = labels.agg(F.sum("lab")).first()[0]  # materializes new cache
-        prev_labels.unpersist()  # superseded generation: release executor memory
-        if cur_sum == prev_sum:  # labels only decrease => fixpoint reached
+
+    prev_sum = labels.agg(F.sum("lab")).first()[0]
+    converged = False
+    for _ in range(max_rounds):
+        prev_labels = labels
+        # One hop per materialization (a measured double-hop variant
+        # was slower: star-shaped match graphs converge in ~3 hops, so
+        # double-stepping does more join work than it saves in
+        # actions). localCheckpoint (not cache): each hop's plan
+        # references the previous labels twice, so lineage — and the
+        # plan Catalyst must stringify/analyze — grows geometrically
+        # without truncation; on a cluster this would be a reliable
+        # checkpoint every ~10 supersteps.
+        labels = step(labels).localCheckpoint()
+        cur_sum = labels.agg(F.sum("lab")).first()[0]
+        prev_labels.unpersist()
+        if cur_sum == prev_sum:
             converged = True
             break
         prev_sum = cur_sum
-    if not converged:
-        # A silent wrong answer is worse than a loud failure: a component
-        # with diameter > max_rounds would return non-minimal labels that
-        # diverge from the recursive-CTE oracle.
-        raise RuntimeError(
-            f"near-dup connected components did not reach a fixpoint in "
-            f"{max_rounds} min-label rounds (graph diameter too large)"
-        )
-    # final labels cache is materialized by the last sum action, so the
-    # edge relation can be released now.
     edges.unpersist()
-    from pyspark.sql import Window as W
-
-    size_w = W.partitionBy("component_id")
-    comp = labels.select("doc_id", F.col("lab").alias("component_id"))
-    return comp.withColumn(
-        "component_size", F.count(F.lit(1)).over(size_w).cast("bigint")
+    pairs.unpersist()
+    if not converged:
+        raise RuntimeError(
+            f"connected components did not reach a fixpoint in {max_rounds} "
+            "min-label rounds (graph diameter too large)"
+        )
+    return labels.withColumn(
+        "size", F.count(F.lit(1)).over(W.partitionBy("lab")).cast("bigint")
     )
 
 
@@ -705,19 +728,10 @@ def _components_distributed(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     """,
 )
 def dd_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dd_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
-    n_edges = pairs.count()  # materializes the cache either path reuses
-    if n_edges <= FAST_CC_EDGE_CAP:
-        rows = _components_unionfind(
-            (r["doc_a"], r["doc_b"]) for r in pairs.collect()
-        )
-        pairs.unpersist()
-        return local_frame(
-            spark, rows, "doc_id long, component_id long, component_size long"
-        )
-    out = _components_distributed(spark, pairs)
-    pairs.unpersist()
-    return out
+    pairs = dd_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    return min_label_components(pairs).toDF(
+        "doc_id", "component_id", "component_size"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1269,22 +1283,7 @@ def dd_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dd_shingle_df_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2 document-frequency histogram of distinct shingles with
     posting mass, quadratic join cost, and above-cap counts."""
-    docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    sh_all = (
-        docs.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= SHINGLE_N)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(t) - {SHINGLE_N}), "
-                    "i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
+    sh_all = doc_shingles(table(spark, sf_dir, "documents"))
     df = sh_all.groupBy("sh").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     return df.groupBy(
         (F.length(F.bin("df")) - 1).cast("int").alias("bin_log2")

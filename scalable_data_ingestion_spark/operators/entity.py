@@ -4,8 +4,8 @@ Composes the registered building blocks into the full ER pipeline a
 master-data system runs: candidate generation + verification
 (``fz_party_name_matches`` — deletion-neighborhood blocking, exact
 levenshtein verify), transitive closure over the match graph
-(min-label propagation, the same fixpoint loop as
-``dd_neardup_components``), and entity assignment with a canonical
+(``dedup.min_label_components``, the fixpoint loop
+``dd_neardup_components`` runs), and entity assignment with a canonical
 representative per cluster. Every supplier and customer lands in
 exactly one entity; unmatched parties are singleton entities.
 
@@ -34,88 +34,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ..session import local_frame
 from ..plans.stats import fz_party_name_matches
-from .dedup import FAST_CC_EDGE_CAP, _components_unionfind
-
-def min_label_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
-    """Connected components of an undirected match graph given as
-    ``(a, b)`` pairs: min-label propagation to fixpoint.
-
-    Propagates labels ONLY over nodes that have at least one match
-    edge — the overwhelming singleton majority of a registry can never
-    change label, so it stays out of every iteration (at real scale
-    the difference between iterating a match graph and iterating the
-    whole registry). Each round is one node-keyed shuffle join +
-    aggregate; labels only decrease, so an unchanged label-sum
-    certifies the fixpoint (no driver-side graph state). Returns
-    ``(node, lab)`` for matched nodes only; raises if the diameter
-    exceeds ``max_rounds``.
-
-    Hybrid (round 7, same strategy switch as
-    ``dedup.dd_neardup_components``): the match-pair relation holds
-    only verified matches — dimension-sized relative to the registry —
-    so when it fits under FAST_CC_EDGE_CAP it is collected and closed
-    with driver-side union-by-min (identical labels), skipping the
-    per-round distributed job overhead; larger graphs take the loop.
-    """
-    pairs = pairs.cache()
-    n_edges = pairs.count()  # materializes the cache either path reuses
-    if n_edges <= FAST_CC_EDGE_CAP:
-        rows = _components_unionfind((r[0], r[1]) for r in pairs.collect())
-        spark = pairs.sparkSession
-        pairs.unpersist()
-        return local_frame(
-            spark, [(node, lab) for node, lab, _size in rows], "node long, lab long"
-        )
-    edges = (
-        pairs.union(pairs.select(F.col("b"), F.col("a")))
-        .toDF("src", "dst")
-        .cache()
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lab", F.col("node"))
-        .cache()
-    )
-    def step(lab):
-        neighbor_min = (
-            edges.join(lab, edges.src == lab.node)
-            .groupBy(F.col("dst").alias("n_node"))
-            .agg(F.min("lab").alias("nlab"))
-        )
-        return lab.join(neighbor_min, lab.node == F.col("n_node"), "left").select(
-            "node",
-            F.least(F.col("lab"), F.coalesce("nlab", F.col("lab"))).alias("lab"),
-        )
-
-    prev_sum = labels.agg(F.sum("lab")).first()[0]
-    converged = False
-    for _ in range(max_rounds):
-        prev_labels = labels
-        # One hop per materialization (a measured double-hop variant
-        # was slower: star-shaped match graphs converge in ~3 hops, so
-        # double-stepping does more join work than it saves in
-        # actions). localCheckpoint (not cache): each hop's plan
-        # references the previous labels twice, so lineage — and the
-        # plan Catalyst must stringify/analyze — grows geometrically
-        # without truncation; on a cluster this would be a reliable
-        # checkpoint every ~10 supersteps.
-        labels = step(labels).localCheckpoint()
-        cur_sum = labels.agg(F.sum("lab")).first()[0]
-        prev_labels.unpersist()
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    pairs.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"entity resolution did not converge in {max_rounds} rounds"
-        )
-    return labels
+from .dedup import min_label_components
 
 
 _FZ_PAIRS_SQL = """

@@ -26,6 +26,10 @@ The batch here is synthesized deterministically from `documents` so the
 operator has real work at every SF: 25 % of docs form the incoming
 batch, and every store doc with ``doc_id % 20 == 1`` is re-submitted
 under a new id (a true duplicate the store must reject).
+
+The near-dup sibling, ``dd_incremental_lsh_assign``, is the batch twin
+of the streaming LSH store sink (``streaming/lsh_dedup.py``) and
+decides through the sink's own ``lsh_decisions``.
 """
 
 from __future__ import annotations
@@ -219,8 +223,9 @@ _register_cross_source()
 # Batch = the 25% of docs not yet in the store PLUS perturbed
 # resubmissions of store docs (first token dropped: a true NEAR-dup,
 # high Jaccard but a different md5, which the exact store would
-# wrongly accept). Signatures/bands reuse the dd_minhash_lsh_pairs
-# machinery; the DF cap applies over the combined relation.
+# wrongly accept). The shingles are dedup.doc_shingles with the DF cap
+# over the combined relation; the decision (MinHash bands, verify, best
+# match) is the streaming sink's lsh_decisions.
 #
 # Scale: at 100 TB the band store is bucketed by (band, bh) on disk, so
 # the probe join shuffles ONLY the batch side; the verify join touches
@@ -321,111 +326,25 @@ def _register_incremental_lsh() -> None:
     def dd_incremental_lsh_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Per-batch-doc near-dup verdict against the store's LSH
         buckets: best store match at Jaccard >= the verify threshold,
-        NULLs when no bucket collision survives verification."""
-        from pyspark.sql import Window as W
-
-        from .dedup import (
-            DF_CAP,
-            MINHASH_VERIFY_THRESHOLD,
-            SHINGLE_N,
-            _bands,
-            _minhash_sig,
-        )
+        NULLs when no bucket collision survives verification. The
+        decision is the streaming sink's ``lsh_decisions``; only the
+        shingle DF cap, over store + batch, is batch-side."""
+        from ..streaming.lsh_dedup import lsh_decisions
+        from .dedup import cap_shingle_df, doc_shingles
 
         docs = table(spark, sf_dir, "documents")
-        store = docs.filter(F.expr(_STORE_PRED)).select(
-            "doc_id", "text", F.lit("store").alias("side")
-        )
         resub = docs.filter(F.expr(_RESUB_PRED)).select(
             (F.col("doc_id") + 2000000).alias("doc_id"),
             F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-            F.lit("batch").alias("side"),
         )
-        fresh = docs.filter(F.expr(_BATCH_PRED)).select(
-            "doc_id", "text", F.lit("batch").alias("side")
-        )
-        corpus = store.unionByName(resub).unionByName(fresh)
-        toks = F.split(F.trim(F.col("text")), r"\s+")
-        sh_all = (
-            corpus.select("doc_id", toks.alias("t"))
-            .filter(F.size("t") >= SHINGLE_N)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(0, size(t) - {SHINGLE_N}), "
-                        "i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
-                    )
-                ).alias("sh"),
-            )
-            .distinct()
-        )
-        df_count = F.count(F.lit(1)).over(W.partitionBy("sh"))
-        sh = (
-            sh_all.withColumn("_df", df_count)
-            .filter(F.col("_df") <= DF_CAP)
-            .drop("_df")
-            .cache()
-        )
-        sides = corpus.select("doc_id", "side")
-        # referenced twice (batch probe + store index) — persist so the
-        # MinHash signature aggregation over the shingles runs once.
-        bands = _bands(_minhash_sig(sh)).join(sides, "doc_id").persist()
-        bb = bands.filter(F.col("side") == "batch").select(
-            F.col("doc_id").alias("batch_id"), "band", "bh"
-        )
-        bs = bands.filter(F.col("side") == "store").select(
-            F.col("doc_id").alias("store_id"), "band", "bh"
-        )
-        cand = bb.join(bs, ["band", "bh"]).select("batch_id", "store_id").distinct()
-        sha = sh.select(F.col("doc_id").alias("batch_id"), F.col("sh").alias("sh_a"))
-        shb = sh.select(F.col("doc_id").alias("_sid"), F.col("sh").alias("sh_b"))
-        inter = (
-            cand.join(sha, "batch_id")
-            .join(
-                shb,
-                (F.col("store_id") == F.col("_sid"))
-                & (F.col("sh_a") == F.col("sh_b")),
-            )
-            .groupBy("batch_id", "store_id")
-            .agg(F.count(F.lit(1)).alias("i"))
-        )
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-        sa = sizes.select(F.col("doc_id").alias("batch_id"), F.col("n").alias("na"))
-        sb2 = sizes.select(F.col("doc_id").alias("store_id"), F.col("n").alias("nb"))
-        jac = (
-            inter.join(F.broadcast(sa), "batch_id")
-            .join(F.broadcast(sb2), "store_id")
-            .select(
-                "batch_id",
-                "store_id",
-                (
-                    F.col("i").cast("double")
-                    / (F.col("na") + F.col("nb") - F.col("i"))
-                ).alias("j"),
-            )
-            .filter(F.col("j") >= MINHASH_VERIFY_THRESHOLD)
-        )
-        best = jac.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("batch_id").orderBy(F.desc("j"), F.asc("store_id"))
-            ),
-        ).filter(F.col("rn") == 1)
-        batch_ids = corpus.filter(F.col("side") == "batch").select("doc_id")
-        return batch_ids.join(
-            best.select(
-                F.col("batch_id").alias("doc_id"),
-                F.col("store_id").alias("matched_doc"),
-                "j",
-            ),
-            "doc_id",
-            "left",
-        ).select(
-            "doc_id",
-            F.col("matched_doc").isNotNull().alias("is_neardup"),
-            F.col("matched_doc").cast("bigint"),
-            F.round("j", 6).alias("jaccard"),
+        fresh = docs.filter(F.expr(_BATCH_PRED)).select("doc_id", "text")
+        batch = resub.unionByName(fresh)
+        store = docs.filter(F.expr(_STORE_PRED)).select("doc_id", "text")
+        sh = cap_shingle_df(doc_shingles(store.unionByName(batch))).cache()
+        # resubmissions sit at doc_id + 2000000, above every store id
+        in_store = F.expr(f"doc_id < 2000000 AND {_STORE_PRED}")
+        return lsh_decisions(
+            batch.select("doc_id"), sh.filter(~in_store), sh.filter(in_store)
         )
 
 

@@ -22,7 +22,6 @@ The streaming twin (readStream + cleanSource='archive') lives in
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -103,19 +102,6 @@ def quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     # parse once. The caller owns the cache (``df.unpersist()``).
     df = df.cache()
     return drop_corrupt(df), df.filter(F.col("_corrupt_record").isNotNull())
-
-
-def archive_processed(input_dir: str, processed_dir: str, suffixes=(".csv", ".json")) -> int:
-    """Batch-mode analog of the reference's move-to-processed/
-    (src/ingestion.py:247-252); the streaming path uses
-    cleanSource='archive' instead."""
-    os.makedirs(processed_dir, exist_ok=True)
-    moved = 0
-    for name in sorted(os.listdir(input_dir)):
-        if name.endswith(tuple(suffixes)):
-            shutil.move(os.path.join(input_dir, name), os.path.join(processed_dir, name))
-            moved += 1
-    return moved
 
 
 def collect_all(

@@ -29,6 +29,7 @@ import os
 import shutil
 from collections.abc import Iterable
 from datetime import datetime, timezone
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -69,6 +70,19 @@ def rewrite_table(
 
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
+        """``root`` is a local directory, given as a path or a ``file:``
+        URI. Other schemes raise ``ValueError``: ``rewrite_table``,
+        ``vacuum_deletes``, ``stats``, ``export`` and ``summary_report``
+        still manage files through the local file system."""
+        url = urlparse(root)
+        if url.scheme == "file":
+            root = unquote(url.path)
+        elif url.scheme:
+            raise ValueError(
+                f"Warehouse root {root!r}: only a local path or a file: URI is "
+                "supported; rewrite_table, vacuum_deletes, stats, export and "
+                "summary_report work on local files only"
+            )
         self.spark = spark
         self.root = root.rstrip("/")
         os.makedirs(self.root, exist_ok=True)

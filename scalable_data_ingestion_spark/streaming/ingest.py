@@ -21,7 +21,7 @@ inputs keep the listing small. State: none needed for ingestion itself
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.cleaning import clean
@@ -184,14 +184,72 @@ class FingerprintStoreDedup:
             fresh.unpersist()
 
 
-def start_dedup_ingest(
-    docs_stream: DataFrame,
-    spark: SparkSession,
-    store_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    run_once: bool = True,
-):
-    """Wire a document stream through the fingerprint-store dedup."""
-    sink = FingerprintStoreDedup(spark, store_dir, out_dir)
-    return start_foreach_batch(docs_stream, sink.process_batch, checkpoint_dir, run_once)
+# --------------------------------------------------------------------------
+# Store-backed NEAR-dup ingestion (lsh_dedup.py, span_dedup.py): the same
+# loop over a different signature — probe the append-only stores with the
+# micro-batch's signature, keep each doc's best verified match, append
+# the novel docs and grow the stores so later batches see them.
+# --------------------------------------------------------------------------
+def best_match(ids: DataFrame, scored: DataFrame, score: str) -> DataFrame:
+    """Every batch doc of ``ids`` (doc_id) with its best store match in
+    ``scored`` (batch_id, store_id, ``score``, ...): the highest
+    ``score``, ties to the lowest store_id. Returns doc_id, matched_doc
+    (bigint) and the other scored columns; a doc with no scored row —
+    none verified, no signature (too short to shingle), or an empty
+    store — keeps its row with NULLs. Every store-dedup decision ends
+    here."""
+    rank = W.partitionBy("batch_id").orderBy(F.desc(score), F.asc("store_id"))
+    best = (
+        scored.withColumn("_rn", F.row_number().over(rank))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+        .withColumn("store_id", F.col("store_id").cast("bigint"))
+        .withColumnsRenamed({"batch_id": "doc_id", "store_id": "matched_doc"})
+    )
+    return ids.join(best, "doc_id", "left")
+
+
+class StoreDedupSink:
+    """foreachBatch sink skeleton: first-near-copy-ever-wins ingestion
+    against append-only parquet stores.
+
+    Built as ``Sink(spark, *store_dirs, out_dir, audit_dir)``. A
+    subclass supplies three functions:
+
+    - ``signature(batch_df)``: the batch's (doc_id, ...) signature rows;
+    - ``decide(ids, sig, *stores)``: one decision row per batch doc,
+      through ``best_match`` (NULL ``matched_doc`` = novel);
+    - ``store_rows(sig, accepted)``: the rows each store gains from the
+      accepted doc ids, in store_dirs order.
+
+    A store nothing has been appended to yet is decided against as the
+    store that no accepted doc would grow: ``store_rows`` of no docs.
+    Decisions are forced before the stores mutate: the plan reads the
+    stores lazily, so a later read would see this batch's own appended
+    rows and every doc would match itself. Near-dups go to
+    ``audit_dir`` with their match, novel docs to ``out_dir``; the
+    stores are appended last, here and nowhere else.
+    """
+
+    def __init__(self, spark: SparkSession, *dirs: str):
+        self.spark = spark
+        *self.store_dirs, self.out_dir, self.audit_dir = dirs
+
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        sig = self.signature(batch_df).persist()
+        try:
+            ids = batch_df.select("doc_id").distinct()
+            stores = [read_store(self.spark, d) for d in self.store_dirs]
+            if any(store is None for store in stores):
+                stores = self.store_rows(sig, ids.limit(0))
+            decisions = self.decide(ids, sig, *stores).persist()
+            decisions.count()  # force before the stores mutate
+            matched = F.col("matched_doc").isNotNull()
+            accepted = decisions.filter(~matched).select("doc_id")
+            decisions.filter(matched).write.mode("append").parquet(self.audit_dir)
+            batch_df.join(accepted, "doc_id").write.mode("append").parquet(self.out_dir)
+            for rows, path in zip(self.store_rows(sig, accepted), self.store_dirs):
+                rows.write.mode("append").parquet(path)
+            decisions.unpersist()
+        finally:
+            sig.unpersist()

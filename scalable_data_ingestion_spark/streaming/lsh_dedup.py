@@ -1,14 +1,15 @@
 """Streaming near-dup ingestion against a persistent LSH band store.
 
-The streaming twin of ``operators/incremental_dedup.py::
-dd_incremental_lsh_assign`` — and the fuzzy sibling of this package's
-``FingerprintStoreDedup`` (exact hashes): each micro-batch of documents
-probes the accumulated corpus's MinHash (band, band_hash) buckets,
-exact-Jaccard-verifies only the colliding pairs, appends the ACCEPTED
-(novel) documents, and grows the band + shingle stores so later
-batches see them. "First near-copy ever wins" — store-backed, so the
-decision horizon is unbounded and survives query restarts (watermark
-state is not; see dedup_order_stream for the bounded-horizon variant).
+The fuzzy sibling of this package's ``FingerprintStoreDedup`` (exact
+hashes): each micro-batch of documents probes the accumulated corpus's
+MinHash (band, band_hash) buckets, exact-Jaccard-verifies only the
+colliding pairs, appends the ACCEPTED (novel) documents, and grows the
+shingle store so later batches see them. "First near-copy ever wins" —
+store-backed, so the decision horizon is unbounded and survives query
+restarts (watermark state is not; see dedup_order_stream for the
+bounded-horizon variant). The sink is the ``StoreDedupSink`` skeleton
+with shingles as the signature; ``lsh_decisions`` is also the decision
+of the registered batch twin ``dd_incremental_lsh_assign``.
 
 Scale notes (100 TB/day feed):
 - Per-batch cost is O(|batch| x bucket collisions): the probe is an
@@ -19,7 +20,7 @@ Scale notes (100 TB/day feed):
   so each batch's probe reads a growing file count. No state lives in
   the streaming checkpoint, so store size never hits Spark's
   state-store limits.
-- The corpus-wide document-frequency cap the batch operator applies to
+- The corpus-wide document-frequency cap the batch twin applies to
   shingles is a skew guard that needs global df counts; the streaming
   path would maintain those in a third store. Here the synthetic docs
   have no pathological shingle, so the guard is omitted and the
@@ -28,50 +29,29 @@ Scale notes (100 TB/day feed):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
     MINHASH_VERIFY_THRESHOLD,
-    SHINGLE_N,
     _bands,
     _minhash_sig,
+    doc_shingles,
 )
-from .ingest import read_store, start_foreach_batch
+from .ingest import StoreDedupSink, best_match
 
 
-def _shingles_of(docs: DataFrame) -> DataFrame:
-    """Distinct word-3-gram shingles of an arbitrary (doc_id, text)
-    relation (no corpus-df cap — see module docstring)."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    return (
-        docs.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= SHINGLE_N)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(t) - {SHINGLE_N}), "
-                    "i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
-
-
-def lsh_decisions(batch_sh: DataFrame, store_sh: DataFrame) -> DataFrame:
-    """Near-dup decisions of batch docs against store docs.
+def lsh_decisions(ids: DataFrame, batch_sh: DataFrame, store_sh: DataFrame) -> DataFrame:
+    """Near-dup decisions of the batch docs ``ids`` (doc_id) against
+    store docs.
 
     Returns (doc_id, is_neardup, matched_doc, jaccard): best store
-    match at Jaccard >= {MINHASH_VERIFY_THRESHOLD} via banded MinHash
+    match at Jaccard >= MINHASH_VERIFY_THRESHOLD via banded MinHash
     candidates, NULL match when nothing survives verification. Both
-    inputs are (doc_id, sh) shingle relations; candidates come from the
+    shingle inputs are (doc_id, sh) relations; candidates come from the
     (band, bh) equi-join, so the store side never scans beyond its
     colliding buckets.
     """
-    from pyspark.sql import Window as W
-
     bb = _bands(_minhash_sig(batch_sh)).select(
         F.col("doc_id").alias("batch_id"), "band", "bh"
     )
@@ -103,94 +83,28 @@ def lsh_decisions(batch_sh: DataFrame, store_sh: DataFrame) -> DataFrame:
         )
         .filter(F.col("j") >= MINHASH_VERIFY_THRESHOLD)
     )
-    best = jac.withColumn(
-        "rn",
-        F.row_number().over(
-            W.partitionBy("batch_id").orderBy(F.desc("j"), F.asc("store_id"))
-        ),
-    ).filter(F.col("rn") == 1)
-    batch_ids = batch_sh.select("doc_id").distinct()
-    return batch_ids.join(
-        best.select(
-            F.col("batch_id").alias("doc_id"),
-            F.col("store_id").alias("matched_doc"),
-            "j",
-        ),
-        "doc_id",
-        "left",
-    ).select(
+    return best_match(ids, jac, "j").select(
         "doc_id",
         F.col("matched_doc").isNotNull().alias("is_neardup"),
-        F.col("matched_doc").cast("bigint"),
+        "matched_doc",
         F.round("j", 6).alias("jaccard"),
     )
 
 
-class LshBandStoreDedup:
-    """foreachBatch sink: first-NEAR-copy-ever-wins document ingestion.
+class LshBandStoreDedup(StoreDedupSink):
+    """``LshBandStoreDedup(spark, shingle_dir, out_dir, audit_dir)``:
+    first-NEAR-copy-ever-wins ingestion over a shingle store.
 
-    Maintains two append-only parquet stores — the accepted docs'
-    shingles (verification side) and, implicitly through them, the LSH
-    buckets recomputed per probe here; a production deployment
-    materializes the band table too and buckets it on (band, bh). Novel
-    docs append to ``out_dir``; near-dups are dropped with their match
-    recorded in ``audit_dir``.
+    The store holds the accepted docs' shingles (verification side);
+    the LSH buckets are recomputed from them per probe here — a
+    production deployment materializes the band table too and buckets
+    it on (band, bh). Novel docs append to ``out_dir``; near-dups are
+    dropped with their match recorded in ``audit_dir``.
     """
 
-    def __init__(
-        self, spark: SparkSession, shingle_dir: str, out_dir: str, audit_dir: str
-    ):
-        self.spark = spark
-        self.shingle_dir = shingle_dir
-        self.out_dir = out_dir
-        self.audit_dir = audit_dir
+    signature = staticmethod(doc_shingles)
+    decide = staticmethod(lsh_decisions)
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        batch_sh = _shingles_of(batch_df).persist()
-        try:
-            store_sh = read_store(self.spark, self.shingle_dir)
-            if store_sh is None:
-                decisions = batch_sh.select("doc_id").distinct().select(
-                    "doc_id",
-                    F.lit(False).alias("is_neardup"),
-                    F.lit(None).cast("bigint").alias("matched_doc"),
-                    F.lit(None).cast("double").alias("jaccard"),
-                )
-            else:
-                decisions = lsh_decisions(batch_sh, store_sh)
-            # Materialize decisions BEFORE mutating the store: the plan
-            # reads the shingle store lazily, so an un-forced persist
-            # would re-read the store v2 (including this batch's own
-            # appended shingles) on the audit write and every batch doc
-            # would "match" itself.
-            decisions = decisions.persist()
-            decisions.count()
-            accepted = decisions.filter(~F.col("is_neardup")).select("doc_id")
-            decisions.filter(F.col("is_neardup")).write.mode("append").parquet(
-                self.audit_dir
-            )
-            batch_df.join(accepted, "doc_id").write.mode("append").parquet(
-                self.out_dir
-            )
-            # store mutation LAST, after every store-v1 read is served
-            # from the cached decisions
-            batch_sh.join(accepted, "doc_id").write.mode("append").parquet(
-                self.shingle_dir
-            )
-            decisions.unpersist()
-        finally:
-            batch_sh.unpersist()
-
-
-def start_lsh_dedup_ingest(
-    docs_stream: DataFrame,
-    spark: SparkSession,
-    shingle_dir: str,
-    out_dir: str,
-    audit_dir: str,
-    checkpoint_dir: str,
-    run_once: bool = True,
-):
-    """Wire a document stream through the LSH band-store near-dedup."""
-    sink = LshBandStoreDedup(spark, shingle_dir, out_dir, audit_dir)
-    return start_foreach_batch(docs_stream, sink.process_batch, checkpoint_dir, run_once)
+    @staticmethod
+    def store_rows(sh: DataFrame, accepted: DataFrame) -> list[DataFrame]:
+        return [sh.join(accepted, "doc_id")]

@@ -5,9 +5,10 @@ SURVEY §2.9: every fuzzy-dedup family the engine ships in batch form
 LshBandStoreDedup, winnowing spans / b-bit sketches -> here) now has a
 first-copy-ever-wins streaming ingestion path over a persistent store.
 
-Two sinks, one pattern (foreachBatch against append-only parquet
-stores; see lsh_dedup.py for the ordering rationale — decisions are
-forced BEFORE the store mutates so a batch never matches itself):
+Two more sinks on the ``StoreDedupSink`` skeleton (streaming/ingest.py:
+decisions are forced BEFORE the stores mutate so a batch never matches
+itself), each supplying only its signature, its decision and its store
+rows:
 
 - **WinnowFpStoreDedup** — the store holds accepted docs' winnowing
   fingerprints (doc_id, fp). A batch doc is a SPAN duplicate when it
@@ -25,8 +26,9 @@ forced BEFORE the store mutates so a batch never matches itself):
   LshBandStoreDedup store, bought with the quantified estimator error
   the batch eval row measures.
 
-The decision kernels are pure (batch relation x store relation ->
-decision relation), so the SAME functions serve the registered
+The decision kernels are pure (batch doc ids x batch relation x store
+relation -> decision relation, ending in the shared ``best_match``), so
+the SAME functions serve the registered
 batch-mode queries below (oracle-twinned: st_winnow_store_decisions,
 st_bbit_store_decisions — store = even doc_ids, batch = odd doc_ids
 plus injected copies of store docs, the dd_exact_dedup convention) and
@@ -43,11 +45,17 @@ state — the stores are ordinary warehouse tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..operators.dedup import LSH_BANDS, MINHASH_K, _bands, _minhash_sig
+from ..operators.dedup import (
+    LSH_BANDS,
+    MINHASH_K,
+    _bands,
+    _minhash_sig,
+    doc_shingles,
+)
 from ..operators.winnow import (
     WINNOW_DF_CAP,
     WINNOW_K,
@@ -56,8 +64,7 @@ from ..operators.winnow import (
     winnow_fingerprints_of,
 )
 from ..registry import register
-from .ingest import read_store, start_foreach_batch
-from .lsh_dedup import _shingles_of
+from .ingest import StoreDedupSink, best_match
 
 BBIT_MIN_MATCH = 11  # of MINHASH_K=12 one-bit hashes (J1 >= 5/6)
 
@@ -67,10 +74,14 @@ _ODD_HEX = tuple("13579bdf")
 # --------------------------------------------------------------------------
 # Decision kernels (pure relations -> relation).
 # --------------------------------------------------------------------------
-def winnow_decisions(batch_fp: DataFrame, store_fp: DataFrame) -> DataFrame:
-    """Span-dup decisions of batch docs against store docs.
+def winnow_decisions(
+    ids: DataFrame, batch_fp: DataFrame, store_fp: DataFrame
+) -> DataFrame:
+    """Span-dup decisions of the batch docs ``ids`` (doc_id) against
+    store docs.
 
-    Inputs are (doc_id, fp) winnowing-fingerprint relations (distinct).
+    Fingerprint inputs are (doc_id, fp) winnowing-fingerprint relations
+    (distinct).
     Returns (doc_id, is_spandup, matched_doc, shared_fp, containment):
     best store match by shared-fingerprint count at >=
     WINNOW_MIN_SHARED, NULL match otherwise; containment = shared /
@@ -123,28 +134,10 @@ def winnow_decisions(batch_fp: DataFrame, store_fp: DataFrame) -> DataFrame:
             ).alias("containment"),
         )
     )
-    best = scored.withColumn(
-        "rn",
-        F.row_number().over(
-            W.partitionBy("batch_id").orderBy(
-                F.desc("shared_fp"), F.asc("store_id")
-            )
-        ),
-    ).filter(F.col("rn") == 1)
-    ids = batch_fp.select("doc_id").distinct()
-    return ids.join(
-        best.select(
-            F.col("batch_id").alias("doc_id"),
-            F.col("store_id").alias("matched_doc"),
-            "shared_fp",
-            "containment",
-        ),
-        "doc_id",
-        "left",
-    ).select(
+    return best_match(ids, scored, "shared_fp").select(
         "doc_id",
         F.col("matched_doc").isNotNull().cast("int").alias("is_spandup"),
-        F.col("matched_doc").cast("bigint"),
+        "matched_doc",
         "shared_fp",
         "containment",
     )
@@ -165,11 +158,13 @@ def _bit_cols(sig: DataFrame, prefix: str) -> DataFrame:
 
 
 def bbit_decisions(
+    ids: DataFrame,
     batch_sh: DataFrame,
     store_bands: DataFrame,
     store_bits: DataFrame,
 ) -> DataFrame:
-    """Near-dup decisions of batch docs against a b=1-bit sketch store.
+    """Near-dup decisions of the batch docs ``ids`` (doc_id) against a
+    b=1-bit sketch store.
 
     batch_sh: (doc_id, sh) shingles of the micro-batch (the only side
     that still sees text). store_bands: (doc_id, band, bh). store_bits:
@@ -202,27 +197,10 @@ def bbit_decisions(
         )
         .filter(F.col("m1_matches") >= BBIT_MIN_MATCH)
     )
-    best = scored.withColumn(
-        "rn",
-        F.row_number().over(
-            W.partitionBy("batch_id").orderBy(
-                F.desc("m1_matches"), F.asc("store_id")
-            )
-        ),
-    ).filter(F.col("rn") == 1)
-    ids = batch_sh.select("doc_id").distinct()
-    return ids.join(
-        best.select(
-            F.col("batch_id").alias("doc_id"),
-            F.col("store_id").alias("matched_doc"),
-            "m1_matches",
-        ),
-        "doc_id",
-        "left",
-    ).select(
+    return best_match(ids, scored, "m1_matches").select(
         "doc_id",
         F.col("matched_doc").isNotNull().cast("int").alias("is_neardup"),
-        F.col("matched_doc").cast("bigint"),
+        "matched_doc",
         "m1_matches",
         F.round(
             (F.col("m1_matches") * 2 - MINHASH_K)
@@ -235,119 +213,33 @@ def bbit_decisions(
 # --------------------------------------------------------------------------
 # foreachBatch sinks.
 # --------------------------------------------------------------------------
-class WinnowFpStoreDedup:
-    """First-span-copy-ever-wins ingestion over a fingerprint store."""
+class WinnowFpStoreDedup(StoreDedupSink):
+    """``WinnowFpStoreDedup(spark, fp_dir, out_dir, audit_dir)``:
+    first-span-copy-ever-wins ingestion over a fingerprint store."""
 
-    def __init__(
-        self, spark: SparkSession, fp_dir: str, out_dir: str, audit_dir: str
-    ):
-        self.spark = spark
-        self.fp_dir = fp_dir
-        self.out_dir = out_dir
-        self.audit_dir = audit_dir
+    decide = staticmethod(winnow_decisions)
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        batch_fp = (
-            winnow_fingerprints_of(batch_df).select("doc_id", "fp").persist()
-        )
-        try:
-            store = read_store(self.spark, self.fp_dir)
-            if store is None:
-                decisions = batch_fp.select("doc_id").distinct().select(
-                    "doc_id",
-                    F.lit(0).alias("is_spandup"),
-                    F.lit(None).cast("bigint").alias("matched_doc"),
-                    F.lit(None).cast("bigint").alias("shared_fp"),
-                    F.lit(None).cast("double").alias("containment"),
-                )
-            else:
-                decisions = winnow_decisions(batch_fp, store)
-            decisions = decisions.persist()
-            decisions.count()  # force before the store mutates
-            accepted = decisions.filter(F.col("is_spandup") == 0).select("doc_id")
-            decisions.filter(F.col("is_spandup") == 1).write.mode(
-                "append"
-            ).parquet(self.audit_dir)
-            batch_df.join(accepted, "doc_id").write.mode("append").parquet(
-                self.out_dir
-            )
-            batch_fp.join(accepted, "doc_id").write.mode("append").parquet(
-                self.fp_dir
-            )
-            decisions.unpersist()
-        finally:
-            batch_fp.unpersist()
+    @staticmethod
+    def signature(docs: DataFrame) -> DataFrame:
+        return winnow_fingerprints_of(docs).select("doc_id", "fp")
+
+    @staticmethod
+    def store_rows(fp: DataFrame, accepted: DataFrame) -> list[DataFrame]:
+        return [fp.join(accepted, "doc_id")]
 
 
-class BbitSketchStoreDedup:
-    """First-near-copy-ever-wins ingestion over a b=1-bit sketch store
-    (bands + bit columns only — no shingles, no text)."""
+class BbitSketchStoreDedup(StoreDedupSink):
+    """``BbitSketchStoreDedup(spark, bands_dir, bits_dir, out_dir,
+    audit_dir)``: first-near-copy-ever-wins ingestion over a b=1-bit
+    sketch store (bands + bit columns only — no shingles, no text)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        bands_dir: str,
-        bits_dir: str,
-        out_dir: str,
-        audit_dir: str,
-    ):
-        self.spark = spark
-        self.bands_dir = bands_dir
-        self.bits_dir = bits_dir
-        self.out_dir = out_dir
-        self.audit_dir = audit_dir
+    signature = staticmethod(doc_shingles)
+    decide = staticmethod(bbit_decisions)
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        batch_sh = _shingles_of(batch_df).persist()
-        try:
-            bands = read_store(self.spark, self.bands_dir)
-            bits = read_store(self.spark, self.bits_dir)
-            if bands is None or bits is None:
-                decisions = batch_sh.select("doc_id").distinct().select(
-                    "doc_id",
-                    F.lit(0).alias("is_neardup"),
-                    F.lit(None).cast("bigint").alias("matched_doc"),
-                    F.lit(None).cast("bigint").alias("m1_matches"),
-                    F.lit(None).cast("double").alias("j1_est"),
-                )
-            else:
-                decisions = bbit_decisions(batch_sh, bands, bits)
-            decisions = decisions.persist()
-            decisions.count()  # force before the store mutates
-            accepted = decisions.filter(F.col("is_neardup") == 0).select("doc_id")
-            decisions.filter(F.col("is_neardup") == 1).write.mode(
-                "append"
-            ).parquet(self.audit_dir)
-            batch_df.join(accepted, "doc_id").write.mode("append").parquet(
-                self.out_dir
-            )
-            sig = _minhash_sig(batch_sh.join(accepted, "doc_id"))
-            _bands(sig).write.mode("append").parquet(self.bands_dir)
-            _bit_cols(sig, "b").write.mode("append").parquet(self.bits_dir)
-            decisions.unpersist()
-        finally:
-            batch_sh.unpersist()
-
-
-def start_winnow_dedup_ingest(
-    docs_stream, spark, fp_dir, out_dir, audit_dir, checkpoint_dir, run_once=True
-):
-    sink = WinnowFpStoreDedup(spark, fp_dir, out_dir, audit_dir)
-    return start_foreach_batch(docs_stream, sink.process_batch, checkpoint_dir, run_once)
-
-
-def start_bbit_dedup_ingest(
-    docs_stream,
-    spark,
-    bands_dir,
-    bits_dir,
-    out_dir,
-    audit_dir,
-    checkpoint_dir,
-    run_once=True,
-):
-    sink = BbitSketchStoreDedup(spark, bands_dir, bits_dir, out_dir, audit_dir)
-    return start_foreach_batch(docs_stream, sink.process_batch, checkpoint_dir, run_once)
+    @staticmethod
+    def store_rows(sh: DataFrame, accepted: DataFrame) -> list[DataFrame]:
+        sig = _minhash_sig(sh.join(accepted, "doc_id"))
+        return [_bands(sig), _bit_cols(sig, "b")]
 
 
 # --------------------------------------------------------------------------
@@ -465,6 +357,7 @@ def st_winnow_store_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (same kernel the foreachBatch sink runs)."""
     batch, store = _split_docs(spark, sf_dir, verbatim=False)
     return winnow_decisions(
+        batch.select("doc_id"),
         winnow_fingerprints_of(batch).select("doc_id", "fp").cache(),
         winnow_fingerprints_of(store).select("doc_id", "fp").cache(),
     )
@@ -562,9 +455,10 @@ def st_bbit_store_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     store's bands + 1-bit sketches (same kernel the foreachBatch sink
     runs — the store side sees only sketches, never shingles)."""
     batch, store = _split_docs(spark, sf_dir, verbatim=True)
-    store_sig = _minhash_sig(_shingles_of(store)).persist()
+    store_sig = _minhash_sig(doc_shingles(store)).persist()
     return bbit_decisions(
-        _shingles_of(batch).persist(),
+        batch.select("doc_id"),
+        doc_shingles(batch).persist(),
         _bands(store_sig),
         _bit_cols(store_sig, "b"),
     )

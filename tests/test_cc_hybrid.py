@@ -1,17 +1,16 @@
 """Hybrid connected-components: the driver-side union-find fast path and
 the distributed min-label loop must produce identical components.
 
-dd_neardup_components switches on FAST_CC_EDGE_CAP (round 7): under the
-cap it collects the (tiny, duplicate-pairs-only) edge list and runs
+``dedup.min_label_components`` switches on FAST_CC_EDGE_CAP (round 7):
+under the cap it collects the (tiny, matches-only) edge list and runs
 union-find; over the cap it runs the iterative distributed loop. Both
-must return the same (doc_id, component_id, component_size) relation —
-component id = min doc_id of the component, exactly what the recursive
--CTE oracle computes.
+must return the same (node, lab, size) relation — lab = min node of
+the component, exactly what the recursive-CTE oracles compute. Near-dup
+clustering (dd_neardup_components) and entity resolution
+(entity.er_*_entities) both close their graphs through it.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from scalable_data_ingestion_spark.operators import dedup
 
@@ -23,7 +22,11 @@ def _rows(df):
     )
 
 
-def test_unionfind_matches_distributed_on_pair_graph(spark):
+def _labels(df):
+    return sorted((r["node"], r["lab"], r["size"]) for r in df.collect())
+
+
+def test_unionfind_matches_distributed_on_pair_graph(spark, monkeypatch):
     # A graph with a chain (forces >1 propagation round in the loop),
     # a triangle, an isolated pair, and min-label across branches.
     pairs = [
@@ -33,16 +36,16 @@ def test_unionfind_matches_distributed_on_pair_graph(spark):
         (40, 41), (42, 41), (43, 40),  # star-ish -> component 40
     ]
     pairs_df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    fast = dedup._components_unionfind(iter(pairs))
-    fast_rows = sorted(fast)
-    dist_rows = _rows(dedup._components_distributed(spark, pairs_df))
-    assert fast_rows == dist_rows
+    fast = sorted(dedup._components_unionfind(iter(pairs)))
+    assert _labels(dedup.min_label_components(pairs_df)) == fast
+    monkeypatch.setattr(dedup, "FAST_CC_EDGE_CAP", -1)  # force the loop
+    assert _labels(dedup.min_label_components(pairs_df)) == fast
     # spot-check semantics: min label wins, sizes correct
-    by_doc = {d: (c, s) for d, c, s in fast_rows}
-    assert by_doc[5] == (2, 3) and by_doc[2] == (2, 3)
-    assert by_doc[12] == (10, 3)
-    assert by_doc[31] == (30, 2)
-    assert by_doc[42] == (40, 4) and by_doc[43] == (40, 4)
+    by_node = {n: (lab, size) for n, lab, size in fast}
+    assert by_node[5] == (2, 3) and by_node[2] == (2, 3)
+    assert by_node[12] == (10, 3)
+    assert by_node[31] == (30, 2)
+    assert by_node[42] == (40, 4) and by_node[43] == (40, 4)
 
 
 def test_dd_neardup_components_fast_path_matches_forced_distributed(
@@ -61,8 +64,9 @@ def test_min_label_components_fast_path_matches_loop(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(5, 9), (9, 2), (10, 11), (30, 31), (31, 11)], "a long, b long"
     )
-    fast = sorted((r["node"], r["lab"]) for r in entity.min_label_components(pairs).collect())
-    monkeypatch.setattr(entity, "FAST_CC_EDGE_CAP", -1)
-    dist = sorted((r["node"], r["lab"]) for r in entity.min_label_components(pairs).collect())
+    fast = _labels(entity.min_label_components(pairs))
+    monkeypatch.setattr(dedup, "FAST_CC_EDGE_CAP", -1)
+    dist = _labels(entity.min_label_components(pairs))
     assert fast == dist
-    assert dict(fast)[31] == 10 and dict(fast)[5] == 2
+    lab = {node: lab for node, lab, _size in fast}
+    assert lab[31] == 10 and lab[5] == 2

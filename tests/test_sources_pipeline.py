@@ -148,6 +148,19 @@ def test_warehouse_default_fill(spark, tmp_path):
     assert row["quantity"] == 1 and row["price"] == 0.0 and row["total_amount"] == 0.0
 
 
+def test_warehouse_file_uri_root(spark, tmp_path, monkeypatch):
+    """A file: URI root is the local directory it names: saved orders are
+    counted, and no literal 'file:' directory appears under the cwd."""
+    monkeypatch.chdir(tmp_path)
+    wh = Warehouse(spark, (tmp_path / "wh").as_uri())
+    wh.save_orders(spark.createDataFrame([("X-0001",)], ["order_id"]))
+    assert wh.stats()["total_orders"] == 1
+    assert (tmp_path / "wh" / "orders").is_dir()
+    assert not (tmp_path / "file:").exists()
+    with pytest.raises(ValueError, match="local"):
+        Warehouse(spark, "hdfs://namenode/wh")
+
+
 def test_summary_report(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh3"))
     df = spark.createDataFrame(

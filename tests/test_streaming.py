@@ -8,7 +8,11 @@ import os
 import pytest
 
 from scalable_data_ingestion_spark.storage import Warehouse
-from scalable_data_ingestion_spark.streaming.ingest import FingerprintStoreDedup, start_ingest
+from scalable_data_ingestion_spark.streaming.ingest import (
+    FingerprintStoreDedup,
+    start_foreach_batch,
+    start_ingest,
+)
 from scalable_data_ingestion_spark.streaming.lsh_dedup import LshBandStoreDedup
 from scalable_data_ingestion_spark.streaming.queries import tumbling_agg
 from scalable_data_ingestion_spark.streaming.span_dedup import (
@@ -202,8 +206,6 @@ def test_fingerprint_store_dedup_across_restarts(spark, tmp_path):
     dropDuplicatesWithinWatermark state would have been lost)."""
     import json
 
-    from scalable_data_ingestion_spark.streaming.ingest import start_dedup_ingest
-
     input_dir = tmp_path / "docs"
     input_dir.mkdir()
     store = str(tmp_path / "store")
@@ -217,9 +219,8 @@ def test_fingerprint_store_dedup_across_restarts(spark, tmp_path):
             spark.readStream.schema("doc_id long, text string")
             .json(str(input_dir))
         )
-        q = start_dedup_ingest(
-            stream, spark, store, out, checkpoint_dir=str(tmp_path / ckpt)
-        )
+        sink = FingerprintStoreDedup(spark, store, out)
+        q = start_foreach_batch(stream, sink.process_batch, str(tmp_path / ckpt))
         q.awaitTermination(120)
 
     drop("b1.json", [
@@ -254,7 +255,9 @@ _STORE_SINKS = {
 @pytest.mark.parametrize("sink_name", sorted(_STORE_SINKS))
 def test_store_dedup_reads_a_uri_store(spark, tmp_path, sink_name):
     """A store given as a file:// URI is read back like a plain path: the
-    second copy of a document, arriving in the next batch, is dropped."""
+    second copy of a document, arriving in the next batch, is dropped. A
+    document too short to have a signature (doc 3) cannot be a copy and
+    is accepted."""
     sink_cls, dirs = _STORE_SINKS[sink_name]
     root = tmp_path.as_uri()
     sink = sink_cls(spark, *(f"{root}/{d}" for d in dirs))
@@ -262,11 +265,12 @@ def test_store_dedup_reads_a_uri_store(spark, tmp_path, sink_name):
         "the quick brown fox jumps over the lazy dog and then runs far away "
         "into the deep dark forest where nobody ever goes"
     )
-    for batch_id, doc_id in enumerate((1, 2)):
-        batch = spark.createDataFrame([(doc_id, text)], "doc_id long, text string")
+    batches = ([(1, text), (3, "hi there")], [(2, text)])
+    for batch_id, rows in enumerate(batches):
+        batch = spark.createDataFrame(rows, "doc_id long, text string")
         sink.process_batch(batch, batch_id)
     accepted = [r["doc_id"] for r in spark.read.parquet(f"{root}/out").collect()]
-    assert accepted == [1]
+    assert sorted(accepted) == [1, 3]
 
 
 def test_incremental_hll_equals_batch_registers(spark, tmp_path):

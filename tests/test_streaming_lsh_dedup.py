@@ -6,9 +6,10 @@ import os
 
 from pyspark.sql import functions as F
 
+from scalable_data_ingestion_spark.operators.dedup import doc_shingles
+from scalable_data_ingestion_spark.streaming.ingest import start_foreach_batch
 from scalable_data_ingestion_spark.streaming.lsh_dedup import (
     LshBandStoreDedup,
-    _shingles_of,
     lsh_decisions,
 )
 
@@ -34,7 +35,7 @@ def test_streaming_lsh_dedup_sequential_semantics(spark, tmp_path):
 
     # store seed: one accepted document
     store0 = _docs(spark, [_doc(1, BASE)])
-    _shingles_of(store0).write.mode("overwrite").parquet(shingle_dir)
+    doc_shingles(store0).write.mode("overwrite").parquet(shingle_dir)
 
     sink = LshBandStoreDedup(spark, shingle_dir, out_dir, audit_dir)
 
@@ -63,22 +64,18 @@ def test_streaming_lsh_dedup_sequential_semantics(spark, tmp_path):
 
     # sequential batch-twin equivalence: replay the same two batches
     # through the pure decision function with a manually grown store.
-    store_sh = _shingles_of(store0)
-    d1 = lsh_decisions(_shingles_of(b1), store_sh).collect()
+    store_sh = doc_shingles(store0)
+    d1 = lsh_decisions(b1.select("doc_id"), doc_shingles(b1), store_sh).collect()
     assert {r["doc_id"]: r["is_neardup"] for r in d1} == {10: True, 11: False}
     store_sh2 = store_sh.unionByName(
-        _shingles_of(b1.filter(F.col("doc_id") == 11))
+        doc_shingles(b1.filter(F.col("doc_id") == 11))
     )
-    d2 = lsh_decisions(_shingles_of(b2), store_sh2).collect()
+    d2 = lsh_decisions(b2.select("doc_id"), doc_shingles(b2), store_sh2).collect()
     assert {r["doc_id"]: r["is_neardup"] for r in d2} == {20: True, 21: False}
 
 
 def test_streaming_lsh_dedup_via_foreachbatch(spark, tmp_path):
     """End-to-end through a real readStream/writeStream file drop."""
-    from scalable_data_ingestion_spark.streaming.lsh_dedup import (
-        start_lsh_dedup_ingest,
-    )
-
     src = tmp_path / "src"
     src.mkdir()
     shingle_dir = str(tmp_path / "sh")
@@ -87,10 +84,8 @@ def test_streaming_lsh_dedup_via_foreachbatch(spark, tmp_path):
 
     _docs(spark, [_doc(1, BASE)]).write.mode("overwrite").parquet(str(src))
     stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = start_lsh_dedup_ingest(
-        stream, spark, shingle_dir, out_dir, audit_dir,
-        str(tmp_path / "ckpt"), run_once=True,
-    )
+    sink = LshBandStoreDedup(spark, shingle_dir, out_dir, audit_dir)
+    q = start_foreach_batch(stream, sink.process_batch, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     # second drop: exact re-delivery + near-dup + novel doc
@@ -100,10 +95,7 @@ def test_streaming_lsh_dedup_via_foreachbatch(spark, tmp_path):
          _doc(4, "totally novel content with unique tokens everywhere now".split())],
     )
     more.write.mode("append").parquet(str(src))
-    q2 = start_lsh_dedup_ingest(
-        stream, spark, shingle_dir, out_dir, audit_dir,
-        str(tmp_path / "ckpt"), run_once=True,
-    )
+    q2 = start_foreach_batch(stream, sink.process_batch, str(tmp_path / "ckpt"))
     q2.awaitTermination(120)
 
     accepted = {

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from scalable_data_ingestion_spark.operators.winnow import (
     winnow_fingerprints_of,
 )
-from scalable_data_ingestion_spark.streaming.lsh_dedup import _shingles_of
+from scalable_data_ingestion_spark.streaming.ingest import start_foreach_batch
 from scalable_data_ingestion_spark.streaming.span_dedup import (
     BbitSketchStoreDedup,
     WinnowFpStoreDedup,
@@ -18,7 +18,11 @@ from scalable_data_ingestion_spark.streaming.span_dedup import (
     bbit_decisions,
     winnow_decisions,
 )
-from scalable_data_ingestion_spark.operators.dedup import _bands, _minhash_sig
+from scalable_data_ingestion_spark.operators.dedup import (
+    _bands,
+    _minhash_sig,
+    doc_shingles,
+)
 
 
 def _doc(i: int, words: list[str]) -> tuple[int, str]:
@@ -80,10 +84,10 @@ def test_streaming_winnow_dedup_sequential_semantics(spark, tmp_path):
     assert audit == {10: 1, 20: 11}
 
     # sequential batch-twin equivalence through the pure kernel
-    d1 = winnow_decisions(_fp(b1), _fp(store0)).collect()
+    d1 = winnow_decisions(b1.select("doc_id"), _fp(b1), _fp(store0)).collect()
     assert {r["doc_id"]: r["is_spandup"] for r in d1} == {10: 1, 11: 0}
     grown = _fp(store0).unionByName(_fp(b1.filter(F.col("doc_id") == 11)))
-    d2 = winnow_decisions(_fp(b2), grown).collect()
+    d2 = winnow_decisions(b2.select("doc_id"), _fp(b2), grown).collect()
     assert {r["doc_id"]: r["is_spandup"] for r in d2} == {20: 1, 21: 0}
 
 
@@ -95,7 +99,7 @@ def test_streaming_bbit_dedup_sequential_semantics(spark, tmp_path):
         str(tmp_path / d) for d in ("bands", "bits", "out", "audit")
     )
     store0 = _docs(spark, [_doc(1, BASE)])
-    sig0 = _minhash_sig(_shingles_of(store0))
+    sig0 = _minhash_sig(doc_shingles(store0))
     _bands(sig0).write.mode("overwrite").parquet(bands_dir)
     _bit_cols(sig0, "b").write.mode("overwrite").parquet(bits_dir)
 
@@ -121,23 +125,21 @@ def test_streaming_bbit_dedup_sequential_semantics(spark, tmp_path):
 
     # pure-kernel equivalence with a manually grown store
     d1 = bbit_decisions(
-        _shingles_of(b1), _bands(sig0), _bit_cols(sig0, "b")
+        b1.select("doc_id"), doc_shingles(b1), _bands(sig0), _bit_cols(sig0, "b")
     ).collect()
     assert {r["doc_id"]: r["is_neardup"] for r in d1} == {10: 1, 11: 0}
-    sig1 = _minhash_sig(_shingles_of(b1.filter(F.col("doc_id") == 11)))
+    sig1 = _minhash_sig(doc_shingles(b1.filter(F.col("doc_id") == 11)))
     grown_bands = _bands(sig0).unionByName(_bands(sig1))
     grown_bits = _bit_cols(sig0, "b").unionByName(_bit_cols(sig1, "b"))
-    d2 = bbit_decisions(_shingles_of(b2), grown_bands, grown_bits).collect()
+    d2 = bbit_decisions(
+        b2.select("doc_id"), doc_shingles(b2), grown_bands, grown_bits
+    ).collect()
     assert {r["doc_id"]: r["is_neardup"] for r in d2} == {20: 1, 21: 0}
 
 
 def test_streaming_span_dedup_via_foreachbatch(spark, tmp_path):
     """End-to-end through a real readStream file drop (winnow sink),
     including idempotent exact re-delivery of an already-stored doc."""
-    from scalable_data_ingestion_spark.streaming.span_dedup import (
-        start_winnow_dedup_ingest,
-    )
-
     src = tmp_path / "src"
     src.mkdir()
     fp_dir, out_dir, audit_dir = (
@@ -145,10 +147,8 @@ def test_streaming_span_dedup_via_foreachbatch(spark, tmp_path):
     )
     _docs(spark, [_doc(1, BASE)]).write.mode("overwrite").parquet(str(src))
     stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = start_winnow_dedup_ingest(
-        stream, spark, fp_dir, out_dir, audit_dir,
-        str(tmp_path / "ckpt"), run_once=True,
-    )
+    sink = WinnowFpStoreDedup(spark, fp_dir, out_dir, audit_dir)
+    q = start_foreach_batch(stream, sink.process_batch, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     # second drop: re-delivery of doc 1's text under a new id + a span
@@ -159,10 +159,7 @@ def test_streaming_span_dedup_via_foreachbatch(spark, tmp_path):
          _doc(4, NOVEL2)],
     )
     more.write.mode("append").parquet(str(src))
-    q2 = start_winnow_dedup_ingest(
-        stream, spark, fp_dir, out_dir, audit_dir,
-        str(tmp_path / "ckpt"), run_once=True,
-    )
+    q2 = start_foreach_batch(stream, sink.process_batch, str(tmp_path / "ckpt"))
     q2.awaitTermination(120)
 
     accepted = {
