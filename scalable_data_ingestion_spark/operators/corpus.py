@@ -1666,6 +1666,7 @@ def txt_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     TextRank over the ±2-window word co-occurrence graph (exact
     fixed-point arithmetic)."""
     from ..functions.ranking import take_ordered_ranked
+    from .graph import _symmetrize
 
     docs = table(spark, sf_dir, "documents")
     t = F.split(F.trim("text"), r"\s+")
@@ -1688,27 +1689,8 @@ def txt_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
     und = raw.groupBy("a", "b").agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     # Both directions from ONE reference (a flip-union executes the
-    # skip-bigram aggregate twice; see operators.graph._symmetrize).
-    edges = (
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("a").alias("src"),
-                        F.col("b").alias("dst"),
-                        F.col("w"),
-                    ),
-                    F.struct(
-                        F.col("b").alias("src"),
-                        F.col("a").alias("dst"),
-                        F.col("w"),
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.*")
-        .persist()
-    )
+    # skip-bigram aggregate twice).
+    edges = _symmetrize(und, "a", "b", "src", "dst", "w").persist()
     wsum = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("wsum"))
     n = wsum.count()  # vocabulary size as an exact literal (PageRank policy)
     base_fx = (15 * TR_SCALE) // (100 * n)

@@ -1,18 +1,23 @@
-"""Iterative graph analytics over relational data: PageRank on the
-part co-purchase graph.
+"""Graph analytics over the part co-purchase graph.
 
-The dedup module already runs one iterative graph algorithm (connected
-components, ``operators/dedup.py``); this adds the other canonical
-one — PageRank — expressed as the Pregel-in-DataFrames pattern: one
+One function builds the graph: ``copurchase_edges(lineitem, min_sup)``
+self-joins lineitem on ``l_orderkey`` and keeps each part pair
+``(pa, pb)``, ``pa < pb``, whose support (line pairs sharing an order)
+is at least ``min_sup``. The queries call it with ``TRI_MIN_SUP`` (the
+support-filtered graph: triangles, communities, k-core, link scores,
+the reachability CTE in plans/relational3.py) or with ``1`` (every
+co-purchase). ``_symmetrize`` turns an oriented edge list into both
+directions from one reference; ``_symmetrize(copurchase_edges(li, 1),
+...)`` is the directed arc view the random-walk queries (PageRank,
+personalized PageRank, Katz), negative sampling and the degree
+profiles read. Only ``gr_edge_churn`` (keyed on era as well) builds
+its own edges.
+
+Iterative queries follow the Pregel-in-DataFrames pattern: one
 message-passing join + one aggregate per superstep, unrolled a fixed
-number of rounds so both engines see an identical static DAG.
-
-Graph: nodes are parts, with an (undirected, unweighted) edge between
-two parts that appear in the same order (the same co-purchase relation
-as ``mb_copurchased_parts`` in plans/stats.py). Because edges are
-symmetric, every node has out-degree >= 1 — no dangling-mass handling
-is needed and the rank vector stays a probability distribution up to
-integer truncation.
+number of rounds so both engines see an identical static DAG. Because
+edges are symmetric, every node has out-degree >= 1, so PageRank needs
+no dangling-mass handling.
 
 Determinism (the reason this is oracle-checkable): ALL rank arithmetic
 is BIGINT fixed-point at scale 1e9 —
@@ -28,10 +33,9 @@ operators/clustering.py, with division-before-sum replacing the float
 mean entirely.
 
 Scale notes (billions of edges):
-- The edge list comes from a lineitem self-equi-join on l_orderkey;
-  fan-out is bounded by order size (max ~13 lines in this schema,
-  7 in TPC-H), so the join output is ~|lineitem| x avg_order_size —
-  linear, not quadratic.
+- The self-join's fan-out is bounded by order size (max ~13 lines in
+  this schema, 7 in TPC-H), so the join output is ~|lineitem| x
+  avg_order_size — linear, not quadratic.
 - Each superstep is one shuffle keyed on the node id (join pr with
   edges on src, aggregate on dst) with map-side partial sums. At real
   scale you co-partition edges and ranks once (`repartition(node)`)
@@ -56,27 +60,58 @@ PR_SCALE = 10**9  # fixed-point scale for rank mass
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 
 
-def _symmetrize(und: DataFrame, ca: str, cb: str, oa: str, ob: str) -> DataFrame:
-    """Both directions of an undirected edge list from ONE reference.
+def copurchase_edges(lineitem: DataFrame, min_sup: int) -> DataFrame:
+    """Undirected part co-purchase edges ``(pa, pb)`` with ``pa < pb``.
 
-    `und.select(a,b).unionByName(und.select(b,a))` executes the
-    upstream support join twice (unions are independent plans); one
-    explode of the two orientations keeps a single reference, so the
-    co-purchase join runs once regardless of caching."""
+    Support is the number of line pairs (two lines of one order) that
+    hold the two parts, summed over orders, so an order listing a part
+    twice counts twice (the ``mb_*`` basket queries count distinct
+    orders instead). Edges with support below ``min_sup`` are dropped.
+
+    With ``min_sup = 1`` the result holds each co-purchased pair exactly
+    once, oriented by id; ``_symmetrize`` of it is therefore exactly the
+    arc set ``{(a.pk, b.pk) : a.ok = b.ok, a.pk != b.pk}`` (distinct):
+    every arc (x, y) comes from the one row (min, max), and the two
+    orientations of a row differ because pa != pb, so no arc repeats.
+    The caller picks caching and partitioning."""
+    li = lineitem.select("l_orderkey", "l_partkey")
+    a, b = li.alias("a"), li.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
+        .agg(F.count(F.lit(1)).alias("sup"))
+        .filter(F.col("sup") >= min_sup)
+        .select("pa", "pb")
+    )
+
+
+def _symmetrize(
+    und: DataFrame, ca: str, cb: str, oa: str, ob: str, *keep: str
+) -> DataFrame:
+    """Both directions ``(oa, ob)`` of an undirected edge list
+    ``(ca, cb)``, with the ``keep`` columns carried on each, from ONE
+    reference to ``und``.
+
+    A flip-union ``und.select(a,b).union(und.select(b,a))`` is two
+    independent plans, so it executes (or rescans) ``und`` twice; one
+    explode of the two orientations reads it once. Every both-directions
+    view in the package comes from here."""
+    extra = [F.col(c) for c in keep]
     e = F.explode(
         F.array(
-            F.struct(F.col(ca).alias(oa), F.col(cb).alias(ob)),
-            F.struct(F.col(cb).alias(oa), F.col(ca).alias(ob)),
+            F.struct(F.col(ca).alias(oa), F.col(cb).alias(ob), *extra),
+            F.struct(F.col(cb).alias(oa), F.col(ca).alias(ob), *extra),
         )
     ).alias("_e")
     return und.select(e).select("_e.*")
 
 
 def _shuffle_partitions(spark: SparkSession) -> int:
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return 200
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 @register(
@@ -121,17 +156,9 @@ def gr_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer contributions — one node-keyed shuffle, partial-aggregated
     map-side, identical results under any execution order.
     """
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
+    li = table(spark, sf_dir, "lineitem")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
+        _symmetrize(copurchase_edges(li, 1), "pa", "pb", "src", "dst")
         # Co-partition the edge list on src ONCE and cache it: every
         # superstep's rank join then lines up with the previous
         # superstep's groupBy(dst) output partitioning (same key, same
@@ -175,8 +202,8 @@ def gr_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Triangle counting on the same co-purchase graph: per-part number of
-# closed triads among strong edges (co-purchased in >= TRI_MIN_SUP
-# orders). The third canonical distributed graph primitive after
+# closed triads among strong edges (``copurchase_edges`` support
+# >= TRI_MIN_SUP). The third canonical distributed graph primitive after
 # connected components (operators/dedup.py) and PageRank (above) —
 # the building block of clustering-coefficient / community metrics.
 #
@@ -222,19 +249,8 @@ TRI_MIN_SUP = 2
 def gr_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-part triangle participation counts over support-filtered
     co-purchase edges (id-oriented wedge join + closing-edge join)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
     edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
+        copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
         # cache: the triangle DAG reads the edge relation three times
         # (wedge sides + closing edge); without it the lineitem
         # self-join runs 3x.
@@ -339,25 +355,12 @@ def gr_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     community sizes.
 
     Edges carry the same co-occurrence support threshold as the
-    triangle counter and two-hop features (>= TRI_MIN_SUP orders):
+    triangle counter and two-hop features (>= TRI_MIN_SUP):
     single-co-occurrence edges are sampling noise, and communities
     grown over them are noise too, while the raw edge list is ~6x
     larger and dominates every LPA round's shuffle (measured 8.8 s ->
     the two-hop query's 36.7 -> 5.7 s on the same cut)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-    )
+    und = copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
     pairs = (
         _symmetrize(und, "pa", "pb", "src", "dst")
         # co-partition on the per-round join key once; every round's
@@ -390,7 +393,7 @@ def gr_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the PageRank co-partitioning pattern above); the two-hop reach is
 # one edge-edge equi-join on the middle node with fan-out bounded by
 # deg(middle). Edges carry the same co-occurrence support threshold as
-# the triangle counter (>= TRI_MIN_SUP orders): the raw co-purchase
+# the triangle counter (>= TRI_MIN_SUP): the raw co-purchase
 # graph's noise edges make sum(deg^2) — the wedge volume — explode
 # (measured 36 s vs 0.4 s at sf0.1), and a 2-hop feature over
 # single-co-occurrence edges is noise anyway. Remaining hub skew:
@@ -434,21 +437,7 @@ def gr_two_hop_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree, neighbor-degree mass, and distinct two-hop reach per
     node of the support-filtered part co-purchase graph (exact integer
     counters)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-    )
+    und = copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
     pairs = (
         _symmetrize(und, "pa", "pb", "src", "dst")
         .cache()
@@ -668,20 +657,8 @@ def gr_negative_edge_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     The dense node index 1..n comes from the range-partitioned offset
     ranking (``global_rank``), not a single-partition window
     (VERDICT r3 #3)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-        .distinct()
-        .cache()
-    )
+    li = table(spark, sf_dir, "lineitem")
+    pairs = _symmetrize(copurchase_edges(li, 1), "pa", "pb", "src", "dst").cache()
     nodes = global_rank(
         pairs.select("src").distinct(), [F.col("src")], "rnk"
     ).withColumnRenamed("src", "node")
@@ -795,16 +772,9 @@ def _ppr_round_sql(i: int) -> str:
 def gr_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{PR_ITERS}-round personalized PageRank with restart to the
     part_id % {PPR_SEED_MOD} == 0 seed set, exact BIGINT fixed-point."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
+    li = table(spark, sf_dir, "lineitem")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
+        _symmetrize(copurchase_edges(li, 1), "pa", "pb", "src", "dst")
         .repartition(_shuffle_partitions(spark), "src")
         .persist()
     )
@@ -889,25 +859,11 @@ def gr_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node local clustering coefficient over the support-filtered
     co-purchase graph (integer triangle/degree counters, one scalar
     division per node)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
     edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
+        copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
         .cache()
     )
-    und = edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
-        edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
+    und = _symmetrize(edges, "pa", "pb", "src", "dst")
     deg = und.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree")
     )
@@ -919,11 +875,9 @@ def gr_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(e3, ["a", "c"], "left_semi")
         .select("a", F.col("mid").alias("b"), "c")
     )
-    pernode = (
-        tri.select(F.col("a").alias("node"))
-        .unionByName(tri.select(F.col("b").alias("node")))
-        .unionByName(tri.select(F.col("c").alias("node")))
-    )
+    # all three corners from one reference to tri (a union of three
+    # selects plans the wedge join three times)
+    pernode = tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
     tcount = pernode.groupBy("node").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_triangles")
     )
@@ -980,21 +934,14 @@ def gr_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gr_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2-binned degree histogram of the co-purchase graph with
     per-bin degree-mass share (the join-strategy skew profile)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
+    li = table(spark, sf_dir, "lineitem")
     deg = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
+        _symmetrize(copurchase_edges(li, 1), "pa", "pb", "src", "dst")
         .groupBy("src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
         # the degree relation feeds BOTH the histogram and the totals
-        # row; without a persist the raw-edge self-join + distinct
-        # (the expensive subtree) executes twice.
+        # row; without a persist the co-purchase self-join (the
+        # expensive subtree) executes twice.
         .persist()
     )
     binned = deg.select(
@@ -1093,24 +1040,12 @@ def gr_common_neighbor_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph."""
     from ..functions.ranking import take_ordered_ranked
 
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
     eo = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
+        copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
         # read 4x below (two wedge sides, the anti join, the degrees)
         .cache()
     )
-    adj = eo.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionByName(
-        eo.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
-    )
+    adj = _symmetrize(eo, "pa", "pb", "u", "v")
     deg = adj.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )
@@ -1170,8 +1105,8 @@ def gr_common_neighbor_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NON-adjacent pairs for link prediction; here the candidate set is
 # the edge list itself, so output size is |E|, not wedge-bounded.
 #
-# Shape: undirected adjacency = edges ∪ reversed edges (computed once,
-# cached); common-neighbor counts come from the middle-node wedge
+# Shape: undirected adjacency = both directions of the cached edges
+# (``_symmetrize``); common-neighbor counts come from the middle-node wedge
 # equi-join restricted to x < y, then LEFT-joined back onto the edge
 # list (edges with zero shared neighbors keep J = 0); degrees are a
 # node-keyed count broadcast onto both endpoints. Every join is a hash
@@ -1212,25 +1147,13 @@ def gr_common_neighbor_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def gr_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-edge neighborhood Jaccard over the co-purchase graph."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
     edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-        # edge relation feeds adjacency (x2), wedges and the final
-        # spine: cache so the lineitem self-join runs once
+        copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
+        # edge relation feeds the adjacency (degrees, both wedge
+        # sides) and the final spine: cache so the self-join runs once
         .cache()
     )
-    adj = edges.select(F.col("pa").alias("node"), F.col("pb").alias("nbr")).unionAll(
-        edges.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
-    )
+    adj = _symmetrize(edges, "pa", "pb", "node", "nbr")
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     x, y = adj.alias("x"), adj.alias("y")
     wedge = (
@@ -1323,19 +1246,7 @@ def gr_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{KCORE_K}-core of the co-purchase graph after {KCORE_ROUNDS}
     synchronous peel rounds: surviving parts with their in-core
     degrees."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-    )
+    edges = copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
     adj = _symmetrize(edges, "pa", "pb", "node", "nbr").cache()
     for _ in range(KCORE_ROUNDS):
         keep = (
@@ -1529,20 +1440,7 @@ def gr_triangle_total_degree_oriented(spark: SparkSession, sf_dir: str) -> DataF
     """Global triangle count via degree-oriented wedges (fan-out
     bounded by O(sqrt(|E|)) per node); hash-equal to the plain
     id-oriented count because the total is orientation-invariant."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-    )
+    und = copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
     sym = _symmetrize(und, "pa", "pb", "u", "v")
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     # orient each undirected edge at its higher-(degree, id) endpoint
@@ -1640,19 +1538,7 @@ def gr_triangle_total_degree_oriented(spark: SparkSession, sf_dir: str) -> DataF
 def gr_community_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-LPA-community volume, escaping-edge count, and conductance
     phi = cut / min(vol, 2E - vol)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-    )
+    und = copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
     pairs = (
         _symmetrize(und, "pa", "pb", "src", "dst")
         .repartition(_shuffle_partitions(spark), "dst")
@@ -1743,19 +1629,7 @@ _MOD_FX = 10**12
 def gr_partition_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity Q of the LPA partition (exact integer counts,
     fixed-point term sum)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-    )
+    und = copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
     pairs = (
         _symmetrize(und, "pa", "pb", "src", "dst")
         .repartition(_shuffle_partitions(spark), "dst")
@@ -1849,19 +1723,7 @@ def gr_partition_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gr_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson degree-degree correlation over directed co-purchase
     edges (exact integer moments, closed-form r)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-    )
+    und = copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
     pairs = (
         _symmetrize(und, "pa", "pb", "src", "dst")
         .persist()
@@ -1944,19 +1806,9 @@ def _katz_round_sql(i: int) -> str:
 def gr_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Katz centrality ({KATZ_ROUNDS} attenuated supersteps, alpha =
     1/(dmax+1) exact ppm) over the part co-purchase graph."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
+    li = table(spark, sf_dir, "lineitem")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .distinct()
+        _symmetrize(copurchase_edges(li, 1), "pa", "pb", "src", "dst")
         .repartition(_shuffle_partitions(spark), "src")
         .persist()
     )
@@ -2156,21 +2008,8 @@ RICH_DIVS = (8, 4, 2)
 def gr_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rich-club phi at degree thresholds dmax/{RICH_DIVS} over the
     part co-purchase graph."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .distinct()
-        .persist()
-    )
+    li = table(spark, sf_dir, "lineitem")
+    pairs = _symmetrize(copurchase_edges(li, 1), "pa", "pb", "src", "dst").persist()
     deg = pairs.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")
     ).persist()
@@ -2301,24 +2140,13 @@ LINKPRED_TOP_K = 50
 def gr_link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{LINKPRED_TOP_K} non-edge candidates by Resource-Allocation
     score (Adamic-Adar carried alongside), in exact integer units."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
     edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-        # feeds adjacency (x2) and the final anti-join: one self-join
+        copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
+        # feeds the adjacency (degrees, both wedge sides) and the final
+        # anti-join: one self-join
         .cache()
     )
-    adj = edges.select(F.col("pa").alias("node"), F.col("pb").alias("nbr")).unionAll(
-        edges.select(F.col("pb").alias("node"), F.col("pa").alias("nbr"))
-    )
+    adj = _symmetrize(edges, "pa", "pb", "node", "nbr")
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     x, y = adj.alias("x"), adj.alias("y")
     wedge = x.join(
@@ -2434,19 +2262,7 @@ def gr_greedy_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic greedy MIS (Luby rounds, md5 priorities) over the
     co-purchase graph; status 1 = in set, 2 = excluded, 0 = undecided
     after {MIS_ROUNDS} rounds (pytest asserts full convergence)."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-    )
+    edges = copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
     # Every node is also its own neighbor, so one join per round brings
     # a node's own status and its neighbors' into one group, and each
     # round reads the previous state once: the plan grows one join per
@@ -2545,19 +2361,7 @@ def gr_greedy_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gr_degree_centralization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Freeman degree centralization of the co-purchase graph as an
     exact integer rational plus rounded display value."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= TRI_MIN_SUP)
-        .select("pa", "pb")
-    )
+    edges = copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
     # both endpoints from ONE reference to the support join (a
     # flip-union would execute it twice; same rule as _symmetrize).
     adj = edges.select(

@@ -610,7 +610,7 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # UNION ALL semantics — each step is one equi-join of the frontier
 # against the edge list. Spark's recursive execution re-evaluates
 # every CTE the recursion references on EACH iteration, so the heavy
-# edge derivation (lineitem self-join + support filter) is computed
+# edge derivation (``copurchase_edges`` + ``_symmetrize``) is computed
 # once into a persisted DataFrame-backed view and only the recursive
 # step text runs per iteration (measured 9.7 s -> the LPA-class cost
 # at sf0.1 without the cache). The recursive step SQL is identical in
@@ -655,37 +655,10 @@ def sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     part_id % 100 = 0 seed set; the recursive step SQL is the same
     text both engines execute, over a once-computed cached edge
     list."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .filter(F.col("sup") >= 2)
-        .select("pa", "pb")
-    )
-    # Both directions from ONE reference (a flip-union executes the
-    # support join twice; see operators.graph._symmetrize).
-    edges = (
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("pa").alias("src"), F.col("pb").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("pb").alias("src"), F.col("pa").alias("dst")
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.*")
-        .persist()
-    )
+    from ..operators.graph import TRI_MIN_SUP, _symmetrize, copurchase_edges
+
+    und = copurchase_edges(table(spark, sf_dir, "lineitem"), TRI_MIN_SUP)
+    edges = _symmetrize(und, "pa", "pb", "src", "dst").persist()
     edges.createOrReplaceTempView("edges")
     return spark.sql(_REACH_RECURSIVE_SQL)
 

@@ -640,6 +640,10 @@ def test_rolling_hll_window_is_bucket_partitioned(spark, sf_dir):
         # so the co-purchase support join runs once.
         "gr_two_hop_features",
         "gr_degree_assortativity",
+        "gr_clustering_coefficient",
+        "gr_common_neighbor_links",
+        "gr_neighbor_jaccard",
+        "gr_link_prediction_scores",
         "ev_peak_concurrency",
     ],
 )

@@ -7,11 +7,21 @@ properties that make the operators right at scale.
 from __future__ import annotations
 
 import contextlib
+import importlib.util
 import io
+from pathlib import Path
 
 from scalable_data_ingestion_spark import registry
 
 registry.load_all()
+
+_SPEC = importlib.util.spec_from_file_location(
+    "jaccard_strategy_bench",
+    Path(__file__).resolve().parents[1] / "tools" / "jaccard_strategy_bench.py",
+)
+assert _SPEC is not None and _SPEC.loader is not None
+jaccard_strategy_bench = importlib.util.module_from_spec(_SPEC)
+_SPEC.loader.exec_module(jaccard_strategy_bench)
 
 
 def plan(df, mode: str = "formatted") -> str:
@@ -43,40 +53,19 @@ def test_prefix_join_equals_exhaustive_on_zipf_corpus(spark):
     # produce it — see the strategy note in operators/prefixjoin.py).
     # tools/jaccard_strategy_bench.py benchmarks this same fixture at
     # 30k+ docs where the prefix join beats the exhaustive index.
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from jaccard_strategy_bench import make_corpus
-
-    from pyspark.sql import functions as F
-
     from scalable_data_ingestion_spark.operators.dedup import (
-        SHINGLE_N,
         _jaccard_pairs,
+        doc_shingles,
     )
     from scalable_data_ingestion_spark.operators.prefixjoin import (
         _prefix_jaccard,
     )
 
     docs = spark.createDataFrame(
-        make_corpus(400, vocab=3000, seed=11), "doc_id: long, text: string"
+        jaccard_strategy_bench.make_corpus(400, vocab=3000, seed=11),
+        "doc_id: long, text: string",
     )
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    sh = (
-        docs.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= SHINGLE_N)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(t) - {SHINGLE_N}), "
-                    "i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-        .cache()
-    )
+    sh = doc_shingles(docs).cache()
     full = {
         (r.doc_a, r.doc_b, r.jaccard) for r in _jaccard_pairs(sh, 0.6).collect()
     }

@@ -27,8 +27,9 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import numpy as np
 
@@ -67,8 +68,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from scalable_data_ingestion_spark.operators.dedup import (
-        SHINGLE_N,
         _jaccard_pairs,
+        doc_shingles,
     )
     from scalable_data_ingestion_spark.operators.prefixjoin import (
         _prefix_jaccard,
@@ -87,22 +88,7 @@ def main() -> None:
     ).repartition(32).cache()
     n = docs.count()
 
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    sh = (
-        docs.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= SHINGLE_N)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(t) - {SHINGLE_N}), "
-                    "i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-        .cache()
-    )
+    sh = doc_shingles(docs).cache()
     postings = sh.count()
     dfstats = (
         sh.groupBy("sh")
