@@ -7,11 +7,10 @@
 PY ?= python3
 SF ?= /root/testdata/sf0.01
 
-.PHONY: test test-fast verify verify-only plan-gates bench perfbench all
+.PHONY: test test-fast verify verify-only plan-gates bench bench-only perfbench all
 
-# pytest targets run in the tier-1 environment: one Spark core per host
-# core (without it session.default_parallelism() builds local[32]).
-test test-fast plan-gates: export SPARK_GRAFT_CPUS ?= $(shell env -u OMP_NUM_THREADS nproc)
+# Spark spills under one scratch root; the session runs one core per
+# usable host core unless SPARK_GRAFT_CPUS says otherwise.
 test test-fast plan-gates: export SPARK_LOCAL_DIRS ?= /tmp/spark-local
 
 test:            ## full pytest suite (sf0.001 oracle parity included)
@@ -31,6 +30,10 @@ plan-gates:      ## plan-shape assertions over every registered query
 
 bench:           ## one-line JSON headline bench (sf0.1 by default)
 	$(PY) bench.py
+
+RUNS ?= 1
+bench-only:      ## targeted: make bench-only ONLY=q1,q2 RUNS=5 (no BENCH.json write)
+	$(PY) bench.py --only $(ONLY) --runs $(RUNS)
 
 perfbench:       ## benchmark self-tests, then one traced run (prints pipeline.jobs_per_run)
 	$(PY) -m pytest perfbench/tests -q

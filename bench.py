@@ -1,19 +1,25 @@
-"""Benchmark harness (driver contract).
+"""Benchmark harness (driver contract): the one timer of registered queries.
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line:
+With no flags it runs the 269 headline slots at ``$SPARK_GRAFT_SF_DIR``
+(default /root/testdata/sf0.1) on ``session.get_spark()``, writes every
+number to BENCH.json and prints two JSON lines, the last one slim:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "headline_queries_total", "value": N, "unit": "sec", ...}
 
 Each query is materialized with the noop sink (full execution, no
-driver-side collect cost). The headline set spans the engine's surface:
-scan+agg, multi-join, windows, sessionization, quality single-pass,
-enrichment, MinHash-LSH dedup, text scoring, vector search.
+driver-side collect cost): one cold run, then ``--runs`` warm runs in the
+same process. The headline figure is the fastest warm run.
+
+    python bench.py --only q01_pricing_summary,sim_knn_bruteforce --runs 5
+
+times any registered queries instead, prints their record as one JSON
+line and leaves BENCH.json alone. ``SPARK_GRAFT_SF_DIR`` is the only
+scale selector: a sweep across scale factors is a shell loop over it.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -21,6 +27,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# The headline slots in bench order. Append only: each
+# ``queries_r<N>_set_total`` sums a prefix of this list, so earlier
+# records stay comparable. er_party_entities stays out: its zero-padded
+# numeric names make the match graph degenerate-dense at sf0.1.
 HEADLINE = [
     "q01_pricing_summary",
     "q03_shipping_priority",
@@ -36,61 +46,25 @@ HEADLINE = [
     "txt_quality_scores",
     "sim_knn_bruteforce",
     "st_tumbling_hourly",
-    # join-topology stress: disjunctive scan, double semi/anti self-join,
-    # union + sort + last-ignore-nulls as-of attribution
     "q19_disjunctive_revenue",
     "q21_sole_late_supplier",
     "asof_purchase_attribution",
-]
-
-# Round-3 additions: behavioral analytics, model-based filtering,
-# iterative graph, PQ-compressed ANN. Kept in a separate list so the
-# r2-comparable subtotal (queries_r2_set_total) stays diffable across
-# rounds while the headline total covers the full surface.
-HEADLINE_R3 = [
     "ev_conversion_funnel",
     "txt_hash_classifier_score",
     "gr_copurchase_pagerank",
     "sim_pq_adc_knn",
-]
-
-# Round-4 additions: incremental store dedup, SCD2 dimension build,
-# iterative-state EWMA (applyInPandas), exact heavy hitters.
-HEADLINE_R4 = [
     "dd_incremental_new_docs",
     "scd2_priority_history",
     "ts_ewma_daily",
     "hh_frequent_tokens",
-]
-
-# Round-4 late additions: bigram LM scoring, exact rolling WAU, the
-# one-plan curation funnel, and CDC snapshot reconciliation.
-# (er_party_entities stays out of the headline set: the synthetic
-# zero-padded numeric names make its match graph degenerate-dense at
-# sf0.1 — ~600k pairs — so its bench cost measures the fixture's
-# pathology, not the operator.)
-HEADLINE_R5 = [
     "txt_bigram_logprob",
     "ev_rolling_wau",
     "pipe_curation_funnel",
     "snap_orders_diff",
-]
-
-# Round-5 additions: triangle counting (edge-edge wedge joins), the
-# MinHash-LSH quality eval (exact truth + banded candidates in one
-# DAG), trailing-window volume anomalies, length-bucketed batching.
-HEADLINE_R6 = [
     "gr_triangle_counts",
     "dd_lsh_eval",
     "mon_daily_volume_anomaly",
     "pack_length_buckets",
-]
-
-# Round-7 additions: winnowing span-level dedup (narrow array-pipeline
-# fingerprinting + fingerprint-keyed pair join), DSIR hashed-n-gram
-# importance weights, MaxSim late-interaction re-ranking, and LPA
-# communities (one-shuffle supersteps).
-HEADLINE_R7 = [
     "dd_winnow_match_pairs",
     "samp_dsir_weights",
     "samp_dsir_gumbel_topk",
@@ -98,13 +72,6 @@ HEADLINE_R7 = [
     "sim_rerank_maxsim",
     "gr_label_propagation",
     "txt_gopher_rules",
-]
-
-# Round-8 additions: BM25 lexical retrieval, prefix-filtered exact
-# Jaccard join (the AllPairs scale path next to the DF-cap index),
-# value-checked HyperLogLog, classifier ROC-AUC eval, and linear
-# multi-touch attribution.
-HEADLINE_R8 = [
     "txt_bm25_topk",
     "dd_prefix_jaccard_pairs",
     "sk_hll_user_estimate",
@@ -121,12 +88,6 @@ HEADLINE_R8 = [
     "gr_negative_edge_samples",
     "sla_ship_leadtime",
     "txt_pmi_pairs",
-]
-
-# Round-9 additions: incremental SCD2 maintenance, Matryoshka
-# truncation eval, personalized PageRank, Neyman-allocated sampling,
-# n-gram novelty, exact Gini, and fixed-point PCA power iteration.
-HEADLINE_R9 = [
     "scd2_apply_delta",
     "sim_matryoshka_recall",
     "gr_personalized_pagerank",
@@ -149,18 +110,7 @@ HEADLINE_R9 = [
     "gr_clustering_coefficient",
     "gr_degree_distribution",
     "txt_length_histogram",
-]
-
-# Round-10 additions (build round 4): ER with a realistic typo'd-name
-# fixture (VERDICT r3 #6 — er_party_entities' zero-padded numeric names
-# made its match graph degenerate; this measures the operator, not the
-# fixture pathology).
-HEADLINE_R10 = [
     "er_dirty_registry_entities",
-    # build-round-4 operator additions: word2vec-style windowed
-    # skipgram PMI (map-side pair generation), common-neighbor link
-    # prediction (wedge join minus real edges), and per-user Markov
-    # path likelihood (broadcast transition model, fixed-point sums).
     "txt_skipgram_pmi",
     "gr_common_neighbor_links",
     "ev_markov_path_likelihood",
@@ -169,13 +119,6 @@ HEADLINE_R10 = [
     "feat_order_value_woe",
     "cust_survival_km",
     "eval_classifier_calibration",
-]
-
-# Round-11 additions (build round 5): Kneser-Ney LM scoring (the
-# production n-gram smoothing), C4-style corpus-wide line dedup,
-# cross-label hard-negative mining for contrastive training, and the
-# z-order zone-map relation (2-D data-skipping evidence).
-HEADLINE_R11 = [
     "txt_kneser_ney_logprob",
     "dd_line_dedup_stats",
     "sim_hard_negative_mining",
@@ -216,12 +159,6 @@ HEADLINE_R11 = [
     "ev_sprt_monitor",
     "gr_partition_modularity",
     "sim_pq_distortion",
-]
-
-# round-5 third-session additions: anonymization trio completion,
-# ranking/uncertainty evals, layout A/B/C + compaction, pattern SQL,
-# sketch windows, and the stacked one-pass profilers.
-HEADLINE_R12 = [
     "dd_shingle_df_profile",
     "gr_degree_assortativity",
     "dq_t_closeness",
@@ -243,9 +180,6 @@ HEADLINE_R12 = [
     "rj_binned_interval_revenue",
     "fn_array_lab",
     "sk_hll_rolling_7d_users",
-]
-
-HEADLINE_R13 = [
     "stat_mann_whitney_u",
     "stat_anova_f_segments",
     "stat_spearman_qty_price",
@@ -288,9 +222,6 @@ HEADLINE_R13 = [
     "dq_iqr_outlier_audit",
     "ev_time_to_convert_percentiles",
     "gr_rich_club_coefficient",
-]
-
-HEADLINE_R14 = [
     "ev_shapley_attribution",
     "ev_position_based_attribution",
     "ev_time_decay_attribution",
@@ -347,14 +278,6 @@ HEADLINE_R14 = [
     "fin_cohort_npv",
     "ev_dow_hour_heatmap",
     "dq_email_domain_distribution",
-]
-
-# Round-9 additions (post-freeze growth, <=44-net-new cap): quantile
-# drift + t-digest, suffix LRS, contamination matrix, the AQE-vs-salted
-# skew evidence pair, the bucketed-join evidence row (prices its own
-# bucketed writes), OPQ/RQ codebook evals, and the streaming store-
-# dedup batch twins.
-HEADLINE_R15 = [
     "mon_quantile_drift_monthly",
     "sk_tdigest_order_values",
     "txt_suffix_lrs",
@@ -367,22 +290,9 @@ HEADLINE_R15 = [
     "st_winnow_store_decisions",
     "st_bbit_store_decisions",
     "ev_dpp_partitioned_join",
-]
-
-# Round-16 (build round 10): the verdict-directed evidence rows — the
-# auto skew-strategy join on the measured AQE-blocked shape, the
-# warehouse read-after-write bucketed join (S7/S8 at layout quality),
-# and the digest-of-digests drift monitor (mergeable-sketch twin of
-# mon_quantile_drift_monthly).
-HEADLINE_R16 = [
     "sk_hot_key_join_auto",
     "wh_bucketed_orders_join",
     "mon_tdigest_drift_monthly",
-]
-
-# Round-10 batches 3+4: native runtime-filter / AQP / lakehouse-delete /
-# perceptual-dedup / layout-locality / ingest-surface rows.
-HEADLINE_R17 = [
     "opt_runtime_bloom_join",
     "opt_sample_agg_ci",
     "wh_deletion_vector_read",
@@ -393,84 +303,100 @@ HEADLINE_R17 = [
     "ssj_click_purchase_outer",
 ]
 
-ALL_HEADLINE = (
-    HEADLINE + HEADLINE_R3 + HEADLINE_R4 + HEADLINE_R5 + HEADLINE_R6 + HEADLINE_R7
-    + HEADLINE_R8 + HEADLINE_R9 + HEADLINE_R10 + HEADLINE_R11 + HEADLINE_R12
-    + HEADLINE_R13 + HEADLINE_R14 + HEADLINE_R15 + HEADLINE_R16 + HEADLINE_R17
-)
+# Subtotal key -> length of the HEADLINE prefix it sums.
+SUBTOTALS = {
+    f"queries_r{r}_set_total": n
+    for r, n in zip(range(2, 10), (17, 21, 25, 29, 33, 40, 56, 78))
+}
+# The r2 prefix: the per-query numbers carried on the slim line.
+R2_SET = HEADLINE[: SUBTOTALS["queries_r2_set_total"]]
+
+WARMUP_SF_DIR = "/root/testdata/sf0.001"
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+def sf_of(sf_dir: str) -> float:
+    """The scale factor a directory such as ``sf0.1`` names; -1.0 when its
+    name carries none (``.sfx10``, ``/data/big``)."""
+    try:
+        return float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    except ValueError:
+        return -1.0
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description="Time registered queries with the noop sink.")
+    ap.add_argument(
+        "--only",
+        nargs="*",
+        default=None,
+        help="time these registered queries (comma- or space-separated) "
+        "instead of the headline slots; prints the record, writes no BENCH.json",
+    )
+    ap.add_argument(
+        "--runs", type=int, default=1, help="warm runs after each query's cold run"
+    )
+    args = ap.parse_args(argv)
+    if args.runs < 1:
+        ap.error("--runs must be at least 1")
 
     from scalable_data_ingestion_spark import registry
+
+    queries = registry.queries()
+    names = HEADLINE
+    if args.only is not None:
+        only = [n for arg in args.only for n in arg.replace(",", " ").split()]
+        unknown = [n for n in only if n not in queries]
+        if unknown or not only:
+            print("unknown query name(s):", " ".join(unknown) or "(none given)", file=sys.stderr)
+            return 2
+        names = list(dict.fromkeys(only))
+
     from scalable_data_ingestion_spark.session import get_spark
 
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("sdi-bench")
-    queries = registry.queries()
 
-    def run(name: str) -> float:
+    def run(name: str, data_dir: str = sf_dir) -> float:
         t0 = time.monotonic()
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.monotonic() - t0
+        queries[name](spark, data_dir).write.format("noop").mode("overwrite").save()
+        return round(time.monotonic() - t0, 3)
 
     # Whole-stage-codegen compile warmup on the smallest SF (generated
     # code is per-plan-shape, so this hits the codegen cache for the
     # target-SF runs too).
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        for name in ALL_HEADLINE:
-            queries[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
+    if os.path.isdir(WARMUP_SF_DIR):
+        for name in names:
+            run(name, WARMUP_SF_DIR)
         spark.catalog.clearCache()  # warmup caches must not feed the timed runs
 
-    # Each query runs twice at the target SF: the first (cold) run pays
-    # JVM JIT compilation of the generated code's hot loops — a fixed
-    # per-process cost that amortizes to zero in any long-lived
-    # deployment — so the headline number is the second (steady-state)
-    # run. Both are reported.
-    cold: dict[str, float] = {}
-    per_query: dict[str, float] = {}
-    for name in ALL_HEADLINE:
-        cold[name] = round(run(name), 3)
-        per_query[name] = round(run(name), 3)
-        # Drop this query's persisted frames before the next one: with
-        # 100+ queries in a single JVM the accumulated .persist() data
-        # evicts later queries' working sets, making measured time a
-        # function of LIST POSITION (er_dirty_registry_entities read
-        # 11.2s late in the sequence vs 4.3s isolated). Each query
-        # still keeps its own cold-run caches for its warm run.
+    # The cold run pays JVM JIT compilation of the generated code's hot
+    # loops, a fixed per-process cost; the warm runs that follow keep the
+    # query's own cold-run caches. Clearing them before the next query
+    # keeps 100+ queries' persisted frames from evicting later working
+    # sets, which made a query's time depend on its list position.
+    samples: dict[str, dict] = {}
+    for name in names:
+        # A dict display evaluates in order: the cold run comes first.
+        samples[name] = {"cold": run(name), "warm": [run(name) for _ in range(args.runs)]}
         spark.catalog.clearCache()
 
-    total = round(sum(per_query.values()), 3)
-
-    cumulative_sets = {
-        "queries_r2_set_total": HEADLINE,
-        "queries_r3_set_total": HEADLINE + HEADLINE_R3,
-        "queries_r4_set_total": HEADLINE + HEADLINE_R3 + HEADLINE_R4,
-        "queries_r5_set_total": HEADLINE + HEADLINE_R3 + HEADLINE_R4 + HEADLINE_R5,
-        "queries_r6_set_total": HEADLINE + HEADLINE_R3 + HEADLINE_R4 + HEADLINE_R5
-        + HEADLINE_R6,
-        "queries_r7_set_total": HEADLINE + HEADLINE_R3 + HEADLINE_R4 + HEADLINE_R5
-        + HEADLINE_R6 + HEADLINE_R7,
-        "queries_r8_set_total": HEADLINE + HEADLINE_R3 + HEADLINE_R4 + HEADLINE_R5
-        + HEADLINE_R6 + HEADLINE_R7 + HEADLINE_R8,
-        "queries_r9_set_total": HEADLINE + HEADLINE_R3 + HEADLINE_R4 + HEADLINE_R5
-        + HEADLINE_R6 + HEADLINE_R7 + HEADLINE_R8 + HEADLINE_R9,
-    }
-    subtotals = {
-        key: round(sum(per_query[n] for n in names), 3)
-        for key, names in cumulative_sets.items()
-    }
-
-    # Environment evidence (round-11 verdict #2, additions-only): the
-    # effective master / parallelism / data dir ride in the record so a
-    # ~1 low-vs-high-core ratio can be attributed to fixed overhead at
-    # this SF rather than suspected as an ignored env contract.
+    # Environment evidence: the effective master, parallelism and data
+    # dir ride in the record, so a run is attributable to its session.
     env_evidence = {
         "spark_master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "sf_dir": sf_dir,
+    }
+    sf = sf_of(sf_dir)
+    if args.only is not None:
+        print(json.dumps({"queries": samples, "runs": args.runs, **env_evidence, "sf": sf}))
+        return 0
+
+    per_query = {n: min(s["warm"]) for n, s in samples.items()}
+    cold = {n: s["cold"] for n, s in samples.items()}
+    total = round(sum(per_query.values()), 3)
+    subtotals = {
+        key: round(sum(per_query[n] for n in HEADLINE[:k]), 3) for key, k in SUBTOTALS.items()
     }
 
     # Full record (every warm + cold per-query number) goes to disk —
@@ -494,14 +420,14 @@ def main() -> None:
     # The driver parses the LAST ~2 KB of stdout, so the final printed
     # line must be small and clean (no progress noise — disabled in
     # session.py). Print the full record first (best-effort context),
-    # then ONE slim line: contract fields + the r2-comparable per-query
-    # subset (the cross-round diffable numbers) + all subtotals.
+    # then ONE slim line: contract fields + the r2-set per-query numbers
+    # (the cross-round diffable ones) + all subtotals.
     print(json.dumps(full, separators=(",", ":")))
     slim = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "queries": {n: per_query[n] for n in HEADLINE},
+        "queries": {n: per_query[n] for n in R2_SET},
         "cold_total": full["cold_total"],
         **subtotals,
         **env_evidence,
@@ -511,7 +437,8 @@ def main() -> None:
     }
     sys.stdout.flush()
     print(json.dumps(slim, separators=(",", ":")))
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -218,9 +218,9 @@ def dd_prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The regime AllPairs/PPJoin was invented for — a Zipf vocabulary
 # whose head dominates sum(df²) while true near-dups share df=1..2
 # tail shingles — is demonstrated on the deterministic Zipf fixture
-# instead: `tools/jaccard_strategy_bench.py` generates it (seeded,
-# reproducible), `tests/test_round4_session_ops.py` asserts prefix ==
-# exhaustive output on it, and SCALING.md records the timing where the
+# instead: `make_corpus` in `tests/test_round4_session_ops.py` generates
+# it (seeded, reproducible) and the test there asserts prefix ==
+# exhaustive output on it; SCALING.md records the timing where the
 # prefix join wins. The registered testdata query stays on the capped
 # 3-gram relation above.
 # --------------------------------------------------------------------------

@@ -3,8 +3,9 @@
 Same semantics: load YAML if present, fall back to defaults, dot-path
 ``get``. The reference's dead keys (pipeline.max_workers,
 rate_limit_per_minute, enable_monitoring — grep-verified never read,
-SURVEY.md §2.11) are intentionally dropped; a ``spark`` section is
-added for master/conf passthrough.
+SURVEY.md §2.11) are intentionally dropped; a ``spark`` section names
+the CLI session's app. Every leaf key here is read somewhere (a test
+checks).
 """
 
 from __future__ import annotations
@@ -23,25 +24,14 @@ DEFAULTS: dict = {
     "files": {
         "input_dir": "data/input",
         "processed_dir": "data/processed",
-        "error_dir": "data/errors",
     },
-    "data_quality": {
-        "quality_threshold": 80,
-        "required_fields": [
-            "order_id",
-            "customer_name",
-            "product",
-            "quantity",
-            "price",
-            "order_date",
-        ],
-    },
+    "data_quality": {"quality_threshold": 80},
     "transformation": {
         "enable_cleaning": True,
         "enable_enrichment": True,
         "enable_standardization": True,
     },
-    "spark": {"shuffle_partitions": None, "app_name": "scalable_data_ingestion_spark"},
+    "spark": {"app_name": "scalable_data_ingestion_spark"},
 }
 
 

@@ -27,6 +27,7 @@ from ..operators.cleaning import clean
 from ..operators.enrichment import enrich
 from ..operators.standardize import standardize
 from ..quality import quality_scores, validate_schema
+from ..sources.api import ApiSource
 from ..sources.files import collect_all
 from ..storage import Warehouse
 from .config import Config
@@ -83,7 +84,7 @@ class PipelineManager:
                 self.spark,
                 input_dir=self.config.get("files.input_dir"),
                 api_limit=api_limit,
-                offline_api=bool(self.config.get("api.offline", True)),
+                api=self.api_source(),
             ).persist()
             n = current.count()
             result.stage_results["ingestion"] = StageResult(True, n, time.monotonic() - t)
@@ -220,24 +221,28 @@ class PipelineManager:
             },
         }
 
+    def api_source(self) -> ApiSource:
+        """The REST source of a run and of the health check, from ``api.*``."""
+        return ApiSource(
+            base_url=self.config.get("api.base_url"),
+            timeout_s=self.config.get("api.timeout"),
+            retries=self.config.get("api.retry_attempts"),
+            retry_delay_s=self.config.get("api.retry_delay"),
+            offline=bool(self.config.get("api.offline")),
+        )
+
     # ------------------------------------------------------------ health (X5)
     def health_check(self) -> dict:
         """Working health check (the reference's always-errors — SURVEY.md
         §2.11 X5 — because it calls a nonexistent method; this probes for
         real)."""
-        from ..sources.api import ApiSource
-
         checks: dict[str, str] = {}
         try:
             self.spark.range(1).count()
             checks["spark"] = "healthy"
         except Exception:  # noqa: BLE001
             checks["spark"] = "unhealthy"
-        api = ApiSource(
-            base_url=self.config.get("api.base_url"),
-            offline=bool(self.config.get("api.offline", True)),
-        )
-        checks["api"] = "healthy" if api.connectivity_ok() else "unhealthy"
+        checks["api"] = "healthy" if self.api_source().connectivity_ok() else "unhealthy"
         try:
             import os
 

@@ -170,7 +170,3 @@ def posts_to_orders(spark: SparkSession, posts: list[dict]) -> DataFrame:
         ),
         F.col("id").alias("api_post_id"),
     )
-
-
-def fetch_orders(spark: SparkSession, limit: int = 100, offline: bool = True) -> DataFrame:
-    return posts_to_orders(spark, ApiSource(offline=offline).fetch_posts(limit))

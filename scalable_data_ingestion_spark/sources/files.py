@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .api import ApiSource, posts_to_orders
+
 # A1 arrival schema: numerics arrive as strings in real drops; the
 # cleaning stage owns coercion (F22).
 ORDER_FILE_SCHEMA = T.StructType(
@@ -108,18 +110,21 @@ def collect_all(
     spark: SparkSession,
     input_dir: str | None = None,
     api_limit: int = 100,
-    offline_api: bool = True,
+    api: ApiSource | None = None,
 ) -> DataFrame:
     """S6: API + CSV + JSON union with keep-first-by-source dedup.
+
+    ``api`` fetches the REST rows (default: the offline feed).
 
     Source priority mirrors arrival order in the reference (API first,
     then CSV, then JSON): duplicates keep the API row, etc. Implemented
     with a priority column + row_number — deterministic, unlike a bare
     dropDuplicates.
     """
-    from .api import fetch_orders
-
-    frames: list[tuple[int, DataFrame]] = [(0, fetch_orders(spark, api_limit, offline_api))]
+    api = api or ApiSource(offline=True)
+    frames: list[tuple[int, DataFrame]] = [
+        (0, posts_to_orders(spark, api.fetch_posts(api_limit)))
+    ]
     if input_dir and os.path.isdir(input_dir):
         frames.append((1, drop_corrupt(read_csv_dir(spark, input_dir))))
         frames.append((2, read_json_dir(spark, input_dir)))

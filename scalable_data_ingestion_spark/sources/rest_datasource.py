@@ -161,7 +161,7 @@ class RestPostsDataSource(DataSource):
 
 def register(spark) -> bool:
     """Register the source; returns False when the DataSource API is
-    unavailable (callers fall back to sources.api.fetch_orders)."""
+    unavailable (callers fall back to sources.api.ApiSource)."""
     if not _HAS_DATASOURCE_API:
         return False
     spark.dataSource.register(RestPostsDataSource)

@@ -7,8 +7,11 @@ its variable with a string literal, and the set of names must be exactly
 
 from __future__ import annotations
 
+import os
 import re
 from pathlib import Path
+
+from scalable_data_ingestion_spark.session import default_parallelism
 
 PACKAGE = Path(__file__).resolve().parents[1] / "scalable_data_ingestion_spark"
 
@@ -35,3 +38,10 @@ def test_package_reads_only_the_listed_env_vars():
                 unkeyed.append(f"{path.relative_to(PACKAGE)}:{lineno}: {line.strip()}")
     assert not unkeyed, "env reads without a literal name:\n" + "\n".join(unkeyed)
     assert names == ENV_VARS
+
+
+def test_cpus_default_to_the_usable_cores(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3

@@ -7,21 +7,14 @@ properties that make the operators right at scale.
 from __future__ import annotations
 
 import contextlib
-import importlib.util
 import io
-from pathlib import Path
+
+import numpy as np
 
 from scalable_data_ingestion_spark import registry
+from scalable_data_ingestion_spark.session import local_frame
 
 registry.load_all()
-
-_SPEC = importlib.util.spec_from_file_location(
-    "jaccard_strategy_bench",
-    Path(__file__).resolve().parents[1] / "tools" / "jaccard_strategy_bench.py",
-)
-assert _SPEC is not None and _SPEC.loader is not None
-jaccard_strategy_bench = importlib.util.module_from_spec(_SPEC)
-_SPEC.loader.exec_module(jaccard_strategy_bench)
 
 
 def plan(df, mode: str = "formatted") -> str:
@@ -46,13 +39,40 @@ def test_prefix_join_equals_exhaustive_join(spark, sf_dir):
     assert pref == full
 
 
+def make_corpus(n_docs: int, vocab: int, seed: int) -> list[tuple[int, str]]:
+    """Seeded Zipf corpus as ``(doc_id, text)`` rows.
+
+    A ``vocab``-word vocabulary with Zipf(s=1.1) frequencies (a stop-word
+    head that dominates sum(df²), a long df=1..2 tail), documents of
+    40-120 tokens drawn i.i.d. from it, and after every 20th document a
+    copy with ~10% of its tokens redrawn, so Jaccard >= 0.6 near-dup
+    pairs exist.
+    """
+    rng = np.random.default_rng(seed)
+    probs = 1.0 / np.arange(1, vocab + 1) ** 1.1
+    probs /= probs.sum()
+    words = np.array([f"w{i}" for i in range(vocab)])
+    docs: list[tuple[int, str]] = []
+    for base in range(n_docs):
+        length = int(rng.integers(40, 121))
+        toks = words[rng.choice(vocab, size=length, p=probs)]
+        docs.append((len(docs), " ".join(toks)))
+        if base % 20 == 0:
+            mut = toks.copy()
+            n_mut = max(1, length // 10)
+            idx = rng.choice(length, size=n_mut, replace=False)
+            mut[idx] = words[rng.choice(vocab, size=n_mut, p=probs)]
+            docs.append((len(docs), " ".join(mut)))
+    return docs
+
+
 def test_prefix_join_equals_exhaustive_on_zipf_corpus(spark):
     # Same guarantee on the corpus shape AllPairs was designed for: a
     # Zipf vocabulary with a stop-word head and a discriminative df=1..2
     # tail (the provided testdata's 31-token uniform vocabulary cannot
     # produce it — see the strategy note in operators/prefixjoin.py).
-    # tools/jaccard_strategy_bench.py benchmarks this same fixture at
-    # 30k+ docs where the prefix join beats the exhaustive index.
+    # At 30k+ docs of this corpus the prefix join beats the exhaustive
+    # index (SCALING.md).
     from scalable_data_ingestion_spark.operators.dedup import (
         _jaccard_pairs,
         doc_shingles,
@@ -61,10 +81,7 @@ def test_prefix_join_equals_exhaustive_on_zipf_corpus(spark):
         _prefix_jaccard,
     )
 
-    docs = spark.createDataFrame(
-        jaccard_strategy_bench.make_corpus(400, vocab=3000, seed=11),
-        "doc_id: long, text: string",
-    )
+    docs = local_frame(spark, make_corpus(400, vocab=3000, seed=11), "doc_id bigint, text string")
     sh = doc_shingles(docs).cache()
     full = {
         (r.doc_a, r.doc_b, r.jaccard) for r in _jaccard_pairs(sh, 0.6).collect()

@@ -7,12 +7,14 @@ import json
 import logging
 import os
 import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from scalable_data_ingestion_spark.pipeline import Config, PipelineManager
-from scalable_data_ingestion_spark.sources.api import fake_posts, posts_to_orders
+from scalable_data_ingestion_spark.pipeline.config import DEFAULTS
+from scalable_data_ingestion_spark.sources.api import ApiSource, fake_posts, posts_to_orders
 from scalable_data_ingestion_spark.sources.files import (
     collect_all,
     quarantine,
@@ -105,7 +107,7 @@ def test_json_three_shapes(spark, drop_dir):
 
 
 def test_collect_all_union_dedup(spark, drop_dir):
-    df = collect_all(spark, input_dir=drop_dir, api_limit=5, offline_api=True)
+    df = collect_all(spark, input_dir=drop_dir, api_limit=5, api=ApiSource(offline=True))
     ids = [r["order_id"] for r in df.select("order_id").collect()]
     assert len(ids) == len(set(ids))
     # API(5) + CSV(2) + JSON(3), no key overlap across prefixes
@@ -309,6 +311,65 @@ def test_pipeline_ingestion_failure_aborts(spark, tmp_path, monkeypatch):
     assert "ingest broke" in result.error_message
     # abort policy: nothing after ingestion ran
     assert set(result.stage_results) == {"ingestion"}
+
+
+def test_pipeline_api_source_follows_the_config(spark, tmp_path, monkeypatch):
+    seen = {}
+
+    def fetch_posts(self, limit=100):
+        seen.update(
+            base_url=self.base_url,
+            timeout_s=self.timeout_s,
+            retries=self.retries,
+            retry_delay_s=self.retry_delay_s,
+            offline=self.offline,
+        )
+        return fake_posts(limit)
+
+    monkeypatch.setattr(ApiSource, "fetch_posts", fetch_posts)
+    config = Config(
+        overrides={
+            "warehouse": {"root": str(tmp_path / "wh")},
+            "files": {"input_dir": str(tmp_path / "no_drop")},
+            "api": {
+                "base_url": "http://api.internal:8080/v2/",
+                "timeout": 7,
+                "retry_attempts": 2,
+                "retry_delay": 0.5,
+                "offline": False,
+            },
+        }
+    )
+    mgr = PipelineManager(spark, config)
+    mgr.enable_validation = mgr.enable_transformation = mgr.enable_storage = False
+    result = mgr.run_pipeline(api_limit=3)
+    assert result.success and result.records_processed == 3
+    assert seen == {
+        "base_url": "http://api.internal:8080/v2",
+        "timeout_s": 7,
+        "retries": 2,
+        "retry_delay_s": 0.5,
+        "offline": False,
+    }
+
+
+def test_every_config_default_is_read():
+    # Computed from DEFAULTS, not a hand list: each leaf key must appear
+    # as a config.get("<dotted key>") literal somewhere in the package.
+    def leaves(node, prefix=""):
+        for key, value in node.items():
+            if isinstance(value, dict):
+                yield from leaves(value, f"{prefix}{key}.")
+            else:
+                yield prefix + key
+
+    package = Path(__file__).resolve().parents[1] / "scalable_data_ingestion_spark"
+    read = {
+        m
+        for path in package.rglob("*.py")
+        for m in re.findall(r"""config\.get\(\s*["']([\w.]+)["']""", path.read_text())
+    }
+    assert sorted(set(leaves(DEFAULTS)) - read) == []
 
 
 def test_health_check(spark, tmp_path):

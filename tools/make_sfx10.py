@@ -41,9 +41,11 @@ import shutil
 import sys
 from pathlib import Path
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from scalable_data_ingestion_spark.session import get_spark  # noqa: E402
 
 COPY_TABLES = ["region", "nation", "customer", "supplier", "part", "orders", "events"]
 
@@ -61,13 +63,7 @@ def main() -> None:
         if not dst.exists():
             shutil.copy(f"{args.src}/{t}.parquet", dst)
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("make-sfx10")
     reps = spark.range(10).withColumnRenamed("id", "k")
 
     li = spark.read.parquet(f"{args.src}/lineitem.parquet")

@@ -32,7 +32,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from scalable_data_ingestion_spark import registry  # noqa: E402
 from scalable_data_ingestion_spark.catalog import TABLES  # noqa: E402
-from scalable_data_ingestion_spark.session import get_spark  # noqa: E402
+from scalable_data_ingestion_spark.session import default_parallelism, get_spark  # noqa: E402
 
 FLOAT_TOL = 1e-9
 # --strict: bit-exact float comparison (no rounding, no tolerance). The
@@ -193,7 +193,7 @@ def main() -> int:
         from pyspark.sql import SparkSession
 
         spark = (
-            SparkSession.builder.master("local[8]")
+            SparkSession.builder.master(f"local[{default_parallelism()}]")
             .config("spark.ui.enabled", "false")
             .getOrCreate()
         )

@@ -104,16 +104,10 @@ def main() -> int:
     ap.add_argument("--only", nargs="*", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from scalable_data_ingestion_spark import registry
+    from scalable_data_ingestion_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("scan-audit")
-        .getOrCreate()
-    )
+    spark = get_spark("scan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = registry.queries()
